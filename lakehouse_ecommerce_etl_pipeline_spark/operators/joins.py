@@ -4,8 +4,9 @@ reference: glue_jobs/order_items_etl.py:100-104 — order_items kept only
 when ``order_id`` exists in orders AND ``product_id`` exists in
 products (left-semi x2); FK-violating rows are silently dropped (the
 docs demand an error log the code never writes —
-docs/full_implementation_guide.md:21,151 — so ``fk_violations``
-supplies the missing left-anti complement feeding the quarantine sink).
+docs/full_implementation_guide.md:21,151 — so ``tag_fk_violations``
+tags that complement in the same pass that keeps the valid rows, and
+the quarantine sink receives it).
 
 100 TB notes
 ------------
@@ -207,21 +208,37 @@ def asof_join_pandas(
     return l_grp.cogroup(r_grp).applyInPandas(merge, schema=schema_str)
 
 
+def tag_fk_violations(
+    df: DataFrame,
+    fks: dict[str, tuple[DataFrame, str]],
+    broadcast_dim: bool = True,
+) -> DataFrame:
+    """``df`` plus ``fk_violation``: the first child column, in ``fks``
+    order, whose key is absent from its parent, else NULL; ``df``'s
+    columns keep their order. ``fks`` maps a column of ``df`` to
+    ``(parent_df, parent_key)``. One left join per parent against its
+    distinct key set marks the hits, so one pass both keeps
+    (order_items_etl.py:100-104) and tags the complement the reference
+    drops. A NULL child key matches nothing, as under a semi-join.
+    """
+    out = df
+    misses = []
+    for i, (child_col, (parent, parent_key)) in enumerate(fks.items()):
+        hit = f"__fk_hit{i}"
+        keys = parent.select(F.col(parent_key).alias(child_col)).distinct()
+        keys = keys.withColumn(hit, F.lit(True))
+        out = out.join(F.broadcast(keys) if broadcast_dim else keys, on=child_col, how="left")
+        misses.append(F.when(F.col(hit).isNull(), F.lit(child_col)))
+    return out.select(*df.columns, F.coalesce(*misses).alias("fk_violation"))
+
+
 def referential_filter(
     df: DataFrame, fks: dict[str, tuple[DataFrame, str]], broadcast_dim: bool = True
 ) -> DataFrame:
-    """Apply every FK semi-join in sequence.
-
-    ``fks`` maps a column of ``df`` to ``(parent_df, parent_key)``.
-    reference: order_items_etl.py:100-104 (two chained semi-joins).
-    """
-    out = df
-    for child_col, (parent, parent_key) in fks.items():
-        keys = parent.select(F.col(parent_key).alias(child_col)).distinct()
-        if broadcast_dim:
-            keys = F.broadcast(keys)
-        out = out.join(keys, on=child_col, how="left_semi")
-    return out
+    """Rows satisfying every FK constraint (reference:
+    order_items_etl.py:100-104, two chained semi-joins)."""
+    tagged = tag_fk_violations(df, fks, broadcast_dim)
+    return tagged.filter(F.col("fk_violation").isNull()).drop("fk_violation")
 
 
 def fk_violations(
@@ -230,24 +247,5 @@ def fk_violations(
     """Rows violating ANY of the FK constraints, tagged with the first
     violated constraint in ``fk_violation`` (feeds the quarantine sink;
     fixes SURVEY.md §2.13's dropped-invalid-rows gap)."""
-    out = df
-    for child_col, (parent, parent_key) in fks.items():
-        out = semi_join(out, parent.select(F.col(parent_key).alias(child_col)),
-                        child_col, broadcast_dim)
-    # violations = original minus fully-valid, tagged per constraint
-    parts = []
-    remaining = df
-    for child_col, (parent, parent_key) in fks.items():
-        bad = anti_join(
-            remaining, parent.select(F.col(parent_key).alias(child_col)),
-            child_col, broadcast_dim,
-        ).withColumn("fk_violation", F.lit(child_col))
-        parts.append(bad)
-        remaining = semi_join(
-            remaining, parent.select(F.col(parent_key).alias(child_col)),
-            child_col, broadcast_dim,
-        )
-    result = parts[0]
-    for p in parts[1:]:
-        result = result.unionByName(p)
-    return result
+    tagged = tag_fk_violations(df, fks, broadcast_dim)
+    return tagged.filter(F.col("fk_violation").isNotNull())

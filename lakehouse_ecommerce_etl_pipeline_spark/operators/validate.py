@@ -14,9 +14,11 @@ pushdown-able scans with zero shuffle, and the split is exact even
 with duplicate rows (``subtract`` is EXCEPT DISTINCT and silently
 drops duplicate valid rows from the complement).
 
-100 TB: predicate-only — narrow transformation, no shuffle; reading
-the source twice is optimal under parquet column pruning (or cache the
-scan if the source is expensive, e.g. the Excel source).
+100 TB: predicate-only — narrow transformation, no shuffle. Two
+filters read the source twice, which is cheap under parquet column
+pruning. An expensive source (the Excel workbooks) should be parsed
+once: the ETL pipeline evaluates ``not_null_predicate`` inside one
+persisted tagging pass instead (pipeline/jobs.py ``transform``).
 """
 
 from __future__ import annotations

@@ -26,6 +26,7 @@ import os
 import shutil
 import time
 from collections.abc import Callable
+from contextlib import ExitStack
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -45,20 +46,19 @@ log = logging.getLogger(__name__)
 
 
 def _with_retries(
-    fn: Callable[[], None],
+    fn: Callable[[], dict[str, int]],
     attempts: int = 2,
     initial_delay: float = 10.0,
     backoff: float = 2.0,
     on_failure: Callable[[Exception], None] | None = None,
-) -> None:
+) -> dict[str, int]:
     """reference: Step Functions Retry — 2 attempts, 10 s interval,
     rate 2.0 (lakehouse_etl_stepfunction.json:45-54); terminal failure
     invokes the notification hook (O4, :268-282)."""
     delay = initial_delay
     for attempt in range(attempts):
         try:
-            fn()
-            return
+            return fn()
         except Exception as e:  # noqa: BLE001
             if attempt == attempts - 1:
                 if on_failure:
@@ -94,11 +94,13 @@ def run_dataset(
         parents[parent] = managed.read(spark, ppath)
 
     raw = read_source(spark, job, source_path)
-    clean, rejected = transform(raw, job, parents)
-
     tpath = table_path(base_dir, dataset)
-    n_rejected = write_rejected(spark, rejected, tpath)
-    merge_upsert(spark, tpath, clean, [job.merge_key], partition_by=job.partition_by)
+    # the tagged frame behind clean/rejected is cached for this file
+    # only: the scope unpersists it on success and on a failed attempt
+    with ExitStack() as scope:
+        clean, rejected = transform(raw, job, parents, scope)
+        n_rejected = write_rejected(spark, rejected, tpath)
+        merge_upsert(spark, tpath, clean, [job.merge_key], partition_by=job.partition_by)
 
     # K4 — the reference's DDL shape: CREATE TABLE ... USING <fmt>
     # LOCATION pointing at the current snapshot (orders_etl.py:98-103)
@@ -136,23 +138,30 @@ def run_pipeline(
 ) -> dict[str, dict[str, int]]:
     """Full DAG run over every unprocessed file in the raw zone,
     in FK dependency order. Files already in the marker log are
-    skipped (O1); processed files are archived and marked (O7)."""
+    skipped (O1); processed files are archived and marked (O7).
+
+    Per dataset: ``rejected`` sums over the run's files, ``loaded`` is
+    the post-load COUNT(*) after its last file."""
     processed_base = os.path.join(base_dir, "processed")
+    # one marker-log read per run: a run marks only files it discovered
+    # itself, and discovery lists each (dataset, file name) once
+    done = processed_log.processed_files(spark, processed_base)
     results: dict[str, dict[str, int]] = {}
     for dataset in DATASET_ORDER:
         for path in _discover(base_dir, dataset):
             fname = os.path.basename(path)
-            if processed_log.is_processed(spark, processed_base, dataset, fname):
+            if (dataset, fname) in done:
                 log.info("skip %s/%s: already processed", dataset, fname)
                 continue
-            _with_retries(
-                lambda p=path, d=dataset: results.__setitem__(
-                    d, run_dataset(spark, base_dir, d, p)
-                ),
+            counts = _with_retries(
+                lambda: run_dataset(spark, base_dir, dataset, path),
                 attempts=retry_attempts,
                 initial_delay=retry_delay,
                 on_failure=on_failure,
             )
+            total = results.setdefault(dataset, {"loaded": 0, "rejected": 0})
+            total["loaded"] = counts["loaded"]
+            total["rejected"] += counts["rejected"]
             _archive(base_dir, dataset, path)
             processed_log.mark_processed(spark, processed_base, dataset, fname)
     return results

@@ -11,6 +11,7 @@ dataset, distributed Excel).
 
 from __future__ import annotations
 
+from contextlib import ExitStack
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -21,12 +22,9 @@ from lakehouse_ecommerce_etl_pipeline_spark.functions.datetime import (
     with_audit_columns,
 )
 from lakehouse_ecommerce_etl_pipeline_spark.operators.dedup import dedup_arbitrary
-from lakehouse_ecommerce_etl_pipeline_spark.operators.joins import (
-    fk_violations,
-    referential_filter,
-)
+from lakehouse_ecommerce_etl_pipeline_spark.operators.joins import tag_fk_violations
 from lakehouse_ecommerce_etl_pipeline_spark.operators.validate import (
-    split_valid_invalid,
+    not_null_predicate,
 )
 from lakehouse_ecommerce_etl_pipeline_spark.sources.excel import read_workbooks
 from lakehouse_ecommerce_etl_pipeline_spark.sources.files import read_csv
@@ -139,27 +137,36 @@ def transform(
     df: DataFrame,
     job: DatasetJob,
     parents: dict[str, DataFrame],
+    scope: ExitStack,
 ) -> tuple[DataFrame, DataFrame]:
     """(clean, rejected) — the per-dataset transformation core.
 
-    clean = validate → [FK filter] → dedup → audit/typed columns;
-    rejected = null-violations ∪ FK-violations tagged with reasons
-    (fixing the reference's silently-dropped invalid rows, §2.13).
+    One tagging pass sets ``rejection_reason`` per source row by one
+    CASE chain: "Missing required fields", else "FK violation: <col>"
+    for the first dangling FK in ``job.fks`` order, else NULL.
+    rejected = the tagged rows, raw columns in source order (fixing the
+    reference's silently-dropped invalid rows, §2.13); clean = the
+    untagged rows → dedup → audit/typed columns. The tagged frame stays
+    persisted until ``scope`` closes, so the reject count, quarantine
+    write and MERGE share one parse and one broadcast per FK parent.
     """
-    valid, invalid = split_valid_invalid(df, job.required)
-    rejected = invalid.withColumn("rejection_reason", F.lit("Missing required fields"))
-
+    reason = F.when(~not_null_predicate(job.required), F.lit("Missing required fields"))
+    tagged = df
     if job.fks:
         fk_map = {
             child: (parents[parent], PARENT_KEYS[parent])
             for child, parent in job.fks.items()
         }
-        bad_fk = fk_violations(valid, fk_map).withColumn(
-            "rejection_reason", F.concat(F.lit("FK violation: "), F.col("fk_violation"))
-        ).drop("fk_violation")
-        rejected = rejected.unionByName(bad_fk, allowMissingColumns=True)
-        valid = referential_filter(valid, fk_map)
+        tagged = tag_fk_violations(df, fk_map)
+        reason = reason.when(
+            F.col("fk_violation").isNotNull(),
+            F.concat(F.lit("FK violation: "), F.col("fk_violation")),
+        )
+    tagged = tagged.select(*df.columns, reason.alias("rejection_reason")).persist()
+    scope.callback(tagged.unpersist)
 
+    rejected = tagged.filter(F.col("rejection_reason").isNotNull())
+    valid = tagged.filter(F.col("rejection_reason").isNull()).drop("rejection_reason")
     clean = dedup_arbitrary(valid, [job.merge_key])  # orders_etl.py:74
 
     if job.ts_col:

@@ -14,6 +14,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from lakehouse_ecommerce_etl_pipeline_spark.sources import table as managed
+
 DEFAULT_DATABASE = "ecommerce_lakehouse"  # orders_etl.py:23
 
 
@@ -58,9 +60,10 @@ def register_table_external(
     if partitioned:
         # a bare external-table DDL does not discover Hive-style
         # partition directories (needs declared partitions + MSCK);
-        # the reader's partition inference does — register its view
+        # the snapshot reader does, under the sidecar schema (no
+        # inference job) — register its view
         full = f"{database}_{name}"
-        spark.read.parquet(snapshot_path).createOrReplaceTempView(full)
+        managed.read_snapshot(spark, snapshot_path).createOrReplaceTempView(full)
         return full
     full = f"{database}.{name}"
     spark.sql(f"DROP TABLE IF EXISTS {full}")

@@ -37,19 +37,21 @@ def log_path(base_path: str) -> str:
     return os.path.join(base_path, "_processed_log")
 
 
+def processed_files(spark: SparkSession, base_path: str) -> set[tuple[str, str]]:
+    """Every marked ``(dataset, file_name)`` — the whole marker set in
+    one collect, so a run checks all its discovered files against one
+    read instead of one scan per file."""
+    p = log_path(base_path)
+    if not managed.exists(p):
+        return set()
+    rows = managed.read(spark, p).select("dataset", "file_name").collect()
+    return {(r.dataset, r.file_name) for r in rows}
+
+
 def is_processed(spark: SparkSession, base_path: str, dataset: str, file_name: str) -> bool:
     """reference: lakehouse_check_processed_marker/lambda_function.py:17-28
     (marker existence check, with the path bug fixed)."""
-    p = log_path(base_path)
-    if not managed.exists(p):
-        return False
-    log = managed.read(spark, p)
-    return (
-        log.filter((log.dataset == dataset) & (log.file_name == file_name))
-        .limit(1)
-        .count()
-        > 0
-    )
+    return (dataset, file_name) in processed_files(spark, base_path)
 
 
 def mark_processed(

@@ -39,11 +39,13 @@ def write_rejected(
     table_path: str,
     reason: str = DEFAULT_REASON,
 ) -> int:
-    """Append rejects to the quarantine table; returns rejected count.
+    """Add rejects to the quarantine table; returns rejected count.
 
     The count-gate mirrors product_etl.py:64 (write only when
-    non-empty) but via a cheap existence probe pattern at scale the
-    write itself is the action; we count once and reuse.
+    non-empty). Not an append: the new snapshot is existing ∪ new,
+    so every non-empty batch rewrites the whole quarantine table —
+    O(table) per file, an open cost (a Delta append would write only
+    the new rows).
     """
     tagged = with_reason(invalid, reason)
     n = tagged.count()

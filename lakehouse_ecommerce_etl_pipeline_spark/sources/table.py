@@ -78,8 +78,15 @@ def read(spark: SparkSession, path: str, version: int | None = None) -> DataFram
     snap = snapshot_dir(path, v)
     if not os.path.isdir(snap):
         raise FileNotFoundError(f"no version {v} at {path}")
-    # schema sidecar: lets empty snapshots (a partitioned write of zero
-    # rows emits no parquet files) read back as empty typed frames
+    return read_snapshot(spark, snap)
+
+
+def read_snapshot(spark: SparkSession, snap: str) -> DataFrame:
+    """Scan one snapshot directory under its ``_SCHEMA.json`` sidecar
+    schema when it has one: no schema-inference job, and empty
+    snapshots (a partitioned write of zero rows emits no parquet files)
+    read back as empty typed frames. Hive-style partition directories
+    are discovered either way."""
     schema_file = os.path.join(snap, _SCHEMA)
     if os.path.exists(schema_file):
         with open(schema_file) as f:

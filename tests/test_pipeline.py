@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from lakehouse_ecommerce_etl_pipeline_spark.pipeline import run_pipeline
 from lakehouse_ecommerce_etl_pipeline_spark.pipeline.driver import table_path
 from lakehouse_ecommerce_etl_pipeline_spark.sinks.quarantine import quarantine_path
@@ -148,3 +150,141 @@ def test_cli_entrypoint_runs_dag_and_prints_summary(spark, raw_zone, capsys):
     assert rc == 0
     out2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out2["datasets"] == {}
+
+
+def _items_row(**kw):
+    import datetime as dt
+
+    row = {"id": "iy", "order_id": "o1", "user_id": "u1",
+           "days_since_prior_order": 1, "product_id": "p1",
+           "add_to_cart_order": 1, "reordered": 0,
+           "order_timestamp": dt.datetime(2025, 4, 1, 12, 0, 0)}
+    row.update(kw)
+    return row
+
+
+def test_pipeline_sums_rejects_over_files_of_one_dataset(spark, raw_zone):
+    """Two orders workbooks in one run: ``rejected`` sums over both
+    files, ``loaded`` is the table's COUNT(*) after the last one."""
+    import datetime as dt
+
+    import pandas as pd
+
+    from lakehouse_ecommerce_etl_pipeline_spark.sources.excel import (
+        write_fake_workbook,
+    )
+
+    t1 = dt.datetime(2025, 5, 1, 9, 0, 0)
+    may = pd.DataFrame(
+        [
+            {"order_num": "n100", "order_id": "o100", "user_id": "u1",
+             "order_timestamp": t1, "total_amount": 50.0},
+            {"order_num": "n101", "order_id": "o101", "user_id": None,
+             "order_timestamp": t1, "total_amount": 60.0},
+        ]
+    )
+    write_fake_workbook(
+        os.path.join(raw_zone, "raw", "orders", "orders_may_2025.bundle"),
+        {"Sheet1": may},
+    )
+    results = run_pipeline(spark, raw_zone)
+    # apr: 20 loaded, 2 rejected; may: +1 insert, 1 null reject
+    assert results["orders"] == {"loaded": 21, "rejected": 3}
+    rej = managed.read(spark, quarantine_path(table_path(raw_zone, "orders")))
+    assert rej.count() == 3
+
+
+def test_reject_reason_precedence_and_quarantine_columns(spark, raw_zone):
+    """One CASE chain tags each reject: a missing required field wins
+    over a dangling FK, and the first dangling FK in declaration order
+    (order_id before product_id) names the violation."""
+    import pandas as pd
+
+    from lakehouse_ecommerce_etl_pipeline_spark.pipeline.jobs import (
+        ORDER_ITEMS_SCHEMA,
+    )
+    from lakehouse_ecommerce_etl_pipeline_spark.sources.excel import (
+        write_fake_workbook,
+    )
+
+    extra = pd.DataFrame(
+        [
+            _items_row(id="iy1", user_id=None, order_id="o_missing"),
+            _items_row(id="iy2", order_id="o_missing", product_id="p_missing"),
+        ]
+    )
+    write_fake_workbook(
+        os.path.join(raw_zone, "raw", "order_items", "order_items_may_2025.bundle"),
+        {"Sheet1": extra},
+    )
+    results = run_pipeline(spark, raw_zone)
+    assert results["order_items"] == {"loaded": 40, "rejected": 5}
+
+    rej = managed.read(spark, quarantine_path(table_path(raw_zone, "order_items")))
+    assert rej.columns == [f.name for f in ORDER_ITEMS_SCHEMA.fields] + ["rejection_reason"]
+    reasons = {r.id: r.rejection_reason for r in rej.filter("id LIKE 'iy%'").collect()}
+    assert reasons == {
+        "iy1": "Missing required fields",
+        "iy2": "FK violation: order_id",
+    }
+
+
+def _persistent_rdds(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+@pytest.mark.parametrize("fail_first_merge", [False, True])
+def test_run_pipeline_leaves_no_cached_blocks(spark, raw_zone, monkeypatch, fail_first_merge):
+    """The per-file tagged frame is unpersisted after the file, and
+    after a failed attempt that the retry then repeats."""
+    from lakehouse_ecommerce_etl_pipeline_spark.pipeline import driver
+
+    calls = []
+    if fail_first_merge:
+        real = driver.merge_upsert
+
+        def flaky(*args, **kwargs):
+            calls.append(1)
+            if len(calls) == 1:
+                raise RuntimeError("injected MERGE failure")
+            return real(*args, **kwargs)
+
+        monkeypatch.setattr(driver, "merge_upsert", flaky)
+
+    before = _persistent_rdds(spark)
+    results = run_pipeline(spark, raw_zone, retry_delay=0.0)
+    assert _persistent_rdds(spark) == before
+    assert results["order_items"] == {"loaded": 40, "rejected": 3}
+    if fail_first_merge:
+        assert len(calls) == 4  # 3 files, the first one retried
+
+
+# jobs of one order_items run_dataset over the fixture zone: one parse
+# and one tagging pass feed the reject count, quarantine and MERGE
+RUN_DATASET_MAX_JOBS = 12  # 20 before the single tagging pass
+
+
+def test_run_dataset_job_count(spark, raw_zone):
+    """A re-parse of the workbook or a re-broadcast of an FK key set
+    per action shows as extra Spark jobs."""
+    from lakehouse_ecommerce_etl_pipeline_spark.pipeline.driver import run_dataset
+
+    def only(dataset):
+        d = os.path.join(raw_zone, "raw", dataset)
+        (name,) = os.listdir(d)
+        return os.path.join(d, name)
+
+    for dataset in ("products", "orders"):
+        run_dataset(spark, raw_zone, dataset, only(dataset))
+    sc = spark.sparkContext
+    group = "test_run_dataset_job_count"
+    sc.setJobGroup(group, "order_items run_dataset")
+    try:
+        counts = run_dataset(spark, raw_zone, "order_items", only("order_items"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert counts == {"loaded": 40, "rejected": 3}
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    print("order_items run_dataset jobs:", n_jobs)
+    assert n_jobs <= RUN_DATASET_MAX_JOBS
