@@ -76,28 +76,9 @@ def main() -> int:
     except ValueError:
         sf = sf_tag
 
-    # r13 (VERDICT r12 item 1 — close the cross-run artifact-caching
-    # question): every bench invocation starts from COLD derived
-    # scratch.  The shared materialized intermediates
-    # (order_part_pairs/edges, copurchase_graph/degrees, vector_reps,
-    # document_reps, ...) are parquet tables derived from the testdata
-    # and reused across sessions by design (materialized-view
-    # discipline); reused across *bench invocations* they would mean
-    # the timed region never pays their build.  Clearing the target
-    # SF's shared subtree here guarantees the first timed consumer
-    # rebuilds them from the parquet inputs inside THIS invocation
-    # (rep 1 pays the build; min-of-N still reports the steady-state
-    # plan, and both are recorded in OPTIMIZATION_r13.md).  Format
-    # fixtures (ORC/JSON/Avro/protobuf/tar inputs the parquet-only
-    # testdata cannot provide) live in sibling subtrees and stay.
-    import shutil
-
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    shutil.rmtree(
-        os.path.join("/tmp", "lakehouse_spark_work", tag, "shared"),
-        ignore_errors=True,
-    )
-
+    # derived intermediates are session artifacts (plans/_helpers.py
+    # ``session_artifact``): the first timed consumer in this
+    # invocation pays their build
     spark = get_spark("bench")
     qs = plans.queries()
 

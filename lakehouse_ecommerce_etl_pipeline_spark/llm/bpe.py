@@ -212,8 +212,13 @@ def train_bpe(
             c = counts.get(key, 0) + row["d"]
             if c > 0:
                 counts[key] = c
-            else:  # exact subtraction: c == 0 means the pair is gone
+            elif c == 0:  # exact subtraction: the pair is gone
                 counts.pop(key, None)
+            else:
+                raise RuntimeError(
+                    f"BPE pair {key} count went negative ({c}): the "
+                    "delta fold subtracted an occurrence it never added"
+                )
         syms = nxt
     return merges
 

@@ -1,21 +1,22 @@
 """In-process pipeline driver — the Step-Functions DAG without AWS.
 
 reference mapping (SURVEY.md §2.12):
-- O1 marker check/skip   → ``_processed_log`` managed table
-  (sinks/processed_log.py; the reference's path-mismatch bug fixed)
+- O1 marker check/skip   → one ``_processed_log/<dataset>/<file>``
+  marker file each (sinks/processed_log.py; the reference's
+  path-mismatch bug fixed)
 - O2 dependency order    → DATASET_ORDER loop; order_items aborts if
   parent tables are missing (order_items_etl.py:47-50,57-60)
 - O3 retry w/ backoff    → ``_with_retries`` (2 attempts, 10 s, ×2 —
   lakehouse_etl_stepfunction.json:45-54)
 - O5 post-load COUNT(*)  → catalog.count_star validation
-- O7 archive + mark      → file move into archived/ + marker row
+- O7 archive + mark      → file move into archived/ + marker file
   (archive_and_mark_processed.py:28-47)
 
 Zone layout under ``base_dir`` (README.md:36-63)::
 
     raw/<dataset>/<file>       incoming CSV/workbooks
     processed/<dataset>/       managed tables (+ _rejected siblings)
-    processed/_processed_log   marker table
+    processed/_processed_log/  marker files, <dataset>/<file>
     archived/<dataset>/        ingested source files
 """
 

@@ -2,65 +2,16 @@
 
 from __future__ import annotations
 
-import contextlib
+import atexit
+import hashlib
 import os
+import shutil
+import threading
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-
-@contextlib.contextmanager
-def artifact_lock(artifact: str):
-    """Inter-process exclusive lock serializing BUILDERS of a shared
-    scratch artifact (concurrent pytest + check_oracle runs previously
-    raced two writers into the same path → FileFormatWriter collision).
-
-    Usage — take the lock, THEN re-check freshness (double-checked
-    locking: the loser of the race finds the artifact already built):
-
-        with artifact_lock(path):
-            if not artifact_fresh(src, path):
-                ...build into path...
-
-    The lock file lives NEXT TO the artifact (never inside it — builds
-    rmtree/overwrite the artifact itself) and is advisory flock, so
-    readers pay nothing."""
-    import fcntl
-
-    parent = os.path.dirname(os.path.normpath(artifact)) or "."
-    os.makedirs(parent, exist_ok=True)
-    lock_path = os.path.join(
-        parent, "." + os.path.basename(os.path.normpath(artifact)) + ".lock"
-    )
-    fd = os.open(lock_path, os.O_CREAT | os.O_RDWR, 0o644)
-    try:
-        fcntl.flock(fd, fcntl.LOCK_EX)
-        yield
-    finally:
-        fcntl.flock(fd, fcntl.LOCK_UN)
-        os.close(fd)
-
-
-def write_session_marker(spark: SparkSession, marker: str) -> None:
-    """Record a scratch artifact as built, stamped with THIS session's
-    applicationId — for artifacts whose readability is session-scoped
-    (streaming state checkpoints: the statestore reader needs the
-    StateStoreCoordinator RPC endpoint, which exists only after a
-    streaming query has run in the reading session)."""
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as fh:
-        fh.write(spark.sparkContext.applicationId + "\n")
-    os.replace(tmp, marker)
-
-
-def session_marker_ok(spark: SparkSession, marker: str) -> bool:
-    """True iff the marker exists AND was written by THIS session."""
-    try:
-        with open(marker) as fh:
-            return fh.read().strip() == spark.sparkContext.applicationId
-    except OSError:
-        return False
 
 
 def ensure_session_defaults(spark: SparkSession) -> None:
@@ -99,29 +50,27 @@ from lakehouse_ecommerce_etl_pipeline_spark.functions.timestamps import (  # noq
 )
 
 
-def _events_micros_copy(sf_dir: str) -> str:
-    """Session-independent fallback for the nanos events table: a
-    one-time pyarrow rewrite to microsecond timestamps in the scratch
-    dir (deterministic; reused across sessions)."""
-    src = f"{sf_dir}/events.parquet"
-    out_dir = work_dir(sf_dir, "events_us")
-    out = os.path.join(out_dir, "events.parquet")
-    with artifact_lock(out):
-        if not artifact_fresh(src, out):
-            import pyarrow as pa
-            import pyarrow.parquet as pq
+def _events_micros_copy(spark: SparkSession, sf_dir: str) -> str:
+    """Fallback for the nanos events table: a pyarrow rewrite to
+    microsecond timestamps, once per session."""
 
-            t = pq.read_table(src)
-            fields = [
-                pa.field(f.name, pa.timestamp("us"))
-                if pa.types.is_timestamp(f.type)
-                else f
-                for f in t.schema
-            ]
-            tmp = out + ".tmp"
-            pq.write_table(t.cast(pa.schema(fields)), tmp)
-            os.replace(tmp, out)
-    return out
+    def build(out_dir: str) -> None:
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        t = pq.read_table(f"{sf_dir}/events.parquet")
+        fields = [
+            pa.field(f.name, pa.timestamp("us"))
+            if pa.types.is_timestamp(f.type)
+            else f
+            for f in t.schema
+        ]
+        pq.write_table(
+            t.cast(pa.schema(fields)), os.path.join(out_dir, "events.parquet")
+        )
+
+    out_dir = session_artifact(spark, sf_dir, "events_us", build)
+    return os.path.join(out_dir, "events.parquet")
 
 
 def events_parquet_path(spark: SparkSession, sf_dir: str) -> str:
@@ -134,7 +83,7 @@ def events_parquet_path(spark: SparkSession, sf_dir: str) -> str:
         spark.read.parquet(src).schema
         return src
     except Exception:
-        return _events_micros_copy(sf_dir)
+        return _events_micros_copy(spark, sf_dir)
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -145,7 +94,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             return normalize_nanos_timestamps(spark.read.parquet(path))
         except Exception:
             # session that can't read nanos even as long → micros copy
-            return spark.read.parquet(_events_micros_copy(sf_dir))
+            return spark.read.parquet(_events_micros_copy(spark, sf_dir))
     return spark.read.parquet(path)
 
 
@@ -172,19 +121,20 @@ def order_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pagerank/triangles/degrees/components).
 
     SHARED MATERIALIZATION: six queries consume this table, so it is
-    spilled once per scale factor to scratch parquet (mtime-guarded
-    against the lineitem source) and every consumer reads the scan —
-    exactly what a production pipeline does with a reused intermediate
-    (materialize the co-purchase edge list; don't recompute it per
-    downstream query). First build pays one groupBy shuffle + write;
-    every reuse is a parquet scan with column pruning."""
-    src = os.path.join(sf_dir, "lineitem.parquet")
-    path = os.path.join(work_dir(sf_dir, "shared"), "order_part_pairs")
-    with artifact_lock(path):
-        if not artifact_fresh(src, path):
-            _order_part_pairs_build(spark, sf_dir).write.mode(
-                "overwrite"
-            ).parquet(path)
+    spilled once per session to scratch parquet and every consumer
+    reads the scan — exactly what a production pipeline does with a
+    reused intermediate (materialize the co-purchase edge list; don't
+    recompute it per downstream query). First build pays one groupBy
+    shuffle + write; every reuse is a parquet scan with column
+    pruning."""
+    path = session_artifact(
+        spark,
+        sf_dir,
+        "order_part_pairs",
+        lambda p: _order_part_pairs_build(spark, sf_dir)
+        .write.mode("overwrite")
+        .parquet(p),
+    )
     return spark.read.parquet(path)
 
 
@@ -192,14 +142,17 @@ def order_part_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The distinct co-purchase edge set (src < dst) — the graph-query
     face of ``order_part_pairs`` (pagerank/triangles/degrees/
     components all start from DISTINCT pairs).  Materialized once per
-    scale factor so the distinct shuffle is also paid once."""
-    src = os.path.join(sf_dir, "lineitem.parquet")
-    path = os.path.join(work_dir(sf_dir, "shared"), "order_part_edges")
-    with artifact_lock(path):
-        if not artifact_fresh(src, path):
-            order_part_pairs(spark, sf_dir).select(
-                "src", "dst"
-            ).distinct().write.mode("overwrite").parquet(path)
+    session so the distinct shuffle is also paid once."""
+    path = session_artifact(
+        spark,
+        sf_dir,
+        "order_part_edges",
+        lambda p: order_part_pairs(spark, sf_dir)
+        .select("src", "dst")
+        .distinct()
+        .write.mode("overwrite")
+        .parquet(p),
+    )
     return spark.read.parquet(path)
 
 
@@ -210,21 +163,11 @@ def copurchase_graph(
     for the co-purchase graph — the iterative-graph face of the shared
     build (pagerank and friends).  Edges carry (src, dst, outdeg);
     degrees are total degree over the symmetric graph.  Both are
-    materialized once per scale factor: the degree agg is map-side
+    materialized once per session: the degree agg is map-side
     combined down to |nodes| rows, broadcast back onto the edges, and
     never recomputed by later graph queries."""
-    src = os.path.join(sf_dir, "lineitem.parquet")
-    gpath = os.path.join(work_dir(sf_dir, "shared"), "copurchase_graph")
-    dpath = os.path.join(work_dir(sf_dir, "shared"), "copurchase_degrees")
-    with artifact_lock(gpath):
-        _copurchase_build(spark, sf_dir, src, gpath, dpath)
-    return spark.read.parquet(gpath), spark.read.parquet(dpath)
 
-
-def _copurchase_build(
-    spark: SparkSession, sf_dir: str, src: str, gpath: str, dpath: str
-) -> None:
-    if not (artifact_fresh(src, gpath) and artifact_fresh(src, dpath)):
+    def build(out: str) -> None:
         half = order_part_edges(spark, sf_dir)
         deg = (
             half.select(F.col("src").alias("node"))
@@ -232,16 +175,22 @@ def _copurchase_build(
             .groupBy("node")
             .agg(F.count(F.lit(1)).alias("outdeg"))
         )
-        deg.write.mode("overwrite").parquet(dpath)
-        deg_r = spark.read.parquet(dpath)
+        deg.write.mode("overwrite").parquet(os.path.join(out, "degrees"))
+        deg_r = spark.read.parquet(os.path.join(out, "degrees"))
         edges = half.unionByName(
             half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
         edges.join(
             F.broadcast(deg_r), edges["src"] == deg_r["node"]
         ).select("src", "dst", "outdeg").write.mode("overwrite").parquet(
-            gpath
+            os.path.join(out, "edges")
         )
+
+    out = session_artifact(spark, sf_dir, "copurchase_graph", build)
+    return (
+        spark.read.parquet(os.path.join(out, "edges")),
+        spark.read.parquet(os.path.join(out, "degrees")),
+    )
 
 
 def _order_part_pairs_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -274,182 +223,6 @@ def _order_part_pairs_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("l_orderkey", "p.src", "p.dst")
 
 
-def _probe_file(h, path: str, size: int, chunk: int = 4096) -> None:
-    with open(path, "rb") as f:
-        h.update(f.read(chunk))
-        if size > 2 * chunk:
-            f.seek(-chunk, os.SEEK_END)
-            h.update(f.read(chunk))
-
-
-def _src_fingerprint(src: str) -> str:
-    """Content-sensitive source fingerprint: size + mtime_ns + an
-    md5 over the first and last 4 KiB.  mtime alone is NOT enough —
-    testdata regenerated with preserved timestamps (cp -p, rsync -t,
-    tar) would silently serve a stale artifact under a pure
-    mtime-ordering check (r9 ADVICE); the head+tail probe catches
-    changed bytes without rehashing multi-GB parquet.  Directory
-    sources fingerprint their sorted (name, size, mtime_ns) listing
-    PLUS a head+tail byte probe of EVERY regular member file (r10
-    ADVICE: a directory regenerated with preserved sizes and mtimes
-    must still invalidate; r11 ADVICE item 3 removed the former
-    16-largest-files cap — a same-size same-mtime byte change in a
-    SMALL member of a wide directory now invalidates too; 2 KiB
-    head+tail per member is cheap even for wide dirs)."""
-    import hashlib
-
-    st = os.stat(src)
-    h = hashlib.md5()
-    if os.path.isdir(src):
-        for name in sorted(os.listdir(src)):
-            p = os.path.join(src, name)
-            s = os.stat(p)
-            h.update(f"{name}:{s.st_size}:{s.st_mtime_ns};".encode())
-            if os.path.isfile(p):
-                h.update(f"|{name}:".encode())
-                _probe_file(h, p, s.st_size, chunk=2048)
-        return f"dir:{st.st_mtime_ns}:{h.hexdigest()}"
-    _probe_file(h, src, st.st_size)
-    return f"{st.st_size}:{st.st_mtime_ns}:{h.hexdigest()}"
-
-
-def _marker_path(artifact: str) -> str:
-    return artifact.rstrip("/") + ".srcfp"
-
-
-def artifact_fresh(src: str, artifact: str) -> bool:
-    """True iff a scratch artifact exists AND matches its source's
-    recorded fingerprint — derived copies must be rebuilt when the
-    driver regenerates the testdata in place (same paths, new
-    bytes/types, possibly PRESERVED mtimes). An EMPTY directory never
-    counts as fresh: ``work_dir`` mkdirs its whole path, so a
-    pre-created leaf must read as absent, not built.
-
-    Freshness protocol (self-healing, no builder changes needed): a
-    sibling ``<artifact>.srcfp`` marker records the source
-    fingerprint.  Marker present → fresh iff it matches the CURRENT
-    fingerprint; a mismatch deletes the marker and reports stale, so
-    the caller rebuilds.
-
-    The fingerprint the marker holds is recorded at BUILD TIME, not
-    at the next check (r10 ADVICE): every stale verdict writes the
-    PRE-BUILD source fingerprint to a ``.srcfp.pending`` sibling
-    (under double-checked locking a stale verdict is immediately
-    followed by the build).  The first check after the build promotes
-    the pending fingerprint to the marker iff the artifact's mtime
-    shows the build completed AFTER the stale verdict — so testdata
-    regenerated in place with PRESERVED mtimes between rebuild and
-    first re-check compares against the fingerprint the build was
-    made from and correctly invalidates.  A pending file with no
-    newer artifact (builder crashed before building) is discarded and
-    the verdict is conservatively stale; only true legacy artifacts
-    (no marker, no pending) use the mtime-ordering fallback."""
-    marker = _marker_path(artifact)
-    pending = marker + ".pending"
-
-    def _stale() -> bool:
-        # record the PRE-BUILD fingerprint for the build that follows
-        try:
-            fp_now = _src_fingerprint(src)
-        except OSError:
-            return False
-        tmp = f"{pending}.tmp{os.getpid()}"
-        try:
-            with open(tmp, "w") as f:
-                f.write(fp_now)
-            os.replace(tmp, pending)
-        except OSError:
-            pass
-        return False
-
-    if not os.path.exists(artifact):
-        return _stale()
-    try:
-        if os.path.isdir(artifact) and not os.listdir(artifact):
-            return _stale()
-        fp = _src_fingerprint(src)
-    except OSError:
-        return False
-    try:
-        with open(marker) as f:
-            recorded = f.read()
-    except OSError:
-        recorded = None
-    if recorded is not None:
-        if recorded == fp:
-            # the build this marker certifies has been adjudicated —
-            # drop any leftover pending sibling so a later marker loss
-            # can't promote an ancient pre-build fingerprint (r11
-            # ADVICE item 4; also stops .pending litter accumulating
-            # next to every artifact that went stale once)
-            try:
-                os.remove(pending)
-            except OSError:
-                pass
-            return True
-        try:
-            os.remove(marker)
-        except OSError:
-            pass
-        return _stale()
-    # marker absent: just-rebuilt (pending holds the build-time fp)
-    # or legacy artifact
-    try:
-        with open(pending) as f:
-            pend = f.read()
-    except OSError:
-        pend = None
-    if pend is not None:
-        try:
-            # dir artifacts rewritten in place don't bump the dir's
-            # own mtime — take the max over the dir and its entries
-            st = os.stat(artifact)
-            amt = st.st_mtime_ns
-            if os.path.isdir(artifact):
-                for e in os.listdir(artifact):
-                    amt = max(
-                        amt, os.stat(os.path.join(artifact, e)).st_mtime_ns
-                    )
-            built_after = amt >= os.stat(pending).st_mtime_ns
-        except OSError:
-            return False
-        try:
-            os.remove(pending)
-        except OSError:
-            pass
-        if built_after:
-            tmp = f"{marker}.tmp{os.getpid()}"
-            try:
-                with open(tmp, "w") as f:
-                    f.write(pend)
-                os.replace(tmp, marker)
-            except OSError:
-                pass
-            if pend == fp:
-                return True
-            try:
-                os.remove(marker)
-            except OSError:
-                pass
-        # crashed-before-build, or source changed since the build's
-        # fingerprint: conservatively stale
-        return _stale()
-    try:
-        ok = os.path.getmtime(artifact) >= os.path.getmtime(src)
-    except OSError:
-        return False
-    if ok:
-        tmp = f"{marker}.tmp{os.getpid()}"
-        try:
-            with open(tmp, "w") as f:
-                f.write(fp)
-            os.replace(tmp, marker)
-        except OSError:
-            pass
-        return True
-    return _stale()
-
-
 def spill_final(df: DataFrame, sf_dir: str, name: str) -> DataFrame:
     """Materialize the FINAL generation of an iterative computation to
     scratch parquet and return the re-read scan.
@@ -462,19 +235,59 @@ def spill_final(df: DataFrame, sf_dir: str, name: str) -> DataFrame:
     generation right after this returns. Bounded at the result's own
     row count — exactly what a production run would publish anyway."""
     spark = df.sparkSession
-    # keyed by applicationId: spills are session-private intermediates,
-    # so concurrent processes (pytest + check_oracle) never write the
-    # same path — the collision the shared-scratch layout used to hit
-    path = os.path.join(
-        work_dir(sf_dir, "iterative", spark.sparkContext.applicationId), name
-    )
+    path = os.path.join(session_dir(spark, sf_dir, "iterative"), name)
     df.write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)
 
 
+_built: set[tuple[str, str, str]] = set()
+_build_lock = threading.RLock()
+_app_roots: set[str] = set()
+
+
+def session_dir(spark: SparkSession, sf_dir: str, *parts: str) -> str:
+    """This Spark application's scratch dir for ``sf_dir``. Keyed by
+    applicationId, so no other process ever writes under it and
+    nothing in it can outlive the data it was derived from (testdata
+    is regenerated only between processes), and by the absolute
+    ``sf_dir``, so two data dirs that share a basename never share
+    scratch. Removed when the process exits, like a job session's
+    scratch."""
+    app = spark.sparkContext.applicationId
+    sf_key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
+    root = work_dir(sf_dir, app)
+    with _build_lock:
+        if root not in _app_roots:
+            _app_roots.add(root)
+            atexit.register(shutil.rmtree, root, True)
+    return work_dir(sf_dir, app, sf_key, *parts)
+
+
+def session_artifact(
+    spark: SparkSession, sf_dir: str, name: str, build: Callable[[str], object]
+) -> str:
+    """A scratch directory holding a derived intermediate that several
+    queries of one application reuse (format fixtures, shared parquet
+    builds). ``build(path)`` fills the emptied directory the first
+    time this application asks for ``name`` over ``sf_dir``; later
+    calls return the path without building. A build that raises is
+    not remembered, so the next call starts it again."""
+    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), name)
+    path = session_dir(spark, sf_dir, name)
+    with _build_lock:
+        if key not in _built:
+            shutil.rmtree(path, ignore_errors=True)
+            os.makedirs(path)
+            build(path)
+            _built.add(key)
+    return path
+
+
 def work_dir(sf_dir: str, *parts: str) -> str:
-    """A deterministic scratch dir per scale factor for queries that
-    must materialize inputs (CSV scan, workbooks, managed tables)."""
+    """A scratch dir under the per-scale-factor root. Every scratch
+    path, ``session_dir`` included, is built here and looked up by this
+    module-global name, so rebinding it (``perfbench/run.py`` does)
+    moves all registry scratch."""
     tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
     d = os.path.join("/tmp", "lakehouse_spark_work", tag, *parts)
     os.makedirs(d, exist_ok=True)

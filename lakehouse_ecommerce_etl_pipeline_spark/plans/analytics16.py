@@ -32,6 +32,7 @@ from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import (
     copurchase_graph,
     load,
     order_part_edges,
+    session_artifact,
     spill_final,
 )
 from lakehouse_ecommerce_etl_pipeline_spark.plans.registry import register
@@ -378,28 +379,19 @@ def degree_oriented_copurchase_edges(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """The (degree, id)-oriented co-purchase edge set, materialized
-    once per scale factor (same shared-artifact discipline as
+    once per session (same shared-artifact discipline as
     ``order_part_edges``): the degree agg and the two endpoint
     annotation joins are paid once, and the three self-references in
     the wedge + closing join become plain column-pruned parquet
     scans instead of three recomputations of the orientation."""
-    import os
-
-    from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import (
-        artifact_fresh,
-        artifact_lock,
-        work_dir,
+    path = session_artifact(
+        spark,
+        sf_dir,
+        "degree_oriented_edges",
+        lambda p: degree_oriented_edges(order_part_edges(spark, sf_dir))
+        .write.mode("overwrite")
+        .parquet(p),
     )
-
-    src = os.path.join(sf_dir, "lineitem.parquet")
-    path = os.path.join(
-        work_dir(sf_dir, "shared"), "degree_oriented_edges"
-    )
-    with artifact_lock(path):
-        if not artifact_fresh(src, path):
-            degree_oriented_edges(
-                order_part_edges(spark, sf_dir)
-            ).write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)
 
 

@@ -27,10 +27,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import (
-    artifact_fresh,
-    artifact_lock,
     load,
-    work_dir,
+    session_artifact,
 )
 from lakehouse_ecommerce_etl_pipeline_spark.plans.registry import register
 
@@ -169,7 +167,7 @@ def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def shingle_set_reps_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, rep_id): rep = min doc_id among documents with the
     IDENTICAL distinct-3-shingle SET — the containment twin of the
-    text chain's token_set_reps, materialized once per scale factor
+    text chain's token_set_reps, materialized once per session
     like document_reps (plans/llm.py).  Containment is a pure
     function of the shingle sets, so pair mining needs only one
     representative per DISTINCT set and results expand back through
@@ -184,39 +182,27 @@ def shingle_set_reps_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
     sits directly on column-pruned parquet scans with no join subtree
     beneath it (the duplicated-subplan discipline, DESIGN §20 — a
     rep-filter join below a self-join would execute once per side)."""
-    src = os.path.join(sf_dir, "documents.parquet")
-    mpath = os.path.join(work_dir(sf_dir, "shared"), "shingle_set_reps")
-    spath = os.path.join(
-        work_dir(sf_dir, "shared"), "shingle_set_rep_shingles"
+    def build(out: str) -> None:
+        sh = _doc_shingles(spark, sf_dir)
+        keyed = sh.groupBy("doc_id").agg(
+            F.md5(
+                F.concat_ws("\x01", F.array_sort(F.collect_set("shingle")))
+            ).alias("skey")
+        )
+        reps = keyed.groupBy("skey").agg(F.min("doc_id").alias("rep_id"))
+        m = keyed.join(reps, "skey").select("doc_id", "rep_id")
+        m.write.mode("overwrite").parquet(os.path.join(out, "members"))
+        m_scan = spark.read.parquet(os.path.join(out, "members"))
+        sh.join(
+            m_scan.filter(F.col("doc_id") == F.col("rep_id")).select("doc_id"),
+            "doc_id",
+        ).write.mode("overwrite").parquet(os.path.join(out, "rep_shingles"))
+
+    out = session_artifact(spark, sf_dir, "shingle_set_reps", build)
+    return (
+        spark.read.parquet(os.path.join(out, "members")),
+        spark.read.parquet(os.path.join(out, "rep_shingles")),
     )
-    with artifact_lock(mpath):
-        # evaluate BOTH checks eagerly (r10 ADVICE): `and` would
-        # short-circuit past the second artifact's stale marker,
-        # leaving it to trigger a second full rebuild next call
-        fresh_m = artifact_fresh(src, mpath)
-        fresh_s = artifact_fresh(src, spath)
-        if not (fresh_m and fresh_s):
-            sh = _doc_shingles(spark, sf_dir)
-            keyed = sh.groupBy("doc_id").agg(
-                F.md5(
-                    F.concat_ws(
-                        "\x01", F.array_sort(F.collect_set("shingle"))
-                    )
-                ).alias("skey")
-            )
-            reps = keyed.groupBy("skey").agg(
-                F.min("doc_id").alias("rep_id")
-            )
-            m = keyed.join(reps, "skey").select("doc_id", "rep_id")
-            m.write.mode("overwrite").parquet(mpath)
-            m_scan = spark.read.parquet(mpath)
-            sh.join(
-                m_scan.filter(
-                    F.col("doc_id") == F.col("rep_id")
-                ).select("doc_id"),
-                "doc_id",
-            ).write.mode("overwrite").parquet(spath)
-    return spark.read.parquet(mpath), spark.read.parquet(spath)
 
 
 @register(
@@ -328,24 +314,19 @@ def _schema_evo_batches(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Materialize two parquet batches of orders with DIFFERENT
     schemas: the early batch predates the o_orderpriority column, the
     late batch carries it — the column-arrived-later evolution case."""
-    src = os.path.join(sf_dir, "orders.parquet")
-    base = work_dir(sf_dir, "schema_evo")
-    b1 = os.path.join(base, "batch1")
-    b2 = os.path.join(base, "batch2")
-    with artifact_lock(b1):
-        fresh_1 = artifact_fresh(src, b1)
-        fresh_2 = artifact_fresh(src, b2)
-        if not (fresh_1 and fresh_2):
-            orders = load(spark, sf_dir, "orders")
-            early = orders.filter(F.col("o_orderdate") < F.lit(_EVO_CUTOFF))
-            late = orders.filter(F.col("o_orderdate") >= F.lit(_EVO_CUTOFF))
-            early.select("o_orderkey", "o_custkey", "o_totalprice").write.mode(
-                "overwrite"
-            ).parquet(b1)
-            late.select(
-                "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
-            ).write.mode("overwrite").parquet(b2)
-    return b1, b2
+    def build(out: str) -> None:
+        orders = load(spark, sf_dir, "orders")
+        early = orders.filter(F.col("o_orderdate") < F.lit(_EVO_CUTOFF))
+        late = orders.filter(F.col("o_orderdate") >= F.lit(_EVO_CUTOFF))
+        early.select("o_orderkey", "o_custkey", "o_totalprice").write.mode(
+            "overwrite"
+        ).parquet(os.path.join(out, "batch1"))
+        late.select(
+            "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
+        ).write.mode("overwrite").parquet(os.path.join(out, "batch2"))
+
+    out = session_artifact(spark, sf_dir, "schema_evo", build)
+    return os.path.join(out, "batch1"), os.path.join(out, "batch2")
 
 
 @register(
@@ -574,13 +555,15 @@ def q_partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     the planning cost is listing one directory level.  Partition
     columns must stay low-cardinality (event_type: 5 values) or the
     file listing itself becomes the bottleneck."""
-    src = os.path.join(sf_dir, "events.parquet")
-    path = os.path.join(work_dir(sf_dir, "events_by_type"), "t")
-    with artifact_lock(path):
-        if not artifact_fresh(src, path):
-            load(spark, sf_dir, "events").write.partitionBy(
-                "event_type"
-            ).mode("overwrite").parquet(path)
+    path = session_artifact(
+        spark,
+        sf_dir,
+        "events_by_type",
+        lambda p: load(spark, sf_dir, "events")
+        .write.partitionBy("event_type")
+        .mode("overwrite")
+        .parquet(p),
+    )
     return (
         spark.read.parquet(path)
         .filter(F.col("event_type") == "purchase")

@@ -4,7 +4,7 @@ New axis over I-XL: the corpus so far is flat-relational; lakehouses
 routinely store DENORMALIZED documents — an order with its line items
 embedded as array<struct> — because one wide scan beats a join at
 read time.  This tier materializes that nested table (orders ⨝
-collect_list(lineitem), mtime-guarded scratch parquet) and pins the
+collect_list(lineitem), session-scoped scratch parquet) and pins the
 two operations that make nested models safe: lossless explode back to
 relational form (oracle: the plain join), and nested-field projection
 with SCHEMA PRUNING (reading one leaf of a struct scans only that
@@ -16,16 +16,13 @@ of orders/lineitem; every emitted value is a source column.
 
 from __future__ import annotations
 
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import (
-    artifact_fresh,
-    artifact_lock,
     load,
-    work_dir,
+    session_artifact,
 )
 from lakehouse_ecommerce_etl_pipeline_spark.plans.registry import register
 
@@ -33,41 +30,38 @@ from lakehouse_ecommerce_etl_pipeline_spark.plans.registry import register
 def nested_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The denormalized order document: header fields plus an
     ``items array<struct<linenumber, partkey, quantity, price>>``
-    sorted by line number, materialized once per scale factor.
+    sorted by line number, materialized once per session.
 
     100 TB: the build is ONE co-partitioned shuffle (group line items
     by order key) against the header join; after that, every consumer
     reads orders and their items in a single scan with no join — the
     read-optimized layout that pays for itself the second time any
     order-scoped query runs."""
-    src = os.path.join(sf_dir, "lineitem.parquet")
-    path = os.path.join(work_dir(sf_dir, "shared"), "nested_orders")
-    with artifact_lock(path):
-        if not artifact_fresh(src, path):
-            items = (
-                load(spark, sf_dir, "lineitem")
-                .select(
-                    "l_orderkey",
-                    F.struct(
-                        F.col("l_linenumber").alias("linenumber"),
-                        F.col("l_partkey").alias("partkey"),
-                        F.col("l_quantity").alias("quantity"),
-                        F.col("l_extendedprice").alias("price"),
-                    ).alias("item"),
-                )
-                .groupBy("l_orderkey")
-                .agg(
-                    F.array_sort(F.collect_list("item")).alias("items")
-                )
+    def build(out: str) -> None:
+        items = (
+            load(spark, sf_dir, "lineitem")
+            .select(
+                "l_orderkey",
+                F.struct(
+                    F.col("l_linenumber").alias("linenumber"),
+                    F.col("l_partkey").alias("partkey"),
+                    F.col("l_quantity").alias("quantity"),
+                    F.col("l_extendedprice").alias("price"),
+                ).alias("item"),
             )
-            orders = load(spark, sf_dir, "orders").select(
-                "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"
-            )
-            orders.join(
-                items, orders["o_orderkey"] == items["l_orderkey"], "left"
-            ).select(
-                "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice", "items"
-            ).write.mode("overwrite").parquet(path)
+            .groupBy("l_orderkey")
+            .agg(F.array_sort(F.collect_list("item")).alias("items"))
+        )
+        orders = load(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"
+        )
+        orders.join(
+            items, orders["o_orderkey"] == items["l_orderkey"], "left"
+        ).select(
+            "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice", "items"
+        ).write.mode("overwrite").parquet(out)
+
+    path = session_artifact(spark, sf_dir, "nested_orders", build)
     return spark.read.parquet(path)
 
 

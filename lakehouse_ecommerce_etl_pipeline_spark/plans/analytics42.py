@@ -20,10 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import (
-    artifact_fresh,
-    artifact_lock,
     load,
-    work_dir,
+    session_artifact,
 )
 from lakehouse_ecommerce_etl_pipeline_spark.plans.registry import register
 
@@ -34,32 +32,31 @@ def _dirty_csv(spark: SparkSession, sf_dir: str) -> str:
     """orders rendered to a single CSV file with _N_BAD unparseable
     lines interleaved (non-numeric key fields, correct arity — the
     shape a truncated upload or encoding glitch produces)."""
-    src = os.path.join(sf_dir, "orders.parquet")
-    base = work_dir(sf_dir, "dirty_csv")
-    path = os.path.join(base, "orders_dirty.csv")
-    with artifact_lock(path):
-        _build_dirty_csv(spark, sf_dir, src, path)
-    return path
+    out = session_artifact(
+        spark,
+        sf_dir,
+        "dirty_csv",
+        lambda p: _build_dirty_csv(
+            spark, sf_dir, os.path.join(p, "orders_dirty.csv")
+        ),
+    )
+    return os.path.join(out, "orders_dirty.csv")
 
 
-def _build_dirty_csv(spark, sf_dir, src, path):
-    if not artifact_fresh(src, path):
-        rows = (
-            load(spark, sf_dir, "orders")
-            .select("o_orderkey", "o_custkey", "o_totalprice")
-            .sort("o_orderkey")
-            .collect()
-        )
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            for i, r in enumerate(rows):
-                if i % 2000 == 0 and i // 2000 < _N_BAD:
-                    f.write(f"bad{i},oops,not_a_price\n")
-                f.write(f"{r[0]},{r[1]},{r[2]!r}\n")
-            for j in range(_N_BAD - min(_N_BAD, (len(rows) + 1999) // 2000)):
-                f.write(f"trailing_bad{j},oops,nope\n")
-        os.replace(tmp, path)
-    return path
+def _build_dirty_csv(spark, sf_dir, path):
+    rows = (
+        load(spark, sf_dir, "orders")
+        .select("o_orderkey", "o_custkey", "o_totalprice")
+        .sort("o_orderkey")
+        .collect()
+    )
+    with open(path, "w") as f:
+        for i, r in enumerate(rows):
+            if i % 2000 == 0 and i // 2000 < _N_BAD:
+                f.write(f"bad{i},oops,not_a_price\n")
+            f.write(f"{r[0]},{r[1]},{r[2]!r}\n")
+        for j in range(_N_BAD - min(_N_BAD, (len(rows) + 1999) // 2000)):
+            f.write(f"trailing_bad{j},oops,nope\n")
 
 
 @register(
@@ -144,42 +141,41 @@ def _dirty_json(spark: SparkSession, sf_dir: str) -> str:
     lines that are not JSON at all (truncated upload) and lines that
     ARE JSON but carry a wrong-typed key field (producer schema bug) —
     the failure mode CSV cannot represent."""
-    src = os.path.join(sf_dir, "orders.parquet")
-    base = work_dir(sf_dir, "dirty_json")
-    path = os.path.join(base, "orders_dirty.json")
-    with artifact_lock(path):
-        _build_dirty_json(spark, sf_dir, src, path)
-    return path
+    out = session_artifact(
+        spark,
+        sf_dir,
+        "dirty_json",
+        lambda p: _build_dirty_json(
+            spark, sf_dir, os.path.join(p, "orders_dirty.json")
+        ),
+    )
+    return os.path.join(out, "orders_dirty.json")
 
 
-def _build_dirty_json(spark, sf_dir, src, path):
-    if not artifact_fresh(src, path):
-        rows = (
-            load(spark, sf_dir, "orders")
-            .select("o_orderkey", "o_custkey", "o_totalprice")
-            .sort("o_orderkey")
-            .collect()
-        )
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            for i, r in enumerate(rows):
-                if i % 3000 == 0 and i // 3000 < _N_BAD_J:
-                    if (i // 3000) % 2 == 0:
-                        f.write('{"o_orderkey": truncated\n')  # not JSON
-                    else:
-                        f.write(
-                            '{"o_orderkey": "not_a_number", '
-                            '"o_custkey": 1, "o_totalprice": 1.0}\n'
-                        )  # JSON, wrong type
-                f.write(
-                    f'{{"o_orderkey": {r[0]}, "o_custkey": {r[1]}, '
-                    f'"o_totalprice": {r[2]!r}}}\n'
-                )
-            emitted = min(_N_BAD_J, (len(rows) + 2999) // 3000)
-            for j in range(_N_BAD_J - emitted):
-                f.write('{"o_orderkey": also truncated\n')
-        os.replace(tmp, path)
-    return path
+def _build_dirty_json(spark, sf_dir, path):
+    rows = (
+        load(spark, sf_dir, "orders")
+        .select("o_orderkey", "o_custkey", "o_totalprice")
+        .sort("o_orderkey")
+        .collect()
+    )
+    with open(path, "w") as f:
+        for i, r in enumerate(rows):
+            if i % 3000 == 0 and i // 3000 < _N_BAD_J:
+                if (i // 3000) % 2 == 0:
+                    f.write('{"o_orderkey": truncated\n')  # not JSON
+                else:
+                    f.write(
+                        '{"o_orderkey": "not_a_number", '
+                        '"o_custkey": 1, "o_totalprice": 1.0}\n'
+                    )  # JSON, wrong type
+            f.write(
+                f'{{"o_orderkey": {r[0]}, "o_custkey": {r[1]}, '
+                f'"o_totalprice": {r[2]!r}}}\n'
+            )
+        emitted = min(_N_BAD_J, (len(rows) + 2999) // 3000)
+        for j in range(_N_BAD_J - emitted):
+            f.write('{"o_orderkey": also truncated\n')
 
 
 @register(

@@ -157,7 +157,7 @@ def q_also_bought_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     total order, so the serving table is deterministic).  This is the
     recommendation artifact a product page reads; co-counts come from
     the SHARED pair build, symmetrized, so the expensive enumeration
-    is paid once per scale factor across the whole graph tier.
+    is paid once per session across the whole graph tier.
 
     100 TB: per-part top-k is a window rank inside the part
     partition — Spark plans WindowGroupLimit pushdown so only k rows

@@ -20,16 +20,13 @@ integers."""
 
 from __future__ import annotations
 
-import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import (
-    artifact_fresh,
-    artifact_lock,
     load,
-    work_dir,
+    session_artifact,
 )
 from lakehouse_ecommerce_etl_pipeline_spark.plans.llm import (
     _BANDS_UNION,
@@ -71,24 +68,25 @@ def q_scan_fixed_width(spark: SparkSession, sf_dir: str) -> DataFrame:
     the argument for converting such feeds to parquet at the
     ingestion edge exactly once (what this query's write half
     simulates)."""
-    src = os.path.join(sf_dir, "supplier.parquet")
-    # leaf component kept OUT of work_dir (which mkdirs its path —
-    # a pre-created empty leaf would read as a fresh artifact)
-    out = os.path.join(work_dir(sf_dir, "fixed_width"), "supplier")
-    with artifact_lock(out):
-        if not artifact_fresh(src, out):
-            fmt = (
-                f"%{_FW_KEY_W}d%-{_FW_NAME_W}s%{_FW_NATION_W}d%{_FW_CENTS_W}d"
-            )
-            load(spark, sf_dir, "supplier").select(
-                F.format_string(
-                    fmt,
-                    F.col("s_suppkey"),
-                    F.col("s_name"),
-                    F.col("s_nationkey"),
-                    F.round(F.col("s_acctbal") * 100).cast("bigint"),
-                ).alias("value")
-            ).coalesce(1).write.mode("overwrite").text(out)
+    fmt = f"%{_FW_KEY_W}d%-{_FW_NAME_W}s%{_FW_NATION_W}d%{_FW_CENTS_W}d"
+    out = session_artifact(
+        spark,
+        sf_dir,
+        "fixed_width_supplier",
+        lambda p: load(spark, sf_dir, "supplier")
+        .select(
+            F.format_string(
+                fmt,
+                F.col("s_suppkey"),
+                F.col("s_name"),
+                F.col("s_nationkey"),
+                F.round(F.col("s_acctbal") * 100).cast("bigint"),
+            ).alias("value")
+        )
+        .coalesce(1)
+        .write.mode("overwrite")
+        .text(p),
+    )
     lines = spark.read.text(out)
     p = 1
     key = F.trim(F.substring("value", p, _FW_KEY_W))

@@ -21,16 +21,13 @@ oracle can reproduce it from the partition column itself.
 
 from __future__ import annotations
 
-import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import (
-    artifact_fresh,
-    artifact_lock,
     load,
-    work_dir,
+    session_artifact,
 )
 from lakehouse_ecommerce_etl_pipeline_spark.plans.registry import register
 
@@ -173,19 +170,21 @@ def q_file_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     forensics, bad-ingest blast-radius reports, and per-file retention
     decisions — and the same pattern extends to _metadata.file_path /
     row-index for row-level lineage."""
-    src = os.path.join(sf_dir, "orders.parquet")
-    out = os.path.join(work_dir(sf_dir, "tables"), "orders_prov_partitioned")
-    with artifact_lock(out):
-        if not artifact_fresh(src, out):
-            df = load(spark, sf_dir, "orders").select(
-                "o_orderkey",
-                "o_custkey",
-                "o_totalprice",
-                F.trunc("o_orderdate", "month").alias("order_month"),
-            )
-            df.repartition("order_month").write.mode("overwrite").partitionBy(
-                "order_month"
-            ).parquet(out)
+    df = load(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        "o_custkey",
+        "o_totalprice",
+        F.trunc("o_orderdate", "month").alias("order_month"),
+    )
+    out = session_artifact(
+        spark,
+        sf_dir,
+        "orders_prov_partitioned",
+        lambda p: df.repartition("order_month")
+        .write.mode("overwrite")
+        .partitionBy("order_month")
+        .parquet(p),
+    )
     # partition value recovered from the file PATH, not the data — the
     # provenance direction the oracle cross-checks
     scanned = spark.read.parquet(out).select(

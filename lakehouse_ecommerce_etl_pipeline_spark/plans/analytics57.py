@@ -20,13 +20,11 @@ database), with Spark-side planning identical to the JDBC relation's.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 
-from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import (
-    artifact_fresh,
-    artifact_lock,
-    work_dir,
-)
+from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import session_artifact
 from lakehouse_ecommerce_etl_pipeline_spark.plans.registry import register
 from lakehouse_ecommerce_etl_pipeline_spark.sources.sqlite import (
     _ORDERS_SCHEMA,
@@ -39,8 +37,14 @@ from lakehouse_ecommerce_etl_pipeline_spark.sources.sqlite import (
 _N_PARTS = 4
 
 
-def _db(sf_dir: str) -> str:
-    return build_orders_db(sf_dir, work_dir, artifact_lock, artifact_fresh)
+def _db(spark: SparkSession, sf_dir: str) -> str:
+    out = session_artifact(
+        spark,
+        sf_dir,
+        "sqlite_orders",
+        lambda p: build_orders_db(sf_dir, os.path.join(p, "orders.db")),
+    )
+    return os.path.join(out, "orders.db")
 
 
 def orders_via_sqlite(
@@ -58,7 +62,7 @@ def orders_via_sqlite(
     scan just to size partitions)."""
     import sqlite3
 
-    db = _db(sf_dir)
+    db = _db(spark, sf_dir)
     con = sqlite3.connect(f"file:{db}?mode=ro", uri=True)
     try:
         lo, hi = con.execute(

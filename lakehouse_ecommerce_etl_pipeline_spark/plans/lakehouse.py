@@ -13,10 +13,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import (
-    artifact_fresh,
-    artifact_lock,
     load,
-    work_dir,
+    session_artifact,
+    session_dir,
 )
 from lakehouse_ecommerce_etl_pipeline_spark.plans.registry import register
 from lakehouse_ecommerce_etl_pipeline_spark.sinks.merge import merge_frames, merge_upsert
@@ -42,11 +41,12 @@ def q_scan_table(spark, sf_dir):
     """S3 — managed (Delta/versioned-parquet) table scan (reference:
     order_items_etl.py:45,53-55). Writes orders as a managed table,
     scans the published snapshot back."""
-    path = os.path.join(work_dir(sf_dir, "tables"), "orders_managed")
-    src = os.path.join(sf_dir, "orders.parquet")
-    with artifact_lock(path):
-        if not (managed.exists(path) and artifact_fresh(src, path)):
-            managed.write(spark, load(spark, sf_dir, "orders"), path)
+    path = session_artifact(
+        spark,
+        sf_dir,
+        "orders_managed",
+        lambda p: managed.write(spark, load(spark, sf_dir, "orders"), p),
+    )
     return managed.read(spark, path)
 
 
@@ -60,11 +60,12 @@ def q_scan_delta(spark, sf_dir):
     delta-spark is present, versioned-parquet snapshot otherwise —
     sources/table.py dispatches). Same snapshot-isolation contract
     either way."""
-    path = os.path.join(work_dir(sf_dir, "tables"), "orders_delta_scan")
-    src = os.path.join(sf_dir, "orders.parquet")
-    with artifact_lock(path):
-        if not (managed.exists(path) and artifact_fresh(src, path)):
-            managed.write(spark, load(spark, sf_dir, "orders"), path)
+    path = session_artifact(
+        spark,
+        sf_dir,
+        "orders_delta_scan",
+        lambda p: managed.write(spark, load(spark, sf_dir, "orders"), p),
+    )
     return managed.read(spark, path)
 
 
@@ -119,12 +120,8 @@ def q_merge_upsert_storage(spark, sf_dir):
     of identical source is a no-op modulo updated values). The
     read-back snapshot must equal the pure relational merge result,
     so it shares q_merge_upsert's full-outer-emulation oracle."""
-    # session-keyed: the table is torn down and rebuilt per call (the
-    # idempotency demo), so concurrent processes must not share it
-    path = os.path.join(
-        work_dir(sf_dir, "tables", spark.sparkContext.applicationId),
-        "orders_merge",
-    )
+    # torn down and rebuilt per call (the idempotency demo)
+    path = os.path.join(session_dir(spark, sf_dir, "tables"), "orders_merge")
     import shutil
 
     shutil.rmtree(path, ignore_errors=True)
@@ -154,11 +151,9 @@ def q_write_partitioned(spark, sf_dir):
     yields one file per partition instead of files × input-tasks.
     Partition values round-trip through directory names (partition-type
     inference reads them back as DATE)."""
-    # session-keyed: K2 is a WRITE demonstration (re-executed per call),
-    # so concurrent processes each get a private target
+    # K2 is a WRITE demonstration, re-executed per call
     out = os.path.join(
-        work_dir(sf_dir, "tables", spark.sparkContext.applicationId),
-        "orders_partitioned",
+        session_dir(spark, sf_dir, "tables"), "orders_partitioned"
     )
     df = load(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -206,7 +201,7 @@ def q_scan_excel(spark, sf_dir):
     ORDER BY/LIMIT projection."""
     import shutil
 
-    wdir = work_dir(sf_dir, "workbooks")
+    wdir = session_dir(spark, sf_dir, "workbooks")
     shutil.rmtree(wdir, ignore_errors=True)  # drop stale fixtures
     os.makedirs(wdir, exist_ok=True)
     pdf = (

@@ -44,7 +44,11 @@ from lakehouse_ecommerce_etl_pipeline_spark.llm.similarity import (
     distinct_vector_reps,
     ivf_topk,
 )
-from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import load, load_parallel
+from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import (
+    load,
+    load_parallel,
+    session_artifact,
+)
 from lakehouse_ecommerce_etl_pipeline_spark.plans.registry import register
 
 # SQL fragments mirroring functions/text.py exactly ------------------
@@ -680,7 +684,7 @@ def q_embedding_near_dup(spark, sf_dir):
 
 def vector_reps_artifact(spark, sf_dir):
     """(vec_id, rep_id, embedding) for every embeddings row,
-    materialized once per scale factor (the order_part_edges /
+    materialized once per session (the order_part_edges /
     degree_oriented_edges shared-artifact discipline): the rep map's
     join is keyed ON THE VECTOR COLUMN (normalized float arrays), and
     q_embedding_near_dup references it from four branches whose
@@ -689,36 +693,29 @@ def vector_reps_artifact(spark, sf_dir):
     times per run (scripts/subplan_audit.py, round 9 — the only true
     duplicated-join-subplan offender in the 420-query registry).
     Materialized, every branch is a column-pruned parquet scan and
-    the join is paid once per table generation.  Zero-norm rows keep
+    the join is paid once per session.  Zero-norm rows keep
     themselves as rep (distinct_vector_reps contract)."""
-    import os
 
-    from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import (
-        artifact_fresh,
-        artifact_lock,
-        work_dir,
+    def build(out: str) -> None:
+        emb = load(spark, sf_dir, "embeddings")
+        # keep_vec carries the embedding through the vector-keyed
+        # rep join itself — re-attaching it with an id equi-join
+        # would assume vec_id uniqueness and silently fan out a
+        # duplicate-id source (r9 ADVICE)
+        mm, _ = distinct_vector_reps(emb, keep_vec=True)
+        mm.select("vec_id", "rep_id", "embedding").write.mode(
+            "overwrite"
+        ).parquet(out)
+
+    return spark.read.parquet(
+        session_artifact(spark, sf_dir, "vector_reps", build)
     )
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    path = os.path.join(work_dir(sf_dir, "shared"), "vector_reps")
-    with artifact_lock(path):
-        if not artifact_fresh(src, path):
-            emb = load(spark, sf_dir, "embeddings")
-            # keep_vec carries the embedding through the vector-keyed
-            # rep join itself — re-attaching it with an id equi-join
-            # would assume vec_id uniqueness and silently fan out a
-            # duplicate-id source (r9 ADVICE)
-            mm, _ = distinct_vector_reps(emb, keep_vec=True)
-            mm.select("vec_id", "rep_id", "embedding").write.mode(
-                "overwrite"
-            ).parquet(path)
-    return spark.read.parquet(path)
 
 
 def document_reps_artifact(spark, sf_dir):
     """(doc_id, rep_id, text) for every documents row — the text
     chain's identical-token-set rep map (llm/components.py
-    token_set_reps), materialized once per scale factor like
+    token_set_reps), materialized once per session like
     ``vector_reps_artifact``: the md5-token-set groupBy join is the
     expensive half of every rep-collapsed dedup plan, and a consumer
     that references the map AND the rep documents (q_minhash_
@@ -726,31 +723,24 @@ def document_reps_artifact(spark, sf_dir):
     it per pruned branch (r9 subplan audit).  Downstream uses are
     column-pruned parquet scans; empty-token documents keep
     themselves as rep (token_set_reps contract)."""
-    import os
-
     from lakehouse_ecommerce_etl_pipeline_spark.llm.components import (
         token_set_reps,
     )
-    from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import (
-        artifact_fresh,
-        artifact_lock,
-        work_dir,
-    )
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    path = os.path.join(work_dir(sf_dir, "shared"), "document_reps")
-    with artifact_lock(path):
-        if not artifact_fresh(src, path):
-            docs = load_parallel(spark, sf_dir, "documents")
-            # keep_text carries the text through the tkey join itself —
-            # re-attaching it with an id equi-join would assume doc_id
-            # uniqueness and silently fan out a duplicate-id source
-            # (r9 ADVICE)
-            m = token_set_reps(docs, "doc_id", "text", keep_text=True)
-            m.select("doc_id", "rep_id", "text").write.mode(
-                "overwrite"
-            ).parquet(path)
-    return spark.read.parquet(path)
+    def build(out: str) -> None:
+        docs = load_parallel(spark, sf_dir, "documents")
+        # keep_text carries the text through the tkey join itself —
+        # re-attaching it with an id equi-join would assume doc_id
+        # uniqueness and silently fan out a duplicate-id source
+        # (r9 ADVICE)
+        m = token_set_reps(docs, "doc_id", "text", keep_text=True)
+        m.select("doc_id", "rep_id", "text").write.mode(
+            "overwrite"
+        ).parquet(out)
+
+    return spark.read.parquet(
+        session_artifact(spark, sf_dir, "document_reps", build)
+    )
 
 
 @register("q_ann_ivf")  # rows-only: approximate by construction

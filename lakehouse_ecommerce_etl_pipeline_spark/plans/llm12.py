@@ -28,7 +28,11 @@ from lakehouse_ecommerce_etl_pipeline_spark.llm.dedup import (
     lsh_probe_pairs,
     minhash_signatures_universal,
 )
-from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import load, load_parallel, work_dir
+from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import (
+    load,
+    load_parallel,
+    session_dir,
+)
 from lakehouse_ecommerce_etl_pipeline_spark.plans.llm import (
     _BANDS_UNION,
     _NUM_HASHES,
@@ -259,7 +263,7 @@ def q_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    base = work_dir(sf_dir, "stream_inc_dedup")
+    base = session_dir(spark, sf_dir, "stream_inc_dedup")
     run_id = uuid.uuid4().hex[:8]
     raw = os.path.join(base, run_id, "raw")
     state = os.path.join(base, run_id, "state")

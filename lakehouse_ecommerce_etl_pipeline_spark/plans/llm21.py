@@ -11,7 +11,6 @@ determinism contract (pinned metadata ⇒ byte-identical re-exports).
 
 from __future__ import annotations
 
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -21,10 +20,8 @@ from lakehouse_ecommerce_etl_pipeline_spark.llm.export import (
     scan_tar_shards,
 )
 from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import (
-    artifact_fresh,
-    artifact_lock,
     load,
-    work_dir,
+    session_artifact,
 )
 from lakehouse_ecommerce_etl_pipeline_spark.plans.registry import register
 
@@ -70,20 +67,21 @@ def q_export_tar_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_scan_tar_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The INGEST side: materialize the corpus as tar shards once
-    (mtime-guarded scratch), scan them back distributedly (binaryFile
+    per session, scan them back distributedly (binaryFile
     → untar mapInPandas), and prove the export→import identity — every
     document comes back byte-for-byte (id from the member name, size
     and md5 from the payload, oracle recomputed from the ORIGINAL
     table)."""
-    src = os.path.join(sf_dir, "documents.parquet")
-    out = os.path.join(work_dir(sf_dir, "tar_shards"), "shards")
-    with artifact_lock(out):
-        if not artifact_fresh(src, out):
-            export_tar_shards(
-                load(spark, sf_dir, "documents").select("doc_id", "text"),
-                n_shards=8,
-                out_dir=out,
-            ).collect()  # 8 stat rows — the action that writes shards
+    out = session_artifact(
+        spark,
+        sf_dir,
+        "tar_shards",
+        lambda p: export_tar_shards(
+            load(spark, sf_dir, "documents").select("doc_id", "text"),
+            n_shards=8,
+            out_dir=p,
+        ).collect(),  # 8 stat rows — the action that writes shards
+    )
     members = scan_tar_shards(spark, out)
     return members.select(
         F.regexp_extract("member_name", r"doc_(\d+)\.txt", 1)

@@ -14,16 +14,13 @@ parser-side identity query re-reads what was actually written.
 
 from __future__ import annotations
 
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import (
-    artifact_fresh,
-    artifact_lock,
     load,
-    work_dir,
+    session_artifact,
 )
 from lakehouse_ecommerce_etl_pipeline_spark.plans.registry import register
 from lakehouse_ecommerce_etl_pipeline_spark.sources.warc import (
@@ -87,22 +84,23 @@ def q_export_warc(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_scan_warc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The INGEST side: materialize the corpus as WARC archives once
-    (mtime-guarded scratch), scan them back distributedly (binaryFile
+    per session, scan them back distributedly (binaryFile
     → Content-Length-framed record walker in mapInPandas), and prove
     the export→import identity — every response record comes back
     byte-for-byte (id parsed from urn:doc record ids, size/md5 from
     the payload, oracle recomputed from the ORIGINAL table). The
     warcinfo preamble records are filtered out by WARC-Type, like a
     real crawl consumer does."""
-    src = os.path.join(sf_dir, "documents.parquet")
-    out = os.path.join(work_dir(sf_dir, "warc_files"), "archives")
-    with artifact_lock(out):
-        if not artifact_fresh(src, out):
-            write_warc_files(
-                load(spark, sf_dir, "documents").select("doc_id", "text"),
-                n_files=_N_FILES,
-                out_dir=out,
-            ).collect()  # stat rows — the action that writes archives
+    out = session_artifact(
+        spark,
+        sf_dir,
+        "warc_archives",
+        lambda p: write_warc_files(
+            load(spark, sf_dir, "documents").select("doc_id", "text"),
+            n_files=_N_FILES,
+            out_dir=p,
+        ).collect(),  # stat rows — the action that writes archives
+    )
     recs = scan_warc(spark, out).filter(F.col("warc_type") == "response")
     return recs.select(
         F.regexp_extract("record_id", r"<urn:doc:(\d+)>", 1)

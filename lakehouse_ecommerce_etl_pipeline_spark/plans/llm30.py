@@ -24,10 +24,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import (
-    artifact_fresh,
-    artifact_lock,
     load,
-    work_dir,
+    session_artifact,
+    session_dir,
 )
 from lakehouse_ecommerce_etl_pipeline_spark.plans.registry import register
 from lakehouse_ecommerce_etl_pipeline_spark.sources.avro import (
@@ -84,6 +83,22 @@ def q_export_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _avro_containers(spark: SparkSession, sf_dir: str) -> str:
+    """The corpus as DEFLATE-coded OCF containers, written once per
+    session."""
+    return session_artifact(
+        spark,
+        sf_dir,
+        "avro_containers",
+        lambda p: write_avro_files(
+            load(spark, sf_dir, "documents").select("doc_id", "text"),
+            n_files=_N_FILES,
+            out_dir=p,
+            codec="deflate",
+        ).collect(),  # stat rows — the action that writes containers
+    )
+
+
 @register(
     "q_scan_avro",
     oracle="""
@@ -94,22 +109,12 @@ def q_export_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_scan_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INGEST side: materialize the corpus as DEFLATE-coded OCF once
-    (mtime-guarded scratch), scan it back distributedly (binaryFile →
+    per session, scan it back distributedly (binaryFile →
     block walker + record decoder in mapInPandas), and prove the
     export→import identity — every record returns byte-for-byte
     through zigzag decode + raw-inflate, oracle recomputed from the
     ORIGINAL table."""
-    src = os.path.join(sf_dir, "documents.parquet")
-    out = os.path.join(work_dir(sf_dir, "avro_files"), "containers")
-    with artifact_lock(out):
-        if not artifact_fresh(src, out):
-            write_avro_files(
-                load(spark, sf_dir, "documents").select("doc_id", "text"),
-                n_files=_N_FILES,
-                out_dir=out,
-                codec="deflate",
-            ).collect()  # stat rows — the action that writes containers
-    recs = scan_avro(spark, out)
+    recs = scan_avro(spark, _avro_containers(spark, sf_dir))
     return recs.select(
         "doc_id",
         F.octet_length("text").cast("long").alias("n_bytes"),
@@ -141,18 +146,9 @@ def q_stream_avro_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     discovery state is checkpointed — the decode itself is stateless."""
     import uuid
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    containers = os.path.join(work_dir(sf_dir, "avro_files"), "containers")
-    with artifact_lock(containers):
-        if not artifact_fresh(src, containers):
-            write_avro_files(
-                load(spark, sf_dir, "documents").select("doc_id", "text"),
-                n_files=_N_FILES,
-                out_dir=containers,
-                codec="deflate",
-            ).collect()
+    containers = _avro_containers(spark, sf_dir)
     run = os.path.join(
-        work_dir(sf_dir, "avro_stream"), uuid.uuid4().hex[:8]
+        session_dir(spark, sf_dir, "avro_stream"), uuid.uuid4().hex[:8]
     )
     sink, ckpt = os.path.join(run, "sink"), os.path.join(run, "ckpt")
     q = (

@@ -20,10 +20,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import (
-    artifact_fresh,
-    artifact_lock,
     load,
-    work_dir,
+    session_artifact,
+    session_dir,
 )
 from lakehouse_ecommerce_etl_pipeline_spark.plans.llm30 import _varlen
 from lakehouse_ecommerce_etl_pipeline_spark.plans.registry import register
@@ -72,6 +71,37 @@ def q_export_protobuf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _doc_streams(spark: SparkSession, sf_dir: str) -> str:
+    """The corpus as delimited .pb streams, written once per session."""
+    return session_artifact(
+        spark,
+        sf_dir,
+        "proto_streams",
+        lambda p: write_proto_files(
+            load(spark, sf_dir, "documents").select("doc_id", "text"),
+            n_files=_N_FILES,
+            out_dir=p,
+        ).collect(),  # stat rows — the action that writes the files
+    )
+
+
+def _nested_streams(spark: SparkSession, sf_dir: str) -> str:
+    """lineitem as nested OrderLines .pb streams, written once per
+    session."""
+    from lakehouse_ecommerce_etl_pipeline_spark.sources.proto import (
+        write_proto_nested_files,
+    )
+
+    return session_artifact(
+        spark,
+        sf_dir,
+        "proto_nested",
+        lambda p: write_proto_nested_files(
+            load(spark, sf_dir, "lineitem"), n_files=_N_FILES, out_dir=p
+        ).collect(),
+    )
+
+
 @register(
     "q_scan_protobuf",
     oracle="""
@@ -82,21 +112,12 @@ def q_export_protobuf(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_scan_protobuf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INGEST side: materialize the corpus as delimited .pb streams
-    once (mtime-guarded scratch), scan back distributedly
+    once per session, scan back distributedly
     (binaryFile → varint walker in mapInPandas), and prove the
     export→import identity — every message returns byte-for-byte
     through tag dispatch + varint decode, oracle recomputed from the
     ORIGINAL table."""
-    src = os.path.join(sf_dir, "documents.parquet")
-    out = os.path.join(work_dir(sf_dir, "proto_files"), "streams")
-    with artifact_lock(out):
-        if not artifact_fresh(src, out):
-            write_proto_files(
-                load(spark, sf_dir, "documents").select("doc_id", "text"),
-                n_files=_N_FILES,
-                out_dir=out,
-            ).collect()  # stat rows — the action that writes the files
-    recs = scan_proto(spark, out)
+    recs = scan_proto(spark, _doc_streams(spark, sf_dir))
     return recs.select(
         "doc_id",
         F.octet_length("text").cast("long").alias("n_bytes"),
@@ -130,17 +151,9 @@ def q_stream_protobuf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_scan_proto,
     )
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    streams = os.path.join(work_dir(sf_dir, "proto_files"), "streams")
-    with artifact_lock(streams):
-        if not artifact_fresh(src, streams):
-            write_proto_files(
-                load(spark, sf_dir, "documents").select("doc_id", "text"),
-                n_files=_N_FILES,
-                out_dir=streams,
-            ).collect()
+    streams = _doc_streams(spark, sf_dir)
     run = os.path.join(
-        work_dir(sf_dir, "proto_stream"), uuid.uuid4().hex[:8]
+        session_dir(spark, sf_dir, "proto_stream"), uuid.uuid4().hex[:8]
     )
     sink, ckpt = os.path.join(run, "sink"), os.path.join(run, "ckpt")
     q = (
@@ -227,13 +240,14 @@ def q_scan_protobuf_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_proto_order_files,
     )
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    out = os.path.join(work_dir(sf_dir, "proto_files"), "orders")
-    with artifact_lock(out):
-        if not artifact_fresh(src, out):
-            write_proto_order_files(
-                load(spark, sf_dir, "orders"), n_files=_N_FILES, out_dir=out
-            ).collect()
+    out = session_artifact(
+        spark,
+        sf_dir,
+        "proto_orders",
+        lambda p: write_proto_order_files(
+            load(spark, sf_dir, "orders"), n_files=_N_FILES, out_dir=p
+        ).collect(),
+    )
     return scan_proto_orders(spark, out)
 
 
@@ -316,18 +330,9 @@ def q_scan_protobuf_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     accepting packed and expanded repeated encodings per spec."""
     from lakehouse_ecommerce_etl_pipeline_spark.sources.proto import (
         scan_proto_nested,
-        write_proto_nested_files,
     )
 
-    src = os.path.join(sf_dir, "lineitem.parquet")
-    out = os.path.join(work_dir(sf_dir, "proto_files"), "nested")
-    with artifact_lock(out):
-        if not artifact_fresh(src, out):
-            write_proto_nested_files(
-                load(spark, sf_dir, "lineitem"), n_files=_N_FILES,
-                out_dir=out,
-            ).collect()
-    return scan_proto_nested(spark, out)
+    return scan_proto_nested(spark, _nested_streams(spark, sf_dir))
 
 
 @register(
@@ -358,19 +363,11 @@ def q_stream_protobuf_nested_ingest(
 
     from lakehouse_ecommerce_etl_pipeline_spark.sources.proto import (
         stream_scan_proto_nested,
-        write_proto_nested_files,
     )
 
-    src = os.path.join(sf_dir, "lineitem.parquet")
-    streams = os.path.join(work_dir(sf_dir, "proto_files"), "nested")
-    with artifact_lock(streams):
-        if not artifact_fresh(src, streams):
-            write_proto_nested_files(
-                load(spark, sf_dir, "lineitem"), n_files=_N_FILES,
-                out_dir=streams,
-            ).collect()
+    streams = _nested_streams(spark, sf_dir)
     run = os.path.join(
-        work_dir(sf_dir, "proto_stream_nested"), uuid.uuid4().hex[:8]
+        session_dir(spark, sf_dir, "proto_stream_nested"), uuid.uuid4().hex[:8]
     )
     sink, ckpt = os.path.join(run, "sink"), os.path.join(run, "ckpt")
     q = (
@@ -443,41 +440,16 @@ def q_protobuf_corrupt_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         decode_delimited_tolerant,
     )
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    pristine = os.path.join(work_dir(sf_dir, "proto_files"), "streams")
-    with artifact_lock(pristine):
-        if not artifact_fresh(src, pristine):
-            write_proto_files(
-                load(spark, sf_dir, "documents").select("doc_id", "text"),
-                n_files=_N_FILES,
-                out_dir=pristine,
-            ).collect()
-    corrupt = os.path.join(work_dir(sf_dir, "proto_files"), "corrupt")
-    with artifact_lock(corrupt):
-        if not artifact_fresh(src, corrupt):
-            # Copy under the PRISTINE lock too (consistent corrupt →
-            # pristine order, different lock files): a concurrent
-            # builder rebuilding pristine under its own lock must not
-            # be read mid-rebuild.  Double-check freshness inside.
-            with artifact_lock(pristine):
-                if not artifact_fresh(src, pristine):
-                    write_proto_files(
-                        load(spark, sf_dir, "documents").select(
-                            "doc_id", "text"
-                        ),
-                        n_files=_N_FILES,
-                        out_dir=pristine,
-                    ).collect()
-                os.makedirs(corrupt, exist_ok=True)
-                for f in sorted(os.listdir(pristine)):
-                    if not f.endswith(".pb"):
-                        continue
-                    dst = os.path.join(corrupt, f)
-                    shutil.copyfile(os.path.join(pristine, f), dst)
-            victim = os.path.join(corrupt, f"part_{_N_FILES - 1:05d}.pb")
-            size = os.path.getsize(victim)
-            with open(victim, "rb+") as fh:
-                fh.truncate(size // 2)
+    def corrupt_copy(out: str) -> None:
+        pristine = _doc_streams(spark, sf_dir)
+        for f in sorted(os.listdir(pristine)):
+            if f.endswith(".pb"):
+                shutil.copyfile(os.path.join(pristine, f), os.path.join(out, f))
+        victim = os.path.join(out, f"part_{_N_FILES - 1:05d}.pb")
+        with open(victim, "rb+") as fh:
+            fh.truncate(os.path.getsize(victim) // 2)
+
+    corrupt = session_artifact(spark, sf_dir, "proto_corrupt", corrupt_copy)
 
     import pandas as pd
     from pyspark.sql import types as T

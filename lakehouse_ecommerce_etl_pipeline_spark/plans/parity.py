@@ -6,7 +6,6 @@ order_items/orders, part plays products.
 
 from __future__ import annotations
 
-import os
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -19,10 +18,8 @@ from lakehouse_ecommerce_etl_pipeline_spark.operators.setops import (
 )
 from lakehouse_ecommerce_etl_pipeline_spark.operators.validate import split_valid_invalid
 from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import (
-    artifact_fresh,
-    artifact_lock,
     load,
-    work_dir,
+    session_artifact,
 )
 from lakehouse_ecommerce_etl_pipeline_spark.plans.registry import register
 from lakehouse_ecommerce_etl_pipeline_spark.sources.files import read_csv
@@ -44,15 +41,16 @@ def q_scan_csv(spark, sf_dir):
     """S1 — CSV scan with header + declared schema
     (reference: product_etl.py:42-52). Materializes nation as CSV, then
     scans it back with the declared StructType (no inference)."""
-    src = os.path.join(sf_dir, "nation.parquet")
-    # leaf kept OUT of work_dir (which mkdirs its path — a pre-created
-    # empty leaf would read as a fresh artifact)
-    out = os.path.join(work_dir(sf_dir, "csv"), "nation")
-    with artifact_lock(out):
-        if not artifact_fresh(src, out):
-            load(spark, sf_dir, "nation").coalesce(1).write.mode(
-                "overwrite"
-            ).option("header", "true").csv(out)
+    out = session_artifact(
+        spark,
+        sf_dir,
+        "csv_nation",
+        lambda p: load(spark, sf_dir, "nation")
+        .coalesce(1)
+        .write.mode("overwrite")
+        .option("header", "true")
+        .csv(p),
+    )
     return read_csv(spark, out, NATION_SCHEMA)
 
 

@@ -5,7 +5,6 @@ exercised with oracle-checkable semantics.
 
 from __future__ import annotations
 
-import os
 
 import pandas as pd
 from pyspark.sql import Window
@@ -13,10 +12,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import (
-    artifact_fresh,
-    artifact_lock,
     load,
-    work_dir,
+    session_artifact,
 )
 from lakehouse_ecommerce_etl_pipeline_spark.plans.registry import register
 
@@ -25,11 +22,12 @@ from lakehouse_ecommerce_etl_pipeline_spark.plans.registry import register
 def q_scan_orc(spark, sf_dir):
     """ORC source roundtrip — same columnar pushdown/pruning machinery
     as parquet (Spark-native reader)."""
-    src = os.path.join(sf_dir, "orders.parquet")
-    out = os.path.join(work_dir(sf_dir, "orc"), "orders")
-    with artifact_lock(out):
-        if not artifact_fresh(src, out):
-            load(spark, sf_dir, "orders").write.mode("overwrite").orc(out)
+    out = session_artifact(
+        spark,
+        sf_dir,
+        "orc_orders",
+        lambda p: load(spark, sf_dir, "orders").write.mode("overwrite").orc(p),
+    )
     return spark.read.orc(out)
 
 
@@ -49,13 +47,15 @@ JSON_SCHEMA = T.StructType(
 def q_scan_json(spark, sf_dir):
     """JSON-lines source with declared schema (no inference pass).
     Doubles survive exactly: Spark writes shortest-roundtrip reprs."""
-    src = os.path.join(sf_dir, "orders.parquet")
-    out = os.path.join(work_dir(sf_dir, "json"), "orders")
-    with artifact_lock(out):
-        if not artifact_fresh(src, out):
-            load(spark, sf_dir, "orders").select(
-                "o_orderkey", "o_orderstatus", "o_totalprice"
-            ).write.mode("overwrite").json(out)
+    out = session_artifact(
+        spark,
+        sf_dir,
+        "json_orders",
+        lambda p: load(spark, sf_dir, "orders")
+        .select("o_orderkey", "o_orderstatus", "o_totalprice")
+        .write.mode("overwrite")
+        .json(p),
+    )
     return spark.read.schema(JSON_SCHEMA).json(out)
 
 

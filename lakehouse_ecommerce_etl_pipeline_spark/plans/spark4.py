@@ -17,7 +17,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import load, work_dir
+from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import (
+    load,
+    session_dir,
+)
 from lakehouse_ecommerce_etl_pipeline_spark.plans.registry import register
 from lakehouse_ecommerce_etl_pipeline_spark.sources.pydatasource import (
     register_jsonl_sink,
@@ -45,11 +48,8 @@ def q_python_datasource_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     atomically replaces its own part file, so speculative execution
     and retries stay exactly-once at the file level."""
     register_jsonl_sink(spark)
-    # session-keyed: a write-path demonstration re-executed per call
-    path = os.path.join(
-        work_dir(sf_dir, "pyds_write", spark.sparkContext.applicationId),
-        "orders_jsonl",
-    )
+    # a write-path demonstration, re-executed per call
+    path = os.path.join(session_dir(spark, sf_dir, "pyds_write"), "orders_jsonl")
     (
         load(spark, sf_dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -193,8 +193,8 @@ def q_python_datasource_stream_write(
     register_jsonl_sink(spark)
     src_path = events_parquet_path(spark, sf_dir)
     run = uuid.uuid4().hex[:8]
-    out = os.path.join(work_dir(sf_dir, "pyds_stream_write"), run, "events")
-    ckpt = os.path.join(work_dir(sf_dir, "pyds_stream_write"), run, "ckpt")
+    base = session_dir(spark, sf_dir, "pyds_stream_write", run)
+    out, ckpt = os.path.join(base, "events"), os.path.join(base, "ckpt")
     from lakehouse_ecommerce_etl_pipeline_spark.streaming.windows import (
         _as_stream_dir,
     )

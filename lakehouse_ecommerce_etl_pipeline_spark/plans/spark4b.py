@@ -25,7 +25,6 @@ positive doubles); the state-store counts are exact LONGs.
 
 from __future__ import annotations
 
-import os
 import shutil
 import uuid
 from collections.abc import Iterator
@@ -34,12 +33,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import (
-    artifact_fresh,
-    artifact_lock,
     load,
-    session_marker_ok,
-    work_dir,
-    write_session_marker,
+    session_artifact,
 )
 from lakehouse_ecommerce_etl_pipeline_spark.plans.registry import register
 
@@ -221,16 +216,14 @@ def q_statestore_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     fully drained complete-mode count must equal the batch aggregate
     — which is exactly what the oracle checks.
 
-    The checkpoint guard is SESSION-scoped, not just mtime-scoped: a
-    state checkpoint is only readable from the session that ran (some)
-    streaming query — ``spark.read.format("statestore")`` needs the
-    StateStoreCoordinator RPC endpoint, which a fresh session hasn't
-    created — and an older Spark/provider may have left an unreadable
-    layout behind. So the marker records the applicationId, a foreign
-    or stale marker triggers a cheap re-drain, and the state read is
+    The checkpoint is a session artifact: a state checkpoint is only
+    readable from the session that ran (some) streaming query —
+    ``spark.read.format("statestore")`` needs the StateStoreCoordinator
+    RPC endpoint, which a fresh session hasn't created — so each
+    session drains once into its own checkpoint. The state read is
     validated eagerly with rebuild-once self-heal: a corrupted
-    checkpoint (judge-reproduced CANNOT_LOAD_STATE_STORE, round 2)
-    rebuilds instead of failing.
+    checkpoint (CANNOT_LOAD_STATE_STORE) rebuilds instead of
+    failing.
 
     100 TB: the reader parallelizes over state-store partitions (one
     task per shuffle partition of the owning query) and never touches
@@ -241,17 +234,8 @@ def q_statestore_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     events_path = f"{sf_dir}/events.parquet"
-    # session-keyed: a state checkpoint is only readable by the session
-    # that drained it (StateStoreCoordinator), so sharing it across
-    # processes invites exactly the stale-checkpoint failure this
-    # query once had — each session pays one cheap drain instead
-    ck = os.path.join(
-        work_dir(sf_dir, "statestore_agg", spark.sparkContext.applicationId),
-        "ckpt",
-    )
-    marker = ck + ".done"
 
-    def drain() -> None:
+    def drain(ck: str) -> None:
         shutil.rmtree(ck, ignore_errors=True)
         schema = spark.read.parquet(events_path).schema
         stream = (
@@ -270,9 +254,8 @@ def q_statestore_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-        write_session_marker(spark, marker)
 
-    def read_state() -> DataFrame:
+    def read_state(ck: str) -> DataFrame:
         st = spark.read.format("statestore").load(ck)
         out = st.select(
             F.col("key.event_type").alias("event_type"),
@@ -281,19 +264,13 @@ def q_statestore_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         out.take(1)  # validate NOW — state errors surface lazily
         return out
 
-    with artifact_lock(ck):
-        if not (
-            artifact_fresh(events_path, marker)
-            and session_marker_ok(spark, marker)
-        ):
-            drain()
+    ck = session_artifact(spark, sf_dir, "statestore_agg", drain)
     try:
-        return read_state()
+        return read_state(ck)
     except Exception:
         # rebuild-once: corrupted/unreadable checkpoint self-heals
-        with artifact_lock(ck):
-            drain()
-        return read_state()
+        drain(ck)
+        return read_state(ck)
 
 
 @register(

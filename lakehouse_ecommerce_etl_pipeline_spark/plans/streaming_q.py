@@ -249,7 +249,7 @@ def q_stream_late_drop(spark, sf_dir):
     streaming/late.py module docstring."""
     from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import (
         load,
-        work_dir,
+        session_dir,
     )
     from lakehouse_ecommerce_etl_pipeline_spark.streaming.late import (
         windowed_counts_late_drop,
@@ -258,5 +258,5 @@ def q_stream_late_drop(spark, sf_dir):
     return windowed_counts_late_drop(
         spark,
         load(spark, sf_dir, "events"),
-        work_dir(sf_dir, "stream_late_drop"),
+        session_dir(spark, sf_dir, "stream_late_drop"),
     )

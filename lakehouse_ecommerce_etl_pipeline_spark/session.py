@@ -41,6 +41,17 @@ def delta_available() -> bool:
     return importlib.util.find_spec("delta") is not None
 
 
+def _default_driver_mem() -> str:
+    """Half the machine's physical memory, at most 48g. The local
+    driver JVM holds the executors too; with a heap ceiling above
+    physical memory the collector keeps growing the heap instead of
+    collecting, until the kernel's OOM killer ends the JVM (seen: a
+    48g-ceiling pytest JVM killed at 15.7 GB resident on a 16 GB
+    host)."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(2, min(48, total // 2 // 2**30))}g"
+
+
 def get_spark(
     app_name: str = DEFAULT_APP_NAME,
     master: str | None = None,
@@ -106,7 +117,10 @@ def get_spark(
         # (unix_micros, window(), watermarks) requires TIMESTAMP, and the
         # DuckDB oracle compares equal under the pinned-UTC session
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()),
+        )
     )
 
     if delta_available():

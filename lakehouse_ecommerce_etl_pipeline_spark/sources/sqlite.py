@@ -63,45 +63,35 @@ _ORDERS_SCHEMA = T.StructType(
 )
 
 
-def build_orders_db(sf_dir: str, work_dir_fn, lock_fn, fresh_fn) -> str:
-    """Materialize ``orders`` as a SQLite database under scratch (the
-    operational-store stand-in), once per scale factor. Timestamps are
-    stored as ISO-8601 TEXT — SQLite's own convention (it has no
-    datetime storage class) and the round-trip the reader must undo.
-    Driver-side build: this is the FIXTURE (the database exists before
-    Spark enters the picture in production); the distributed part is
-    the read. Timestamps carry microseconds (``.%f``) so sub-second
-    precision survives the TEXT round-trip; the v2 suffix invalidates
-    second-granular caches from earlier builds."""
-    db = os.path.join(work_dir_fn(sf_dir, "sqlite"), "orders_v2.db")
+def build_orders_db(sf_dir: str, db: str) -> None:
+    """Materialize ``orders`` as a SQLite database at ``db`` (the
+    operational-store stand-in). Timestamps are stored as ISO-8601
+    TEXT — SQLite's own convention (it has no datetime storage class)
+    and the round-trip the reader must undo. Driver-side build: this
+    is the FIXTURE (the database exists before Spark enters the
+    picture in production); the distributed part is the read.
+    Timestamps carry microseconds (``.%f``) so sub-second precision
+    survives the TEXT round-trip."""
     src = os.path.join(sf_dir, "orders.parquet")
-    with lock_fn(db):
-        if fresh_fn(src, db):
-            return db
-        tmp = db + ".tmp"
-        if os.path.exists(tmp):
-            os.remove(tmp)
-        pdf = pd.read_parquet(src, columns=_ORDERS_COLS)
-        pdf = pdf.assign(
-            o_orderdate=pdf["o_orderdate"].dt.strftime("%Y-%m-%d %H:%M:%S.%f")
+    pdf = pd.read_parquet(src, columns=_ORDERS_COLS)
+    pdf = pdf.assign(
+        o_orderdate=pdf["o_orderdate"].dt.strftime("%Y-%m-%d %H:%M:%S.%f")
+    )
+    con = sqlite3.connect(db)
+    try:
+        con.execute(
+            "CREATE TABLE orders ("
+            "o_orderkey INTEGER PRIMARY KEY, o_custkey INTEGER, "
+            "o_orderstatus TEXT, o_totalprice REAL, "
+            "o_orderdate TEXT, o_orderpriority TEXT)"
         )
-        con = sqlite3.connect(tmp)
-        try:
-            con.execute(
-                "CREATE TABLE orders ("
-                "o_orderkey INTEGER PRIMARY KEY, o_custkey INTEGER, "
-                "o_orderstatus TEXT, o_totalprice REAL, "
-                "o_orderdate TEXT, o_orderpriority TEXT)"
-            )
-            con.executemany(
-                "INSERT INTO orders VALUES (?, ?, ?, ?, ?, ?)",
-                pdf.itertuples(index=False, name=None),
-            )
-            con.commit()
-        finally:
-            con.close()
-        os.replace(tmp, db)
-    return db
+        con.executemany(
+            "INSERT INTO orders VALUES (?, ?, ?, ?, ?, ?)",
+            pdf.itertuples(index=False, name=None),
+        )
+        con.commit()
+    finally:
+        con.close()
 
 
 def range_clauses(

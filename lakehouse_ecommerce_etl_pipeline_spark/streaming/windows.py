@@ -66,8 +66,11 @@ def state_sized_shuffle(spark: SparkSession, *src_paths: str):
     ``SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS`` sets it explicitly.
     Results are partitioning-independent (integer-lattice aggregates /
     join rows; oracle-hash-checked).  Restores the session conf on
-    exit; checkpoints created under the old value keep it (Spark reads
-    the count from the checkpoint), so re-drains stay consistent."""
+    exit, unsetting it again when it was unset on entry; checkpoints
+    created under the old value keep it (Spark reads the count from
+    the checkpoint), so re-drains stay consistent.  Input bytes are
+    summed over every file below each source path, nested
+    directories included."""
     env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS")
     if env:
         n = max(1, int(env))
@@ -76,8 +79,10 @@ def state_sized_shuffle(spark: SparkSession, *src_paths: str):
         for p in src_paths:
             try:
                 if os.path.isdir(p):
-                    for f in os.listdir(p):
-                        total += os.path.getsize(os.path.join(p, f))
+                    for d, _, files in os.walk(p):
+                        total += sum(
+                            os.path.getsize(os.path.join(d, f)) for f in files
+                        )
                 else:
                     total += os.path.getsize(p)
             except OSError:
@@ -89,7 +94,9 @@ def state_sized_shuffle(spark: SparkSession, *src_paths: str):
     try:
         yield
     finally:
-        if old is not None:
+        if old is None:
+            spark.conf.unset("spark.sql.shuffle.partitions")
+        else:
             spark.conf.set("spark.sql.shuffle.partitions", old)
 
 

@@ -64,15 +64,14 @@ EXPECTED = {
     "plans/lakehouse.py": (1, "sample", "toPandas of the bounded Excel-sheet fixture (ingest demo)"),
     "plans/llm21.py": (1, "sink-stats", "the action that writes tar shards (shard-count rows)"),
     "plans/llm24.py": (1, "sink-stats", "the action that writes WARC archives"),
-    "plans/llm30.py": (2, "sink-stats", "the actions that write AVI containers"),
+    "plans/llm30.py": (1, "sink-stats", "the action that writes the Avro containers"),
     "plans/llm37.py": (2, "scalar|loop", "O(k) widening-gate counts + per-iteration persist discipline"),
-    "plans/llm38.py": (7, "sink-stats", "protobuf export/ingest: per-file write actions (file-count rows)"),
+    "plans/llm38.py": (3, "sink-stats", "protobuf export/ingest: per-file write actions (file-count rows)"),
     "plans/llm6.py": (2, "sample", "1-row query-vector collects"),
     "plans/llm7.py": (1, "scalar", "candidate count sizing the negative-sampling threshold"),
     "sinks/catalog.py": (1, "scalar", "COUNT(*) validation scalar (reference parity O4)"),
     "sources/table.py": (1, "scalar", ".rdd.getNumPartitions() sizing the zorder compaction's range partitioner — a maintenance op on a RAW parquet read (no upstream shuffles to double-execute)"),
     "sinks/merge.py": (2, "scalar", "duplicate-key guard: limit(1).count() existence probe"),
-    "sinks/processed_log.py": (1, "scalar", "marker-row existence count"),
     "sinks/quarantine.py": (1, "scalar", "rejected-row count returned to the caller (reference parity K3)"),
     "streaming/incremental_dedup.py": (1, "scalar", "per-batch survivor existence probe inside foreachBatch"),
 }

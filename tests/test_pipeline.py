@@ -288,3 +288,34 @@ def test_run_dataset_job_count(spark, raw_zone):
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     print("order_items run_dataset jobs:", n_jobs)
     assert n_jobs <= RUN_DATASET_MAX_JOBS
+
+
+def test_processed_log_runs_no_spark_jobs(spark, tmp_path):
+    """Marking and checking a processed file is one marker file per
+    file: a create and a listing, never a Spark job."""
+    from lakehouse_ecommerce_etl_pipeline_spark.sinks import processed_log
+
+    base = str(tmp_path / "processed")
+    sc = spark.sparkContext
+    group = "test_processed_log_runs_no_spark_jobs"
+    sc.setJobGroup(group, "processed_log mark + check")
+    try:
+        assert processed_log.processed_files(spark, base) == set()
+        assert not processed_log.is_processed(spark, base, "orders", "a.xlsx")
+        processed_log.mark_processed(spark, base, "orders", "a.xlsx")
+        processed_log.mark_processed(spark, base, "orders", "b.xlsx")
+        processed_log.mark_processed(spark, base, "products", "a.xlsx")
+        processed_log.mark_processed(spark, base, "orders", "a.xlsx")  # re-mark
+        assert processed_log.is_processed(spark, base, "orders", "a.xlsx")
+        assert not processed_log.is_processed(spark, base, "order_items", "a.xlsx")
+        assert processed_log.processed_files(spark, base) == {
+            ("orders", "a.xlsx"),
+            ("orders", "b.xlsx"),
+            ("products", "a.xlsx"),
+        }
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    marker_dir = os.path.join(processed_log.log_path(base), "orders")
+    assert sorted(os.listdir(marker_dir)) == ["a.xlsx", "b.xlsx"]

@@ -1,31 +1,23 @@
-"""Scratch-layer hardening: session-scoped statestore checkpoints
-self-heal, and shared-artifact builders serialize across processes.
-
-Round-2 judge finding: a warm (mtime-fresh) streaming checkpoint built
-by ANOTHER session made ``q_statestore_read`` throw
-CANNOT_LOAD_STATE_STORE — the mtime guard can't see that a state
-checkpoint is only readable from the session that ran a streaming
-query. The fix is a two-layer defense tested here: (1) the marker
-records the builder's applicationId so a foreign marker re-drains, and
-(2) the state read is validated eagerly with a rebuild-once fallback
-so even a deliberately corrupted checkpoint self-heals.
+"""Session-scoped scratch artifacts: ``plans/_helpers.session_artifact``
+builds each (application, data dir, name) once, keeps data dirs that
+share a basename apart, and retries a build that raised; the
+statestore checkpoint, one such artifact, self-heals when its bytes
+are corrupted.
 """
 
 from __future__ import annotations
 
-import multiprocessing
 import os
 import shutil
 import sys
+
+import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from lakehouse_ecommerce_etl_pipeline_spark.plans import REGISTRY
 from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import (
-    artifact_lock,
-    session_marker_ok,
-    work_dir,
-    write_session_marker,
+    session_artifact,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -50,69 +42,58 @@ def _statestore_rows(spark):
     return {r["event_type"]: r["n_events"] for r in df.collect()}
 
 
-def _ck_path(spark) -> str:
-    return os.path.join(
-        work_dir(SF, "statestore_agg", spark.sparkContext.applicationId),
-        "ckpt",
-    )
-
-
-def test_statestore_foreign_marker_redrains(spark):
-    """A marker written by a DIFFERENT session must not be trusted —
-    the exact cross-session failure the round-2 judge reproduced."""
-    ck = _ck_path(spark)
-    marker = ck + ".done"
-    # simulate a checkpoint left by another process: foreign app id,
-    # fresh mtime (the old mtime-only guard would skip the drain)
-    assert _statestore_rows(spark) == _expected_counts(spark)
-    with open(marker, "w") as fh:
-        fh.write("app-from-some-other-session\n")
-    assert not session_marker_ok(spark, marker)
-    assert _statestore_rows(spark) == _expected_counts(spark)
-    # after the run the marker belongs to THIS session again
-    assert session_marker_ok(spark, marker)
-
-
 def test_statestore_poisoned_checkpoint_self_heals(spark):
-    """Marker fresh and session-local, but the checkpoint bytes are
-    garbage → the eager validation must catch it and rebuild once."""
-    ck = _ck_path(spark)
-    marker = ck + ".done"
+    """The checkpoint is already built in this session, but its bytes
+    are garbage → the eager validation must catch it and rebuild once."""
     assert _statestore_rows(spark) == _expected_counts(spark)
-    # poison: wipe the state dir but keep commits/offsets + the marker
+    ck = session_artifact(spark, SF, "statestore_agg", lambda p: None)
+    # poison: wipe the state dir but keep commits/offsets
     shutil.rmtree(os.path.join(ck, "state"), ignore_errors=True)
-    write_session_marker(spark, marker)  # marker says "fine"
     assert _statestore_rows(spark) == _expected_counts(spark)
 
 
-def _lock_worker(path: str, log: str, n: int) -> None:
-    for _ in range(n):
-        with artifact_lock(path):
-            # read-modify-write a counter; without the lock, concurrent
-            # writers lose increments
-            try:
-                with open(log) as fh:
-                    v = int(fh.read().strip() or 0)
-            except OSError:
-                v = 0
-            with open(log, "w") as fh:
-                fh.write(str(v + 1))
+def test_session_artifact_builds_once_per_key(spark, tmp_path):
+    sf = str(tmp_path / "sf")
+    calls = []
+
+    def build(path):
+        calls.append(path)
+        with open(os.path.join(path, "part"), "w") as fh:
+            fh.write("x")
+
+    first = session_artifact(spark, sf, "thing", build)
+    for _ in range(3):
+        assert session_artifact(spark, sf, "thing", build) == first
+    assert calls == [first]
+    assert os.listdir(first) == ["part"]
+    # another name over the same data dir is another artifact
+    other = session_artifact(spark, sf, "other", build)
+    assert other != first and calls == [first, other]
 
 
-def test_artifact_lock_serializes_processes(tmp_path):
-    """The flock actually excludes across PROCESSES (threads share the
-    GIL and would pass a broken lock)."""
-    target = str(tmp_path / "artifact")
-    log = str(tmp_path / "counter")
-    n, workers = 50, 4
-    procs = [
-        multiprocessing.Process(target=_lock_worker, args=(target, log, n))
-        for _ in range(workers)
-    ]
-    for p in procs:
-        p.start()
-    for p in procs:
-        p.join()
-    assert all(p.exitcode == 0 for p in procs)
-    with open(log) as fh:
-        assert int(fh.read()) == n * workers
+def test_session_artifact_keeps_same_basename_dirs_apart(spark, tmp_path):
+    a, b = str(tmp_path / "a" / "sfz"), str(tmp_path / "b" / "sfz")
+    built = []
+    pa = session_artifact(spark, a, "thing", built.append)
+    pb = session_artifact(spark, b, "thing", built.append)
+    assert pa != pb and built == [pa, pb]
+
+
+def test_session_artifact_retries_a_failed_build(spark, tmp_path):
+    sf = str(tmp_path / "sf")
+    attempts = []
+
+    def flaky(path):
+        attempts.append(path)
+        if len(attempts) == 1:
+            open(os.path.join(path, "half-written"), "w").close()
+            raise OSError("disk hiccup")
+        open(os.path.join(path, "done"), "w").close()
+
+    with pytest.raises(OSError):
+        session_artifact(spark, sf, "thing", flaky)
+    path = session_artifact(spark, sf, "thing", flaky)
+    assert len(attempts) == 2
+    assert os.listdir(path) == ["done"]  # rebuilt into an emptied dir
+    session_artifact(spark, sf, "thing", flaky)
+    assert len(attempts) == 2

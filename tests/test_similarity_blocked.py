@@ -97,3 +97,74 @@ def test_embedding_near_dup_zero_vectors_never_pair(spark, tmp_path):
     clus = {r.vec_id: r.cluster for r in
             q_embedding_clusters(spark, str(sf)).collect()}
     assert clus[100001] == 100001 and clus[100002] == 100002
+
+
+# The rep maps behind the shared vector/document rep artifacts carry
+# the payload column through the rep join itself: one output row per
+# input row, duplicate ids or not.
+
+
+def test_vector_reps_keep_vec_no_fanout_on_duplicate_ids(spark):
+    from lakehouse_ecommerce_etl_pipeline_spark.llm.similarity import (
+        distinct_vector_reps,
+    )
+
+    rows = [
+        (1, [1.0, 0.0]),
+        (1, [1.0, 0.0]),  # duplicate id — an id re-join would fan out
+        (2, [1.0, 0.0]),
+        (3, [0.0, 0.0]),  # zero-norm keeps itself as rep
+    ]
+    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
+    mm, rep_vectors = distinct_vector_reps(df, keep_vec=True)
+    out = mm.select("vec_id", "rep_id", "embedding").collect()
+    assert len(out) == len(rows), "one output row per input row"
+    by = {(r.vec_id, tuple(r.embedding)): r.rep_id for r in out}
+    assert by[(1, (1.0, 0.0))] == 1
+    assert by[(2, (1.0, 0.0))] == 1
+    assert by[(3, (0.0, 0.0))] == 3
+    # rep_vectors derives from the member map — no id join either
+    reps = {r.vec_id for r in rep_vectors.collect()}
+    assert reps == {1, 3}
+
+    # parity with the default path on a unique-id source
+    uniq = spark.createDataFrame(rows[1:], ["vec_id", "embedding"])
+    mm_default, _ = distinct_vector_reps(uniq)
+    mm_kept, _ = distinct_vector_reps(uniq, keep_vec=True)
+    assert sorted(
+        (r.vec_id, r.rep_id) for r in mm_default.collect()
+    ) == sorted((r.vec_id, r.rep_id) for r in mm_kept.collect())
+
+
+def test_token_set_reps_keep_text_no_fanout_on_duplicate_ids(spark):
+    from lakehouse_ecommerce_etl_pipeline_spark.llm.components import (
+        token_set_reps,
+    )
+
+    rows = [
+        (1, "the quick fox"),
+        (1, "the quick fox"),  # duplicate id
+        (2, "fox quick the"),  # same token set → rep 1
+        (3, ""),  # empty token set keeps itself
+    ]
+    df = spark.createDataFrame(rows, ["doc_id", "text"])
+    out = token_set_reps(df, "doc_id", "text", keep_text=True).collect()
+    assert len(out) == len(rows), "one output row per input row"
+    assert {r.doc_id for r in out} == {1, 2, 3}
+    by = {r.doc_id: r.rep_id for r in out}
+    assert by[2] == 1 and by[3] == 3
+    assert all(hasattr(r, "text") for r in out)
+
+    # parity with the default path on a unique-id source
+    uniq = spark.createDataFrame(rows[1:], ["doc_id", "text"])
+    a = sorted(
+        (r.doc_id, r.rep_id)
+        for r in token_set_reps(uniq, "doc_id", "text").collect()
+    )
+    b = sorted(
+        (r.doc_id, r.rep_id)
+        for r in token_set_reps(
+            uniq, "doc_id", "text", keep_text=True
+        ).collect()
+    )
+    assert a == b

@@ -62,7 +62,7 @@ def test_rows_outside_bounds_still_read(spark):
 
     inset = scan_sqlite(
         spark,
-        _db(SF0001),
+        _db(spark, SF0001),
         "orders",
         _ORDERS_SCHEMA,
         range_clauses("o_orderkey", 500, 900, 4),

@@ -104,3 +104,29 @@ def test_state_sized_shuffle_sizes_and_restores(spark):
     finally:
         del os.environ["SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS"]
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_state_sized_shuffle_unsets_a_key_unset_on_entry(spark, tmp_path):
+    """A shuffle-partitions key that was unset on entry is unset again
+    on exit instead of keeping the stream-sized value, and the input is
+    sized over nested directories too."""
+    from lakehouse_ecommerce_etl_pipeline_spark.streaming.windows import (
+        state_sized_shuffle,
+    )
+
+    key = "spark.sql.shuffle.partitions"
+    # 24 MiB (sparse) in a nested directory: three 8 MiB units
+    nested = tmp_path / "src" / "date=2025-04-01"
+    nested.mkdir(parents=True)
+    with open(nested / "part-0.parquet", "wb") as fh:
+        fh.truncate(24 << 20)
+    before = spark.conf.get(key)
+    spark.conf.unset(key)
+    try:
+        with state_sized_shuffle(spark, str(tmp_path / "src")):
+            assert int(spark.conf.get(key)) == min(
+                3, spark.sparkContext.defaultParallelism
+            )
+        assert spark.conf.get(key, None) is None
+    finally:
+        spark.conf.set(key, before)
