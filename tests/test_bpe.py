@@ -75,3 +75,24 @@ def test_bpe_counts_monotone_and_symbols_grow(spark):
         assert len(r["merged"]) >= 2
     # merged symbols are unique across steps
     assert len({r["merged"] for r in rows}) == len(rows)
+
+
+def test_bpe_negative_maintained_pair_count_raises(spark, monkeypatch):
+    """The maintained pair counts only ever subtract occurrences they
+    added; a delta fold that subtracts more (here: every old pair
+    counted twice) must raise, not drop the pair silently."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    import lakehouse_ecommerce_etl_pipeline_spark.llm.bpe as bpe
+
+    pairs = bpe._pairs_or_empty
+
+    def doubled_old(col):
+        p = pairs(col)
+        return F.concat(p, p) if col == "s_old" else p
+
+    monkeypatch.setattr(bpe, "_pairs_or_empty", doubled_old)
+    docs = spark.createDataFrame([("abab ab",), ("ab cd",)], "text string")
+    with pytest.raises(RuntimeError, match="went negative"):
+        train_bpe(spark, docs, 2)

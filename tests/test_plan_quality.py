@@ -9,11 +9,36 @@ from __future__ import annotations
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from lakehouse_ecommerce_etl_pipeline_spark.plans.registry import REGISTRY
 
 SF0001 = "/root/testdata/sf0.001"
+
+
+@pytest.fixture(scope="module")
+def registry_walk(spark):
+    """Build every registered query once for the registry-wide gates
+    of this module: per name, the output schema (or the exception the
+    query function raised) and the executed plan text (or the
+    exception planning raised). Each query function runs its eager
+    work (fixture builds, spills, streaming drains, write demos) once,
+    not once per gate. Only schemas and plan strings are kept."""
+    walk = {}
+    for name in sorted(REGISTRY):
+        try:
+            df = REGISTRY[name].fn(spark, SF0001)
+        except Exception as exc:  # noqa: BLE001 — each gate reports it
+            walk[name] = (exc, exc)
+            continue
+        try:
+            plan = df._jdf.queryExecution().executedPlan().toString()
+        except Exception as exc:  # noqa: BLE001 — each gate reports it
+            plan = exc
+        walk[name] = (df.schema, plan)
+    return walk
 
 
 def _plan(spark, name: str) -> str:
@@ -139,7 +164,7 @@ SINGLE_PARTITION_WINDOW_ALLOWLIST = {
 }
 
 
-def test_registry_has_no_single_partition_window(spark):
+def test_registry_has_no_single_partition_window(registry_walk):
     """The boundary-cut de-weak contract, enforced over the ENTIRE
     registry (VERDICT r7 task 2 — the former 13-consumer scope let
     q_decision_stump and q_surrogate_keys escape): no registered
@@ -168,12 +193,9 @@ def test_registry_has_no_single_partition_window(spark):
     offenders = []
     cartesians = []
     errors = []
-    for name in sorted(REGISTRY):
-        try:
-            df = REGISTRY[name].fn(spark, SF0001)
-            plan = df._jdf.queryExecution().executedPlan().toString()
-        except Exception as exc:  # noqa: BLE001 — collect, then fail
-            errors.append(f"{name}: {exc}")
+    for name, (_, plan) in sorted(registry_walk.items()):
+        if isinstance(plan, Exception):
+            errors.append(f"{name}: {plan}")
             continue
         if window_over_single_partition(plan):
             offenders.append(name)
@@ -844,7 +866,7 @@ def test_numeric_portability_registry_clean_rule3():
     assert bad == [], bad
 
 
-def test_no_decimal_typed_output_columns(spark):
+def test_no_decimal_typed_output_columns(registry_walk):
     """The unifying lesson of the r9 (q_ewma_taps) and r10
     (q_kfold_assign) red rows: both emitted wide-DECIMAL comparison
     columns, whose decimal→float lowering at the comparison boundary
@@ -857,15 +879,13 @@ def test_no_decimal_typed_output_columns(spark):
 
     from lakehouse_ecommerce_etl_pipeline_spark import plans as _p
 
-    sf = "/root/testdata/sf0.001"
+    assert set(_p.queries()) == set(registry_walk)
     bad = []
-    for name, fn in _p.queries().items():
-        try:
-            df = fn(spark, sf)
-        except Exception as e:  # pragma: no cover - surfaced as failure
-            bad.append(f"{name}: plan build failed: {e!r:.80}")
+    for name, (schema, _) in registry_walk.items():
+        if isinstance(schema, Exception):  # pragma: no cover - surfaced as failure
+            bad.append(f"{name}: plan build failed: {schema!r:.80}")
             continue
-        for f in df.schema.fields:
+        for f in schema.fields:
             if isinstance(f.dataType, DecimalType):
                 bad.append(f"{name}.{f.name}: {f.dataType}")
     assert bad == [], bad

@@ -2,22 +2,26 @@
 builds each (application, data dir, name) once, keeps data dirs that
 share a basename apart, and retries a build that raised; the
 statestore checkpoint, one such artifact, self-heals when its bytes
-are corrupted.
+are corrupted. Every session path comes from the module-global
+``work_dir``, and an application's scratch is removed at exit.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+import subprocess
 import sys
+import threading
 
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from lakehouse_ecommerce_etl_pipeline_spark.plans import REGISTRY
+from lakehouse_ecommerce_etl_pipeline_spark.plans import REGISTRY, _helpers
 from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import (
     session_artifact,
+    session_dir,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -97,3 +101,117 @@ def test_session_artifact_retries_a_failed_build(spark, tmp_path):
     assert os.listdir(path) == ["done"]  # rebuilt into an emptied dir
     session_artifact(spark, sf, "thing", flaky)
     assert len(attempts) == 2
+
+
+def test_session_artifact_nested_build_reuses_inner_artifact(spark, tmp_path):
+    """A build that asks for another artifact (co-purchase edges read
+    the order-part pairs) runs under the same lock without blocking,
+    and the inner artifact is still built only once."""
+    sf = str(tmp_path / "sf")
+    inner_builds = []
+
+    def inner(path):
+        inner_builds.append(path)
+
+    def outer(path):
+        src = session_artifact(spark, sf, "inner", inner)
+        with open(os.path.join(path, "src"), "w") as fh:
+            fh.write(src)
+
+    out = session_artifact(spark, sf, "outer", outer)
+    assert session_artifact(spark, sf, "inner", inner) == inner_builds[0]
+    with open(os.path.join(out, "src")) as fh:
+        assert fh.read() == inner_builds[0]
+    assert len(inner_builds) == 1
+
+
+def test_session_artifact_concurrent_callers_build_once(spark, tmp_path):
+    """Threads of one application asking for one key get one build,
+    and none of them sees the path before the build finished."""
+    sf = str(tmp_path / "sf")
+    started = threading.Event()
+    calls = []
+
+    def slow(path):
+        calls.append(path)
+        started.set()
+        threading.Event().wait(0.2)
+        open(os.path.join(path, "done"), "w").close()
+
+    seen = []
+
+    def ask():
+        p = session_artifact(spark, sf, "thing", slow)
+        seen.append(os.listdir(p))
+
+    threads = [threading.Thread(target=ask) for _ in range(4)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=60)
+    assert started.is_set() and len(calls) == 1
+    assert seen == [["done"]] * 4
+
+
+def test_session_paths_follow_a_rebound_work_dir(spark, tmp_path, monkeypatch):
+    """``session_dir`` and ``session_artifact`` look ``work_dir`` up by
+    its module-global name, so rebinding it (as the benchmark does to
+    keep scratch inside its checkout) moves every session path."""
+    root = tmp_path / "scratch_root"
+
+    def rebound(sf_dir, *parts):
+        d = os.path.join(root, *parts)
+        os.makedirs(d, exist_ok=True)
+        return d
+
+    monkeypatch.setattr(_helpers, "work_dir", rebound)
+    sf = str(tmp_path / "sf")
+    d = session_dir(spark, sf, "spill")
+    art = session_artifact(spark, sf, "thing", lambda p: None)
+    for p in (d, art):
+        assert os.path.commonpath([p, str(root)]) == str(root)
+    assert spark.sparkContext.applicationId in os.path.relpath(d, root)
+
+
+def test_session_dir_is_removed_when_the_process_exits(tmp_path):
+    """An application's scratch root goes away when its process exits,
+    like a job session's scratch."""
+    root = tmp_path / "scratch_root"
+    code = f"""
+import os, sys
+sys.path.insert(0, {os.path.dirname(os.path.dirname(os.path.abspath(__file__)))!r})
+from types import SimpleNamespace
+from lakehouse_ecommerce_etl_pipeline_spark.plans import _helpers
+
+def rebound(sf_dir, *parts):
+    d = os.path.join({str(root)!r}, *parts)
+    os.makedirs(d, exist_ok=True)
+    return d
+
+_helpers.work_dir = rebound
+app = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="local-exit"))
+d = _helpers.session_dir(app, "/data/sf", "spill")
+open(os.path.join(d, "part"), "w").close()
+print(d)
+"""
+    out = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True,
+        timeout=120, check=True,
+    )
+    made = out.stdout.strip().splitlines()[-1]
+    assert made.startswith(os.path.join(str(root), "local-exit"))
+    assert os.path.isdir(root)
+    assert not os.path.exists(os.path.join(root, "local-exit"))
+
+
+def test_session_artifact_keys_one_data_dir_spelled_two_ways(
+    spark, tmp_path, monkeypatch
+):
+    """The key is the absolute data dir: a relative and an absolute
+    spelling of one dir share one artifact and one build."""
+    (tmp_path / "sfr").mkdir()
+    monkeypatch.chdir(tmp_path)
+    built = []
+    rel = session_artifact(spark, "sfr", "thing", built.append)
+    absolute = session_artifact(spark, str(tmp_path / "sfr"), "thing", built.append)
+    assert rel == absolute and built == [rel]
