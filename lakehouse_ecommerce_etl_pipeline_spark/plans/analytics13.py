@@ -23,6 +23,7 @@ from lakehouse_ecommerce_etl_pipeline_spark.plans.registry import register
 from lakehouse_ecommerce_etl_pipeline_spark.sources.pydatasource import (
     register_synthetic_source,
 )
+from lakehouse_ecommerce_etl_pipeline_spark.streaming.drain import drain
 
 
 @register(
@@ -191,17 +192,14 @@ def q_python_datasource_stream(spark, sf_dir):
         # one micro-batch per availableNow run (simple-reader
         # contract) — loop until the bounded stream is drained
         for _ in range(8):
-            q = (
+            drain(
                 spark.readStream.format("synthetic_rows")
                 .option("batch_rows", 150)
                 .option("max_rows", 600)
                 .load()
                 .writeStream.foreachBatch(sink)
                 .option("checkpointLocation", ck)
-                .trigger(availableNow=True)
-                .start()
             )
-            q.awaitTermination(120)
             if len(rows) >= 600:
                 break
     return spark.createDataFrame(

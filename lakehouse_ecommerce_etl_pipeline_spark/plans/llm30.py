@@ -34,6 +34,7 @@ from lakehouse_ecommerce_etl_pipeline_spark.sources.avro import (
     stream_scan_avro,
     write_avro_files,
 )
+from lakehouse_ecommerce_etl_pipeline_spark.streaming.drain import drain
 
 _N_FILES = 8
 
@@ -151,15 +152,13 @@ def q_stream_avro_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         session_dir(spark, sf_dir, "avro_stream"), uuid.uuid4().hex[:8]
     )
     sink, ckpt = os.path.join(run, "sink"), os.path.join(run, "ckpt")
-    q = (
+    drain(
         stream_scan_avro(spark, containers)
         .writeStream.format("parquet")
         .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt),
+        containers,
     )
-    q.awaitTermination()
     return spark.read.parquet(sink).select(
         "doc_id",
         F.octet_length("text").cast("long").alias("n_bytes"),

@@ -48,6 +48,8 @@ itself is unaffected (v·p products are bounded by V_SCALE·P_SCALE =
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -118,38 +120,16 @@ def _needs_decimal_cached(
     spark: SparkSession, sf_dir: str, scale: int
 ) -> bool:
     """The gate verdict is a pure property of the input table, so it
-    is memoized per table generation.  The docs are loaded HERE (not
+    is memoized per Spark application and data dir, the key
+    ``session_artifact`` builds under.  The docs are loaded HERE (not
     passed in) so the cache key and the gated data cannot diverge
     (ADVICE r7: a caller-supplied filtered df would silently reuse the
-    full-table verdict), and the key carries EACH input file's own
-    (path, mtime_ns, size) — a directory-level stat misses an
-    in-place rewrite of same-named part files, and nanosecond mtimes
-    close the same-second window."""
-    import os
-    from urllib.parse import urlparse
-
-    docs = load(spark, sf_dir, "documents")
-    try:
-        per_file = []
-        for uri in sorted(docs.inputFiles()):
-            p = urlparse(uri).path or uri
-            st = os.stat(p)
-            per_file.append((p, st.st_mtime_ns, st.st_size))
-        key = (tuple(per_file), scale)
-    except OSError:
-        # non-local filesystem or percent-encoded path: stat is
-        # unavailable, so fall back to the sorted inputFiles tuple
-        # alone (ADVICE r8 — key=None silently disabled memoization
-        # and reran the O(k) gate count job on every invocation; a
-        # coarser key that misses an in-place same-named rewrite is
-        # the better trade for remote stores, where writers create
-        # new part-file names anyway)
-        key = (tuple(sorted(docs.inputFiles())), scale)
-    if key in _GATE_CACHE:
-        return _GATE_CACHE[key]
-    wide = _needs_decimal(_gate_counts(docs), scale)
-    _GATE_CACHE[key] = wide
-    return wide
+    full-table verdict)."""
+    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), scale)
+    if key not in _GATE_CACHE:
+        docs = load(spark, sf_dir, "documents")
+        _GATE_CACHE[key] = _needs_decimal(_gate_counts(docs), scale)
+    return _GATE_CACHE[key]
 
 
 def _doubled_wins(h: DataFrame, wide: bool = False) -> DataFrame:

@@ -30,6 +30,7 @@ from lakehouse_ecommerce_etl_pipeline_spark.sources.proto import (
     scan_proto,
     write_proto_files,
 )
+from lakehouse_ecommerce_etl_pipeline_spark.streaming.drain import drain
 
 _N_FILES = 8
 
@@ -156,15 +157,13 @@ def q_stream_protobuf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         session_dir(spark, sf_dir, "proto_stream"), uuid.uuid4().hex[:8]
     )
     sink, ckpt = os.path.join(run, "sink"), os.path.join(run, "ckpt")
-    q = (
+    drain(
         stream_scan_proto(spark, streams)
         .writeStream.format("parquet")
         .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt),
+        streams,
     )
-    q.awaitTermination()
     return spark.read.parquet(sink).select(
         "doc_id",
         F.octet_length("text").cast("long").alias("n_bytes"),
@@ -370,15 +369,13 @@ def q_stream_protobuf_nested_ingest(
         session_dir(spark, sf_dir, "proto_stream_nested"), uuid.uuid4().hex[:8]
     )
     sink, ckpt = os.path.join(run, "sink"), os.path.join(run, "ckpt")
-    q = (
+    drain(
         stream_scan_proto_nested(spark, streams)
         .writeStream.format("parquet")
         .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt),
+        streams,
     )
-    q.awaitTermination()
     return spark.read.parquet(sink)
 
 

@@ -25,6 +25,10 @@ from lakehouse_ecommerce_etl_pipeline_spark.plans.registry import register
 from lakehouse_ecommerce_etl_pipeline_spark.sources.pydatasource import (
     register_jsonl_sink,
 )
+from lakehouse_ecommerce_etl_pipeline_spark.streaming.drain import (
+    drain,
+    parquet_stream,
+)
 
 
 @register(
@@ -195,24 +199,15 @@ def q_python_datasource_stream_write(
     run = uuid.uuid4().hex[:8]
     base = session_dir(spark, sf_dir, "pyds_stream_write", run)
     out, ckpt = os.path.join(base, "events"), os.path.join(base, "ckpt")
-    from lakehouse_ecommerce_etl_pipeline_spark.streaming.windows import (
-        _as_stream_dir,
+    stream = parquet_stream(spark, src_path).select(
+        "event_id", "user_id", "event_type"
     )
-
-    schema = spark.read.parquet(src_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(_as_stream_dir(src_path))
-        .select("event_id", "user_id", "event_type")
-    )
-    q = (
+    drain(
         stream.writeStream.format("pyjsonl")
         .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt),
+        src_path,
     )
-    q.awaitTermination()
     return spark.read.schema(
         "event_id bigint, user_id bigint, event_type string"
     ).json(out)

@@ -26,7 +26,6 @@ positive doubles); the state-store counts are exact LONGs.
 from __future__ import annotations
 
 import shutil
-import uuid
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
@@ -37,6 +36,10 @@ from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import (
     session_artifact,
 )
 from lakehouse_ecommerce_etl_pipeline_spark.plans.registry import register
+from lakehouse_ecommerce_etl_pipeline_spark.streaming.drain import (
+    drain,
+    parquet_stream,
+)
 
 _MIN_CENTS = 1_500_000  # $15,000 threshold for the variable demo
 
@@ -229,31 +232,23 @@ def q_statestore_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     task per shuffle partition of the owning query) and never touches
     the input data — state size is O(distinct keys), so inspecting a
     TB-scale pipeline's state reads MBs, not TBs."""
-    from lakehouse_ecommerce_etl_pipeline_spark.streaming.windows import (
-        _as_stream_dir,
-    )
-
     events_path = f"{sf_dir}/events.parquet"
 
-    def drain(ck: str) -> None:
+    def count_by_type(ck: str) -> None:
+        # the sink is irrelevant (the state is what gets read back), so
+        # the no-op sink keeps no rows and registers no view
         shutil.rmtree(ck, ignore_errors=True)
-        schema = spark.read.parquet(events_path).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .format("parquet")
-            .load(_as_stream_dir(events_path))
+        agg = (
+            parquet_stream(spark, events_path)
+            .groupBy("event_type")
+            .agg(F.count(F.lit(1)).alias("n"))
         )
-        agg = stream.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-        name = f"statestore_drain_{uuid.uuid4().hex[:8]}"
-        q = (
+        drain(
             agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
+            .format("noop")
+            .option("checkpointLocation", ck),
+            events_path,
         )
-        q.awaitTermination()
 
     def read_state(ck: str) -> DataFrame:
         st = spark.read.format("statestore").load(ck)
@@ -264,12 +259,12 @@ def q_statestore_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         out.take(1)  # validate NOW — state errors surface lazily
         return out
 
-    ck = session_artifact(spark, sf_dir, "statestore_agg", drain)
+    ck = session_artifact(spark, sf_dir, "statestore_agg", count_by_type)
     try:
         return read_state(ck)
     except Exception:
         # rebuild-once: corrupted/unreadable checkpoint self-heals
-        drain(ck)
+        count_by_type(ck)
         return read_state(ck)
 
 
@@ -296,22 +291,33 @@ def q_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed primitive; the declarative twin (ONE aggregate pass)
     is the form you'd deploy, which is exactly the point the oracle
     makes."""
-    spark.conf.set("spark.sql.scripting.enabled", "true")
+    key = "spark.sql.scripting.enabled"
+    prior = spark.conf.get(key, None)
+    spark.conf.set(key, "true")
     load(spark, sf_dir, "orders").createOrReplaceTempView("orders_script_v")
-    return spark.sql(
-        """
-        BEGIN
-          DECLARE m INT DEFAULT 1;
-          DECLARE acc BIGINT DEFAULT 0;
-          WHILE m <= 12 DO
-            SET acc = acc + m * (
-              SELECT COUNT(*) FROM orders_script_v
-              WHERE EXTRACT(YEAR FROM o_orderdate) = 1997
-                AND EXTRACT(MONTH FROM o_orderdate) = m
-            );
-            SET m = m + 1;
-          END WHILE;
-          SELECT acc AS weighted_orders;
-        END
-        """
-    )
+    try:
+        # the script runs when spark.sql returns (its result is a local
+        # relation), so the view and the conf can go before returning
+        return spark.sql(
+            """
+            BEGIN
+              DECLARE m INT DEFAULT 1;
+              DECLARE acc BIGINT DEFAULT 0;
+              WHILE m <= 12 DO
+                SET acc = acc + m * (
+                  SELECT COUNT(*) FROM orders_script_v
+                  WHERE EXTRACT(YEAR FROM o_orderdate) = 1997
+                    AND EXTRACT(MONTH FROM o_orderdate) = m
+                );
+                SET m = m + 1;
+              END WHILE;
+              SELECT acc AS weighted_orders;
+            END
+            """
+        )
+    finally:
+        spark.catalog.dropTempView("orders_script_v")
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)

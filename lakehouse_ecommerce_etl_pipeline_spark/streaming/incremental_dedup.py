@@ -30,6 +30,7 @@ from lakehouse_ecommerce_etl_pipeline_spark.llm.dedup import (
     lsh_band,
     minhash_signatures_universal,
 )
+from lakehouse_ecommerce_etl_pipeline_spark.streaming.drain import drain
 
 _NUM_HASHES = 8
 _ROWS_PER_BAND = 2
@@ -138,20 +139,14 @@ def run_incremental_dedup(
             ).parquet(bands_path)
         keep.unpersist()
 
-    from lakehouse_ecommerce_etl_pipeline_spark.streaming.windows import (
-        state_sized_shuffle,
-    )
-
     # r13: the per-batch dedup pipeline runs ~6 tiny batch jobs per
-    # staged file; input-sized shuffle width (same rationale as the
-    # stateful drains — see state_sized_shuffle) cuts the per-batch
-    # exchange overhead.  Batch-side plans keep AQE, so this only
-    # moves the pre-AQE width.
-    with state_sized_shuffle(spark, raw_dir):
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    # staged file; the drain's input-sized shuffle width (same rationale
+    # as the stateful drains — see state_sized_shuffle) cuts the
+    # per-batch exchange overhead.  Batch-side plans keep AQE, so this
+    # only moves the pre-AQE width.
+    drain(
+        stream.writeStream.foreachBatch(process).option(
+            "checkpointLocation", checkpoint_dir
+        ),
+        raw_dir,
+    )

@@ -26,6 +26,7 @@ from lakehouse_ecommerce_etl_pipeline_spark.operators.validate import (
     split_valid_invalid,
 )
 from lakehouse_ecommerce_etl_pipeline_spark.sinks.merge import merge_upsert
+from lakehouse_ecommerce_etl_pipeline_spark.streaming.drain import drain
 
 
 def stream_ingest_csv(
@@ -52,10 +53,9 @@ def stream_ingest_csv(
         clean = dedup_arbitrary(valid, list(keys))
         merge_upsert(batch.sparkSession, table_path, clean, list(keys))
 
-    q = (
-        stream.writeStream.foreachBatch(upsert_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        stream.writeStream.foreachBatch(upsert_batch).option(
+            "checkpointLocation", checkpoint_dir
+        ),
+        raw_dir,
     )
-    q.awaitTermination()

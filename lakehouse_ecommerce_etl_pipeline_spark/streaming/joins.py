@@ -13,50 +13,14 @@ join.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lakehouse_ecommerce_etl_pipeline_spark.functions.timestamps import (
-    normalize_nanos_timestamps,
+from lakehouse_ecommerce_etl_pipeline_spark.operators.aggregates import dsum
+from lakehouse_ecommerce_etl_pipeline_spark.streaming.drain import (
+    drain_to_memory,
+    parquet_stream,
 )
-from lakehouse_ecommerce_etl_pipeline_spark.streaming.windows import (
-    _as_stream_dir,
-    state_sized_shuffle,
-)
-
-# Exact engine-portable value sums: BIGINT integer-cents lattice
-# (DESIGN §21 rule 3; events.value is 2-dp-valued, so ROUND(v*100) is
-# never near a tie) — int64 partial sums stay associative across
-# micro-batches and engine builds; descale once at the end.
-
-
-def _events_stream(spark: SparkSession, parquet_path: str) -> DataFrame:
-    schema = spark.read.parquet(parquet_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .load(_as_stream_dir(parquet_path))
-    )
-    return normalize_nanos_timestamps(stream, ("ts",))
-
-
-def _drain(
-    df: DataFrame, mode: str, prefix: str, *src_paths: str
-) -> DataFrame:
-    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    spark = df.sparkSession
-    with state_sized_shuffle(spark, *src_paths):
-        q = (
-            df.writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
 
 
 def stream_static_enrich_agg(
@@ -66,20 +30,57 @@ def stream_static_enrich_agg(
     table) followed by a per-segment aggregate — the streaming twin of
     the star-join + group-by. The static side joins fresh each
     micro-batch (no state), broadcast under the AQE threshold."""
-    stream = _events_stream(spark, events_path)
+    stream = parquet_stream(spark, events_path)
     joined = stream.join(
         static_dim, stream["user_id"] == static_dim["c_custkey"], "inner"
     )
     agg = joined.groupBy("c_mktsegment").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        (
-                F.sum(F.round(F.col("value") * 100).cast("bigint")).cast(
-                    "double"
-                )
-                / F.lit(100.0)
-            ).alias("sum_value"),
+        F.count(F.lit(1)).alias("n_events"), dsum("value", "sum_value")
     )
-    return _drain(agg, "complete", "stream_enrich", events_path)
+    return drain_to_memory(agg, "complete", events_path)
+
+
+def _events_of_type(
+    spark: SparkSession, events_path: str, event_type: str, side: str
+) -> DataFrame:
+    """One watermarked side of the interval join: the ``event_type``
+    events as (<s>_user, <side>_id, <s>_ts), ``s`` the side's initial."""
+    s = side[0]
+    return (
+        parquet_stream(spark, events_path)
+        .filter(F.col("event_type") == event_type)
+        .select(
+            F.col("user_id").alias(f"{s}_user"),
+            F.col("event_id").alias(f"{side}_id"),
+            F.col("ts").alias(f"{s}_ts"),
+        )
+        .withWatermark(f"{s}_ts", "1 hour")
+    )
+
+
+def _interval_join(
+    spark: SparkSession,
+    events_path: str,
+    left_type: str,
+    right_type: str,
+    horizon: str,
+    how: str,
+) -> DataFrame:
+    left = _events_of_type(spark, events_path, left_type, "left")
+    right = _events_of_type(spark, events_path, right_type, "right")
+    joined = left.join(
+        right,
+        (F.col("l_user") == F.col("r_user"))
+        & (F.col("r_ts") >= F.col("l_ts"))
+        & (F.col("r_ts") < F.col("l_ts") + F.expr(horizon)),
+        how,
+    ).select(
+        F.col("l_user").alias("user_id"),
+        "left_id",
+        "right_id",
+        (F.unix_micros("r_ts") - F.unix_micros("l_ts")).alias("lag_micros"),
+    )
+    return drain_to_memory(joined, "append", events_path)
 
 
 def stream_interval_join(
@@ -94,39 +95,9 @@ def stream_interval_join(
     sides carry watermarks and the join carries the time-range
     condition, so state is bounded; inner-join results emit eagerly,
     so one availableNow drain yields the complete batch answer."""
-    left = (
-        _events_stream(spark, events_path)
-        .filter(F.col("event_type") == left_type)
-        .select(
-            F.col("user_id").alias("l_user"),
-            F.col("event_id").alias("left_id"),
-            F.col("ts").alias("l_ts"),
-        )
-        .withWatermark("l_ts", "1 hour")
+    return _interval_join(
+        spark, events_path, left_type, right_type, horizon, "inner"
     )
-    right = (
-        _events_stream(spark, events_path)
-        .filter(F.col("event_type") == right_type)
-        .select(
-            F.col("user_id").alias("r_user"),
-            F.col("event_id").alias("right_id"),
-            F.col("ts").alias("r_ts"),
-        )
-        .withWatermark("r_ts", "1 hour")
-    )
-    joined = left.join(
-        right,
-        (F.col("l_user") == F.col("r_user"))
-        & (F.col("r_ts") >= F.col("l_ts"))
-        & (F.col("r_ts") < F.col("l_ts") + F.expr(horizon)),
-        "inner",
-    ).select(
-        F.col("l_user").alias("user_id"),
-        "left_id",
-        "right_id",
-        (F.unix_micros("r_ts") - F.unix_micros("l_ts")).alias("lag_micros"),
-    )
-    return _drain(joined, "append", "stream_ij", events_path)
 
 
 def stream_interval_join_outer(
@@ -149,36 +120,6 @@ def stream_interval_join_outer(
     buffered inside watermark + range); the outer emission adds no
     state, only an eviction-time scan — late-epoch rows held back are
     the price of correct no-match proofs."""
-    left = (
-        _events_stream(spark, events_path)
-        .filter(F.col("event_type") == left_type)
-        .select(
-            F.col("user_id").alias("l_user"),
-            F.col("event_id").alias("left_id"),
-            F.col("ts").alias("l_ts"),
-        )
-        .withWatermark("l_ts", "1 hour")
+    return _interval_join(
+        spark, events_path, left_type, right_type, horizon, "leftOuter"
     )
-    right = (
-        _events_stream(spark, events_path)
-        .filter(F.col("event_type") == right_type)
-        .select(
-            F.col("user_id").alias("r_user"),
-            F.col("event_id").alias("right_id"),
-            F.col("ts").alias("r_ts"),
-        )
-        .withWatermark("r_ts", "1 hour")
-    )
-    joined = left.join(
-        right,
-        (F.col("l_user") == F.col("r_user"))
-        & (F.col("r_ts") >= F.col("l_ts"))
-        & (F.col("r_ts") < F.col("l_ts") + F.expr(horizon)),
-        "leftOuter",
-    ).select(
-        F.col("l_user").alias("user_id"),
-        "left_id",
-        "right_id",
-        (F.unix_micros("r_ts") - F.unix_micros("l_ts")).alias("lag_micros"),
-    )
-    return _drain(joined, "append", "stream_ij_outer", events_path)

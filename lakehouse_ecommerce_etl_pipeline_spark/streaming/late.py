@@ -41,6 +41,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lakehouse_ecommerce_etl_pipeline_spark.streaming.drain import drain
+
 # deterministic arrival plan over the January 2024 events fixture:
 # thirds by event time; the straggler cohort (event_id % 3 == 1 in the
 # week before T1) arrives TWO batches late, in the final file
@@ -97,20 +99,13 @@ def windowed_counts_late_drop(
         .groupBy(F.window("ts", WINDOW).alias("w"))
         .agg(F.count(F.lit(1)).alias("n_kept"))
     )
-    from lakehouse_ecommerce_etl_pipeline_spark.streaming.windows import (
-        state_sized_shuffle,
+    drain(
+        agg.writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ckpt),
+        raw,
     )
-
-    with state_sized_shuffle(spark, raw):
-        q = (
-            agg.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return spark.read.parquet(out).select(
         F.col("w.start").alias("window_start"),
         F.col("n_kept").cast("bigint").alias("n_kept"),

@@ -11,7 +11,6 @@ keys in unbounded-key domains; with at-least-once sources pair with
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Iterator
 from typing import Any
 
@@ -20,12 +19,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from lakehouse_ecommerce_etl_pipeline_spark.functions.timestamps import (
-    normalize_nanos_timestamps,
-)
-from lakehouse_ecommerce_etl_pipeline_spark.streaming.windows import (
-    _as_stream_dir,
-    state_sized_shuffle,
+from lakehouse_ecommerce_etl_pipeline_spark.streaming.drain import (
+    drain_to_memory,
+    parquet_stream,
 )
 
 OUTPUT_SCHEMA = T.StructType(
@@ -109,30 +105,14 @@ def running_user_totals_tws(spark: SparkSession, parquet_path: str) -> DataFrame
     state co-partitions with the grouping shuffle; the typed handles
     additionally support TTL and timers for bounding idle-key state.
     """
-    schema = spark.read.parquet(parquet_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .load(_as_stream_dir(parquet_path))
-    )
-    stream = normalize_nanos_timestamps(stream)
-    totals = stream.groupBy("user_id").transformWithStateInPandas(
+    users = parquet_stream(spark, parquet_path).groupBy("user_id")
+    totals = users.transformWithStateInPandas(
         statefulProcessor=_make_processor(),
         outputStructType=OUTPUT_SCHEMA,
         outputMode="update",
         timeMode="none",
     )
-    name = f"tws_{uuid.uuid4().hex[:8]}"
-    with state_sized_shuffle(spark, parquet_path):
-        q = (
-            totals.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return drain_to_memory(totals, "update", parquet_path)
 
 
 def running_user_totals_stream(
@@ -141,28 +121,12 @@ def running_user_totals_stream(
     """Running (count, sum) per user maintained in the state store,
     drained with availableNow. With a single micro-batch this equals
     the batch groupBy — the parity property the test asserts."""
-    schema = spark.read.parquet(parquet_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .load(_as_stream_dir(parquet_path))
-    )
-    stream = normalize_nanos_timestamps(stream)
-    totals = stream.groupBy("user_id").applyInPandasWithState(
+    users = parquet_stream(spark, parquet_path).groupBy("user_id")
+    totals = users.applyInPandasWithState(
         _update,
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"stateful_{uuid.uuid4().hex[:8]}"
-    with state_sized_shuffle(spark, parquet_path):
-        q = (
-            totals.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return drain_to_memory(totals, "update", parquet_path)

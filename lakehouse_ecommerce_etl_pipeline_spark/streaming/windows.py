@@ -10,94 +10,40 @@ continuous and catch-up modes.
 
 from __future__ import annotations
 
-import contextlib
-import os
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lakehouse_ecommerce_etl_pipeline_spark.functions.timestamps import (
-    normalize_nanos_timestamps,
+from lakehouse_ecommerce_etl_pipeline_spark.operators.aggregates import dsum
+from lakehouse_ecommerce_etl_pipeline_spark.streaming.drain import (
+    drain_to_memory,
+    parquet_stream,
 )
 
-# Exact engine-portable value sums: BIGINT integer-cents lattice
-# (DESIGN §21 rule 3; events.value is 2-dp-valued, so ROUND(v*100) is
-# never near a tie) — int64 partial sums stay associative across
-# micro-batches and engine builds; descale once at the end.
 
-
-def _as_stream_dir(path: str) -> str:
-    """The file stream source wants a directory; stage a symlink dir
-    when handed a single parquet file."""
-    if os.path.isdir(path):
-        return path
-    d = os.path.join(
-        "/tmp",
-        "lakehouse_spark_stream",
-        os.path.basename(os.path.dirname(path)),
-        os.path.basename(path).replace(".", "_"),
+def _window_agg_stream(
+    spark: SparkSession,
+    parquet_path: str,
+    window: str,
+    slide: str | None,
+    watermark: str,
+    ts_col: str,
+) -> DataFrame:
+    """Per-(window, event_type) count and exact value sum over the
+    parquet stream, drained in complete mode. ``slide=None`` gives
+    tumbling windows."""
+    agg = (
+        parquet_stream(spark, parquet_path, (ts_col,))
+        .withWatermark(ts_col, watermark)
+        .groupBy(F.window(ts_col, window, slide).alias("w"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", "sum_value"))
+        .select(
+            F.col("w.start").alias("window_start"),
+            "event_type",
+            "n_events",
+            "sum_value",
+        )
     )
-    os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, os.path.basename(path))
-    if not os.path.exists(link):
-        os.symlink(path, link)
-    return d
-
-
-@contextlib.contextmanager
-def state_sized_shuffle(spark: SparkSession, *src_paths: str):
-    """Run a STATEFUL streaming drain with shuffle partitions sized to
-    the stream's input footprint, not the session core count.
-
-    r13 (VERDICT r12 item 6, guide §2.2): the state-store partitioning
-    is frozen into the checkpoint at first start, so AQE coalescing —
-    which absorbs oversharding everywhere else — cannot touch stateful
-    exchanges, and every micro-batch pays a per-partition store
-    open/commit EVEN WITH ZERO INPUT ROWS.  Instrumented on the
-    interval-join row at sf0.1: the availableNow drain runs two
-    batches, and the second (0 rows — pure watermark advance + outer
-    eviction) cost ~4.1 s at 32 partitions; re-run at input-sized
-    partition counts the whole drain fell 9.2-14.8 s → ~2.0-2.8 s with
-    identical results (state-store ops scale with partitions, not
-    data).  Default: one partition per 8 MB of source bytes, floor 2,
-    capped at defaultParallelism — it grows with the input, so a
-    production deployment scales automatically; the env override
-    ``SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS`` sets it explicitly.
-    Results are partitioning-independent (integer-lattice aggregates /
-    join rows; oracle-hash-checked).  Restores the session conf on
-    exit, unsetting it again when it was unset on entry; checkpoints
-    created under the old value keep it (Spark reads the count from
-    the checkpoint), so re-drains stay consistent.  Input bytes are
-    summed over every file below each source path, nested
-    directories included."""
-    env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS")
-    if env:
-        n = max(1, int(env))
-    else:
-        total = 0
-        for p in src_paths:
-            try:
-                if os.path.isdir(p):
-                    for d, _, files in os.walk(p):
-                        total += sum(
-                            os.path.getsize(os.path.join(d, f)) for f in files
-                        )
-                else:
-                    total += os.path.getsize(p)
-            except OSError:
-                pass
-        n = max(2, total // (8 << 20))
-        n = min(n, spark.sparkContext.defaultParallelism)
-    old = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        if old is None:
-            spark.conf.unset("spark.sql.shuffle.partitions")
-        else:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
+    return drain_to_memory(agg, "complete", parquet_path)
 
 
 def tumbling_agg_stream(
@@ -108,50 +54,16 @@ def tumbling_agg_stream(
     ts_col: str = "ts",
 ) -> DataFrame:
     """Run a tumbling-window count/sum aggregation as a real
-    Structured Streaming query over a parquet directory, drained
-    synchronously with availableNow, returning the final result.
+    Structured Streaming query over a parquet file or directory,
+    drained synchronously with availableNow, returning the final result.
 
     The plan is the exact streaming twin of the batch
     ``q_events_window_agg`` (plans/analytics.py) — same window(),
-    same decimal-exact sum — so the batch oracle checks the stream.
+    same integer-cents sum — so the batch oracle checks the stream.
     """
-    schema = spark.read.parquet(parquet_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .load(_as_stream_dir(parquet_path))
+    return _window_agg_stream(
+        spark, parquet_path, window, None, watermark, ts_col
     )
-    stream = normalize_nanos_timestamps(stream, (ts_col,))
-    agg = (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window).alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            (
-                F.sum(F.round(F.col("value") * 100).cast("bigint")).cast(
-                    "double"
-                )
-                / F.lit(100.0)
-            ).alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-    name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    with state_sized_shuffle(spark, parquet_path):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
 
 
 def stream_dedup(
@@ -163,27 +75,12 @@ def stream_dedup(
 ) -> DataFrame:
     """Streaming dedup with bounded state:
     ``dropDuplicatesWithinWatermark`` on the key set."""
-    schema = spark.read.parquet(parquet_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .load(_as_stream_dir(parquet_path))
+    deduped = (
+        parquet_stream(spark, parquet_path, (ts_col,))
+        .withWatermark(ts_col, watermark)
+        .dropDuplicatesWithinWatermark(keys)
     )
-    stream = normalize_nanos_timestamps(stream, (ts_col,))
-    deduped = stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        keys
-    )
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    with state_sized_shuffle(spark, parquet_path):
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return drain_to_memory(deduped, "append", parquet_path)
 
 
 def session_agg_stream(
@@ -207,26 +104,10 @@ def session_agg_stream(
     (shuffle on user_id) — skewed power-users can be pre-split by a
     salt column folded back on merge.
     """
-    schema = spark.read.parquet(parquet_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .load(_as_stream_dir(parquet_path))
-    )
-    stream = normalize_nanos_timestamps(stream, (ts_col,))
     agg = (
-        stream.groupBy(
-            F.session_window(ts_col, gap).alias("w"), key_col
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            (
-                F.sum(F.round(F.col("value") * 100).cast("bigint")).cast(
-                    "double"
-                )
-                / F.lit(100.0)
-            ).alias("sum_value"),
-        )
+        parquet_stream(spark, parquet_path, (ts_col,))
+        .groupBy(F.session_window(ts_col, gap).alias("w"), key_col)
+        .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", "sum_value"))
         .select(
             key_col,
             F.col("w.start").alias("session_start"),
@@ -235,17 +116,7 @@ def session_agg_stream(
             "sum_value",
         )
     )
-    name = f"stream_sess_{uuid.uuid4().hex[:8]}"
-    with state_sized_shuffle(spark, parquet_path):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return drain_to_memory(agg, "complete", parquet_path)
 
 
 def sliding_agg_stream(
@@ -279,42 +150,6 @@ def sliding_agg_stream(
     from the sink — stream/batch parity over ALL windows is exactly
     what the oracle checks.
     """
-    schema = spark.read.parquet(parquet_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .load(_as_stream_dir(parquet_path))
+    return _window_agg_stream(
+        spark, parquet_path, window, slide, watermark, ts_col
     )
-    stream = normalize_nanos_timestamps(stream, (ts_col,))
-    agg = (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(
-            F.window(ts_col, window, slide).alias("w"), "event_type"
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            (
-                F.sum(F.round(F.col("value") * 100).cast("bigint")).cast(
-                    "double"
-                )
-                / F.lit(100.0)
-            ).alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-    name = f"stream_slide_{uuid.uuid4().hex[:8]}"
-    with state_sized_shuffle(spark, parquet_path):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)

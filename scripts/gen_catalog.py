@@ -24,7 +24,15 @@ def first_sentence(doc: str | None) -> str:
     return text[:160]
 
 
-def main() -> int:
+CATALOG = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "docs",
+    "OPERATORS.md",
+)
+
+
+def render() -> str:
+    """The text of docs/OPERATORS.md for the current registry."""
     rows = []
     for name, spec in sorted(REGISTRY.items()):
         module = spec.fn.__module__.rsplit(".", 1)[-1]
@@ -47,14 +55,13 @@ def main() -> int:
     for name, module, oracle, desc in rows:
         desc = desc.replace("|", "\\|")
         out.append(f"| `{name}` | {module} | {oracle} | {desc} |")
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "docs",
-        "OPERATORS.md",
-    )
-    with open(path, "w") as f:
-        f.write("\n".join(out) + "\n")
-    print(f"wrote {path}: {len(rows)} queries ({n_oracle} oracled)")
+    return "\n".join(out) + "\n"
+
+
+def main() -> int:
+    with open(CATALOG, "w") as f:
+        f.write(render())
+    print(f"wrote {CATALOG}: {len(REGISTRY)} queries")
     return 0
 
 

@@ -18,26 +18,38 @@ from lakehouse_ecommerce_etl_pipeline_spark.plans.registry import REGISTRY
 SF0001 = "/root/testdata/sf0.001"
 
 
+def _session_state(spark):
+    """The temp views and the ids of the active streams of ``spark``."""
+    views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    return views, {str(q.id) for q in spark.streams.active}
+
+
 @pytest.fixture(scope="module")
 def registry_walk(spark):
     """Build every registered query once for the registry-wide gates
     of this module: per name, the output schema (or the exception the
-    query function raised) and the executed plan text (or the
-    exception planning raised). Each query function runs its eager
-    work (fixture builds, spills, streaming drains, write demos) once,
-    not once per gate. Only schemas and plan strings are kept."""
+    query function raised), the executed plan text (or the exception
+    planning raised), and what the query function left in the session:
+    the temp views and the active streams it added. Each query function
+    runs its eager work (fixture builds, spills, streaming drains,
+    write demos) once, not once per gate. Only schemas, plan strings
+    and names are kept."""
     walk = {}
     for name in sorted(REGISTRY):
+        views, streams = _session_state(spark)
         try:
             df = REGISTRY[name].fn(spark, SF0001)
         except Exception as exc:  # noqa: BLE001 — each gate reports it
-            walk[name] = (exc, exc)
-            continue
-        try:
-            plan = df._jdf.queryExecution().executedPlan().toString()
-        except Exception as exc:  # noqa: BLE001 — each gate reports it
-            plan = exc
-        walk[name] = (df.schema, plan)
+            schema = plan = exc
+        else:
+            schema = df.schema
+            try:
+                plan = df._jdf.queryExecution().executedPlan().toString()
+            except Exception as exc:  # noqa: BLE001 — each gate reports it
+                plan = exc
+        views_after, streams_after = _session_state(spark)
+        left = (views_after - views, streams_after - streams)
+        walk[name] = (schema, plan, left)
     return walk
 
 
@@ -193,7 +205,7 @@ def test_registry_has_no_single_partition_window(registry_walk):
     offenders = []
     cartesians = []
     errors = []
-    for name, (_, plan) in sorted(registry_walk.items()):
+    for name, (_, plan, _) in sorted(registry_walk.items()):
         if isinstance(plan, Exception):
             errors.append(f"{name}: {plan}")
             continue
@@ -881,7 +893,7 @@ def test_no_decimal_typed_output_columns(registry_walk):
 
     assert set(_p.queries()) == set(registry_walk)
     bad = []
-    for name, (schema, _) in registry_walk.items():
+    for name, (schema, _, _) in registry_walk.items():
         if isinstance(schema, Exception):  # pragma: no cover - surfaced as failure
             bad.append(f"{name}: plan build failed: {schema!r:.80}")
             continue
@@ -889,3 +901,25 @@ def test_no_decimal_typed_output_columns(registry_walk):
             if isinstance(f.dataType, DecimalType):
                 bad.append(f"{name}.{f.name}: {f.dataType}")
     assert bad == [], bad
+
+
+def test_queries_leave_no_stream_or_streaming_view(registry_walk):
+    """Session hygiene over the shared walk: no registered query leaves
+    a stream running, and no streaming-family query (every drained
+    stream) or ``q_sql_scripting`` leaves a temp view in the session
+    that the next query of a shared session would see."""
+    family = {
+        n
+        for n in registry_walk
+        if n.startswith(("q_stream_", "q_python_datasource_stream"))
+        or n == "q_statestore_read"
+    }
+    assert len(family) == 17, sorted(family)
+    running = {n: ids for n, (_, _, (_, ids)) in registry_walk.items() if ids}
+    assert running == {}
+    views = {
+        n: registry_walk[n][2][0]
+        for n in sorted(family | {"q_sql_scripting"})
+        if registry_walk[n][2][0]
+    }
+    assert views == {}

@@ -75,7 +75,7 @@ def test_state_sized_shuffle_sizes_and_restores(spark):
 
     import pytest
 
-    from lakehouse_ecommerce_etl_pipeline_spark.streaming.windows import (
+    from lakehouse_ecommerce_etl_pipeline_spark.streaming.drain import (
         state_sized_shuffle,
     )
 
@@ -96,21 +96,12 @@ def test_state_sized_shuffle_sizes_and_restores(spark):
             raise RuntimeError("boom")
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
-    # explicit production override wins
-    os.environ["SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS"] = "7"
-    try:
-        with state_sized_shuffle(spark, src):
-            assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
-    finally:
-        del os.environ["SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS"]
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
-
 
 def test_state_sized_shuffle_unsets_a_key_unset_on_entry(spark, tmp_path):
     """A shuffle-partitions key that was unset on entry is unset again
     on exit instead of keeping the stream-sized value, and the input is
     sized over nested directories too."""
-    from lakehouse_ecommerce_etl_pipeline_spark.streaming.windows import (
+    from lakehouse_ecommerce_etl_pipeline_spark.streaming.drain import (
         state_sized_shuffle,
     )
 
@@ -130,3 +121,38 @@ def test_state_sized_shuffle_unsets_a_key_unset_on_entry(spark, tmp_path):
         assert spark.conf.get(key, None) is None
     finally:
         spark.conf.set(key, before)
+
+
+def test_single_file_streams_keep_same_basename_dirs_apart(spark, tmp_path):
+    """Two data dirs that share a basename (``a/sfx`` and ``b/sfx``)
+    hold different events; a stream over each single events file must
+    read that file, so each drain equals its own batch aggregate."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from lakehouse_ecommerce_etl_pipeline_spark.operators.aggregates import dsum
+
+    events = pq.read_table(f"{SF}/events.parquet")
+    odd = pc.equal(pc.bit_wise_and(events["event_id"], 1), 1)
+    subsets = {"a": events.filter(odd), "b": events.filter(pc.invert(odd))}
+    for side, table in subsets.items():
+        sf_dir = tmp_path / side / "sfx"
+        sf_dir.mkdir(parents=True)
+        pq.write_table(table, sf_dir / "events.parquet")
+
+    for side in subsets:
+        sf_dir = str(tmp_path / side / "sfx")
+        streamed = tumbling_agg_stream(spark, f"{sf_dir}/events.parquet")
+        batch = (
+            load(spark, sf_dir, "events")
+            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+            .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", "sum_value"))
+            .select(
+                F.col("w.start").alias("window_start"),
+                "event_type",
+                "n_events",
+                "sum_value",
+            )
+        )
+        assert sorted(streamed.collect()) == sorted(batch.collect()), side
