@@ -145,15 +145,15 @@ def q_cube(spark, sf_dir):
     """,
 )
 def q_grouping_sets(spark, sf_dir):
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders_v")
     return spark.sql(
         """
         SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n_rows,
                CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))
                     AS DOUBLE) / 100.0 AS sum_price
-        FROM orders_v
+        FROM {orders}
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
-        """
+        """,
+        orders=load(spark, sf_dir, "orders"),
     )
 
 

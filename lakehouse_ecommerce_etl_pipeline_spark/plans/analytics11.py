@@ -65,19 +65,18 @@ def q_recursive_month_series(spark, sf_dir):
     from pyspark.sql import functions as F
 
     orders = load(spark, sf_dir, "orders")
-    orders.createOrReplaceTempView("orders_rec")
     lo, hi = orders.agg(
         F.date_trunc("month", F.min("o_orderdate")),
         F.date_trunc("month", F.max("o_orderdate")),
     ).first()
-    sql = _MONTH_SERIES_SQL.format(orders="orders_rec").replace(
-        "(SELECT date_trunc('month', MIN(o_orderdate)) FROM orders_rec)",
+    sql = _MONTH_SERIES_SQL.replace(
+        "(SELECT date_trunc('month', MIN(o_orderdate)) FROM {orders})",
         f"TIMESTAMP '{lo}'",
     ).replace(
-        "(SELECT date_trunc('month', MAX(o_orderdate)) FROM orders_rec)",
+        "(SELECT date_trunc('month', MAX(o_orderdate)) FROM {orders})",
         f"TIMESTAMP '{hi}'",
     )
-    return spark.sql(sql)
+    return spark.sql(sql, orders=orders)
 
 
 _LATERAL_TOPK_SQL = """
@@ -112,11 +111,9 @@ def q_lateral_topk(spark, sf_dir):
     same physical shape as the window top-k (q_topk), which is the
     API to prefer when the outer table is large; LATERAL is covered
     here as SQL surface."""
-    load(spark, sf_dir, "region").createOrReplaceTempView("region_lat")
-    load(spark, sf_dir, "nation").createOrReplaceTempView("nation_lat")
-    load(spark, sf_dir, "customer").createOrReplaceTempView("customer_lat")
     return spark.sql(
-        _LATERAL_TOPK_SQL.format(
-            region="region_lat", nation="nation_lat", customer="customer_lat"
-        )
+        _LATERAL_TOPK_SQL,
+        region=load(spark, sf_dir, "region"),
+        nation=load(spark, sf_dir, "nation"),
+        customer=load(spark, sf_dir, "customer"),
     )

@@ -99,14 +99,14 @@ def q_udtf_bigrams(spark, sf_dir):
     explode, as the oracle shows); prefer that when semantics allow.
     The UDTF registers per-session; the lateral join is narrow."""
     spark.udtf.register("udtf_bigrams", _BigramUDTF)
-    load(spark, sf_dir, "documents").createOrReplaceTempView("docs_udtf")
     return spark.sql(
         """
         SELECT u.bigram, COUNT(*) AS n, COUNT(DISTINCT doc_id) AS n_docs
-        FROM docs_udtf, LATERAL udtf_bigrams(text) u
+        FROM {docs}, LATERAL udtf_bigrams(text) u
         GROUP BY u.bigram HAVING COUNT(*) >= 5
         ORDER BY u.bigram
-        """
+        """,
+        docs=load(spark, sf_dir, "documents"),
     )
 
 

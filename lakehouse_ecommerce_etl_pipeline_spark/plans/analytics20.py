@@ -532,17 +532,15 @@ def q_sql_udf(spark, sf_dir):
         "RETURN CAST(ROUND(p * 100) AS BIGINT) "
         "* (100 - CAST(ROUND(d * 100) AS BIGINT))"
     )
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "sql_udf_lineitem"
-    )
     return spark.sql(
         """
         SELECT l_returnflag,
                CAST(SUM(net_price(l_extendedprice, l_discount)) AS DOUBLE)
                  / 10000.0 AS net_revenue,
                COUNT(*) AS n_lines
-        FROM sql_udf_lineitem GROUP BY l_returnflag
-        """
+        FROM {lineitem} GROUP BY l_returnflag
+        """,
+        lineitem=load(spark, sf_dir, "lineitem"),
     )
 
 

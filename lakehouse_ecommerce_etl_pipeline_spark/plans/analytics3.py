@@ -126,16 +126,16 @@ def q_having(spark, sf_dir):
 def q_subquery_scalar(spark, sf_dir):
     """Uncorrelated scalar subquery (Catalyst plans it as a one-row
     broadcast); decimal-exact mean."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders_sq")
     return spark.sql(
         """
         SELECT o_orderkey,
                o_totalprice - (SELECT CAST(SUM(CAST(ROUND(o_totalprice * 100)
                                                     AS BIGINT)) AS DOUBLE)
-                                      / 100.0 / COUNT(*) FROM orders_sq)
+                                      / 100.0 / COUNT(*) FROM {orders})
                  AS diff_from_mean
-        FROM orders_sq
-        """
+        FROM {orders}
+        """,
+        orders=load(spark, sf_dir, "orders"),
     )
 
 
@@ -149,14 +149,14 @@ def q_subquery_scalar(spark, sf_dir):
 )
 def q_subquery_exists(spark, sf_dir):
     """Correlated EXISTS — Catalyst decorrelates it to a semi-join."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders_sq2")
-    load(spark, sf_dir, "customer").createOrReplaceTempView("customer_sq2")
     return spark.sql(
         """
-        SELECT c_custkey, c_name FROM customer_sq2 c
-        WHERE EXISTS (SELECT 1 FROM orders_sq2 o
+        SELECT c_custkey, c_name FROM {customer} c
+        WHERE EXISTS (SELECT 1 FROM {orders} o
                       WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 300000)
-        """
+        """,
+        orders=load(spark, sf_dir, "orders"),
+        customer=load(spark, sf_dir, "customer"),
     )
 
 

@@ -512,16 +512,14 @@ def q_not_in_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     expensive when the SUBQUERY side can be null (forces a
     zero-partition check), which is why production schemas declare FK
     columns NOT NULL."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders_nin")
-    load(spark, sf_dir, "customer").createOrReplaceTempView("customer_nin")
     return spark.sql(
         """
         WITH probe AS (
           SELECT CASE WHEN o_orderkey % 97 = 0 THEN NULL
                       ELSE o_custkey END AS fk
-          FROM orders_nin
+          FROM {orders}
         ),
-        neg AS (SELECT c_custkey FROM customer_nin WHERE c_acctbal < 0)
+        neg AS (SELECT c_custkey FROM {customer} WHERE c_acctbal < 0)
         SELECT
           (SELECT COUNT(*) FROM probe
             WHERE fk NOT IN (SELECT c_custkey FROM neg)) AS n_not_in,
@@ -529,7 +527,9 @@ def q_not_in_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
             WHERE NOT EXISTS (SELECT 1 FROM neg n
                               WHERE n.c_custkey = p.fk)) AS n_not_exists,
           (SELECT COUNT(*) FROM probe WHERE fk IS NULL) AS n_null_probes
-        """
+        """,
+        orders=load(spark, sf_dir, "orders"),
+        customer=load(spark, sf_dir, "customer"),
     )
 
 

@@ -164,7 +164,6 @@ def q_collation_groupby(spark: SparkSession, sf_dir: str) -> DataFrame:
     trade is that collated comparisons are costlier per row than
     binary equality, so collate the COLUMN only where the semantics
     need it."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders_coll")
     return spark.sql(
         """
         WITH t AS (
@@ -172,10 +171,11 @@ def q_collation_groupby(spark: SparkSession, sf_dir: str) -> DataFrame:
                       THEN upper(o_orderpriority)
                       ELSE lower(o_orderpriority)
                  END COLLATE UTF8_LCASE AS label
-          FROM orders_coll
+          FROM {orders}
         )
         SELECT lower(CAST(label AS STRING)) AS priority,
                COUNT(*) AS n
         FROM t GROUP BY label
-        """
+        """,
+        orders=load(spark, sf_dir, "orders"),
     )

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import load
 from lakehouse_ecommerce_etl_pipeline_spark.plans.registry import register
+from lakehouse_ecommerce_etl_pipeline_spark.session import conf_scope
 
 _TREE_SQL = """
 WITH RECURSIVE up(node, anc) AS (
@@ -69,21 +70,12 @@ def q_tree_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialized eagerly under the override and the session value is
     # restored before returning (a lazy return would leak the 200M
     # guard into every later query of the shared bench/test session).
-    key = "spark.sql.cteRecursionRowLimit"
-    prior = spark.conf.get(key, None)
-    load(spark, sf_dir, "part").createOrReplaceTempView("part_tree")
-    spark.conf.set(key, str(200_000_000))
-    try:
+    with conf_scope(spark, {"spark.sql.cteRecursionRowLimit": str(200_000_000)}):
         # n output rows (one per node) — small; the n·depth closure
         # lives only inside this checkpointed job
-        return spark.sql(_TREE_SQL.format(part="part_tree")).localCheckpoint(
-            eager=True
-        )
-    finally:
-        if prior is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prior)
+        return spark.sql(
+            _TREE_SQL, part=load(spark, sf_dir, "part")
+        ).localCheckpoint(eager=True)
 
 
 @register(

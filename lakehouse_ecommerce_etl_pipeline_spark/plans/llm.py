@@ -690,7 +690,7 @@ def vector_reps_artifact(spark, sf_dir):
     q_embedding_near_dup references it from four branches whose
     column pruning specializes each copy's scans — so AQE exchange
     reuse cannot fold them and the vector-keyed join executed THREE
-    times per run (scripts/subplan_audit.py, round 9 — the only true
+    times per run (round 9, check_oracle's subplan detector — the only true
     duplicated-join-subplan offender in the 420-query registry).
     Materialized, every branch is a column-pruned parquet scan and
     the join is paid once per session.  Zero-norm rows keep

@@ -173,8 +173,9 @@ def q_count(spark, sf_dir):
 def q_count_star_sql(spark, sf_dir):
     """A4 — COUNT(*) validation via the SQL entry point (reference:
     Athena smoke query, lakehouse_etl_stepfunction.json:218)."""
-    load(spark, sf_dir, "part").createOrReplaceTempView("part_v")
-    return spark.sql("SELECT COUNT(*) AS cnt FROM part_v")
+    return spark.sql(
+        "SELECT COUNT(*) AS cnt FROM {part}", part=load(spark, sf_dir, "part")
+    )
 
 
 # ------------------------------------------------------------- joins

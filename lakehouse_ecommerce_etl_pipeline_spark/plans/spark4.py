@@ -116,12 +116,12 @@ def q_udtf_dynamic_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     spark.udtf.register("split_fixed", udtf(SplitFixed))
-    load(spark, sf_dir, "documents").createOrReplaceTempView("docs_sf4")
     return spark.sql(
         """
         SELECT d.doc_id, u.tok0, u.tok1, u.tok2
-        FROM docs_sf4 d, LATERAL split_fixed(d.text, 3) u
-        """
+        FROM {docs} d, LATERAL split_fixed(d.text, 3) u
+        """,
+        docs=load(spark, sf_dir, "documents"),
     )
 
 
@@ -149,10 +149,9 @@ def q_sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     is that pipe stages fuse exactly like their ANSI equivalents
     (filter pushdown, partial aggregation), which the shared oracle
     hash proves."""
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_pipe")
     return spark.sql(
         """
-        FROM lineitem_pipe
+        FROM {lineitem}
         |> WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
         |> EXTEND CAST(ROUND(l_extendedprice * 100) AS BIGINT)
                   * (100 - CAST(ROUND(l_discount * 100) AS BIGINT))
@@ -160,7 +159,8 @@ def q_sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
         |> AGGREGATE CAST(COUNT(*) AS BIGINT) AS n_lines,
                      CAST(SUM(disc4) AS DOUBLE) / 10000.0 AS revenue
            GROUP BY l_returnflag
-        """
+        """,
+        lineitem=load(spark, sf_dir, "lineitem"),
     ).select("l_returnflag", "n_lines", "revenue")
 
 

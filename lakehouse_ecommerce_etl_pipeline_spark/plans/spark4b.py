@@ -36,6 +36,7 @@ from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import (
     session_artifact,
 )
 from lakehouse_ecommerce_etl_pipeline_spark.plans.registry import register
+from lakehouse_ecommerce_etl_pipeline_spark.session import conf_scope
 from lakehouse_ecommerce_etl_pipeline_spark.streaming.drain import (
     drain,
     parquet_stream,
@@ -70,17 +71,17 @@ def q_sql_session_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
     job chain)."""
     spark.sql("DECLARE OR REPLACE VARIABLE min_cents BIGINT DEFAULT 0")
     spark.sql(f"SET VARIABLE min_cents = {_MIN_CENTS}")
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders_v4")
     return spark.sql(
         """
         SELECT o_orderpriority,
                CAST(COUNT(*) AS BIGINT) AS n_orders,
                CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
                  AS total_cents
-        FROM orders_v4
+        FROM {orders}
         WHERE CAST(ROUND(o_totalprice * 100) AS BIGINT) >= min_cents
         GROUP BY o_orderpriority
-        """
+        """,
+        orders=load(spark, sf_dir, "orders"),
     )
 
 
@@ -291,13 +292,9 @@ def q_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed primitive; the declarative twin (ONE aggregate pass)
     is the form you'd deploy, which is exactly the point the oracle
     makes."""
-    key = "spark.sql.scripting.enabled"
-    prior = spark.conf.get(key, None)
-    spark.conf.set(key, "true")
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders_script_v")
-    try:
-        # the script runs when spark.sql returns (its result is a local
-        # relation), so the view and the conf can go before returning
+    # the script runs when spark.sql returns (its result is a local
+    # relation), so the conf can go back before returning
+    with conf_scope(spark, {"spark.sql.scripting.enabled": "true"}):
         return spark.sql(
             """
             BEGIN
@@ -305,7 +302,7 @@ def q_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
               DECLARE acc BIGINT DEFAULT 0;
               WHILE m <= 12 DO
                 SET acc = acc + m * (
-                  SELECT COUNT(*) FROM orders_script_v
+                  SELECT COUNT(*) FROM {orders}
                   WHERE EXTRACT(YEAR FROM o_orderdate) = 1997
                     AND EXTRACT(MONTH FROM o_orderdate) = m
                 );
@@ -313,11 +310,6 @@ def q_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
               END WHILE;
               SELECT acc AS weighted_orders;
             END
-            """
+            """,
+            orders=load(spark, sf_dir, "orders"),
         )
-    finally:
-        spark.catalog.dropTempView("orders_script_v")
-        if prior is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prior)

@@ -30,6 +30,8 @@ from __future__ import annotations
 
 import importlib.util
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -139,3 +141,21 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def conf_scope(spark: SparkSession, overrides: dict[str, str]) -> Iterator[None]:
+    """Set the session conf ``overrides`` for the body of a ``with``
+    block. On exit, on success and on an exception, each key gets its
+    prior value back, or is unset again if it was unset on entry."""
+    prior = {k: spark.conf.get(k, None) for k in overrides}
+    for k, v in overrides.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -17,6 +17,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 
+from lakehouse_ecommerce_etl_pipeline_spark.session import conf_scope
+
 
 def write_partitioned(
     df: DataFrame,
@@ -57,15 +59,12 @@ def overwrite_partitions(
     scales with the increment, not the table. Pair with
     ``maxRecordsPerFile`` so each replaced partition lands in
     right-sized files."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with conf_scope(
+        df.sparkSession, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+    ):
         (
             df.write.format(fmt)
             .mode("overwrite")
             .partitionBy(*partition_by)
             .save(path)
         )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)

@@ -16,7 +16,6 @@ the only place that starts a stream:
 
 from __future__ import annotations
 
-import contextlib
 import os
 import uuid
 
@@ -26,12 +25,13 @@ from pyspark.sql.streaming import DataStreamWriter
 from lakehouse_ecommerce_etl_pipeline_spark.functions.timestamps import (
     normalize_nanos_timestamps,
 )
+from lakehouse_ecommerce_etl_pipeline_spark.session import conf_scope
 
 
-@contextlib.contextmanager
 def state_sized_shuffle(spark: SparkSession, *src_paths: str):
-    """Run a STATEFUL streaming drain with shuffle partitions sized to
-    the stream's input footprint, not the session core count.
+    """A ``conf_scope`` for a STATEFUL streaming drain: shuffle
+    partitions sized to the stream's input footprint, not the session
+    core count.
 
     r13 (VERDICT r12 item 6, guide §2.2): the state-store partitioning
     is frozen into the checkpoint at first start, so AQE coalescing —
@@ -47,9 +47,9 @@ def state_sized_shuffle(spark: SparkSession, *src_paths: str):
     defaultParallelism — it grows with the input, so a production
     deployment scales automatically.
     Results are partitioning-independent (integer-lattice aggregates /
-    join rows; oracle-hash-checked).  Restores the session conf on
-    exit, unsetting it again when it was unset on entry; checkpoints
-    created under the old value keep it (Spark reads the count from
+    join rows; oracle-hash-checked).  The scope restores the key on
+    exit, or unsets it if it was unset; checkpoints created under the
+    old value keep it (Spark reads the count from
     the checkpoint), so re-drains stay consistent.  Input bytes are
     summed over every file below each source path, nested
     directories included."""
@@ -66,15 +66,7 @@ def state_sized_shuffle(spark: SparkSession, *src_paths: str):
         except OSError:
             pass
     n = min(max(2, total // (8 << 20)), spark.sparkContext.defaultParallelism)
-    old = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        if old is None:
-            spark.conf.unset("spark.sql.shuffle.partitions")
-        else:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
+    return conf_scope(spark, {"spark.sql.shuffle.partitions": str(n)})
 
 
 def parquet_stream(

@@ -3,7 +3,7 @@
 shuffle read/write bytes, spill, and input bytes from the Spark REST
 API (not plan inspection — the bytes that really moved).
 
-The plan audit (explain_audit.py) shows the *shapes*; this shows the
+The plan text (check_oracle.py --plans) shows the *shapes*; this shows the
 *costs*: a query whose shuffle write is a large multiple of its final
 output usually has a missing partial aggregation or an unnecessary
 exchange, and spill > 0 at bench scale means partitions are sized

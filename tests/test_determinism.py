@@ -3,17 +3,29 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "scripts"))
 
 import pytest
+from check_oracle import walk
 
-from lakehouse_ecommerce_etl_pipeline_spark.plans import queries
+from lakehouse_ecommerce_etl_pipeline_spark.session import conf_scope
 
 SF0001 = "/root/testdata/sf0.001"
 
+# Physical choices a canary's result must not depend on, each compared
+# with the session default: a different shuffle partitioning, no
+# adaptive re-planning, and sort-merge in place of broadcast joins.
+AXES = {
+    "7 shuffle partitions": {"spark.sql.shuffle.partitions": "7"},
+    "AQE off": {"spark.sql.adaptive.enabled": "false"},
+    "broadcast joins off": {"spark.sql.autoBroadcastJoinThreshold": "-1"},
+}
+
 # Partition-sensitivity canaries: every decision in these rides on
 # integer/decimal algebra or unique fixpoints, so the result multiset
-# must be BIT-identical under any shuffle partitioning. A regression
+# must be BIT-identical under every one of the AXES. A regression
 # here means some float sum or non-total ordering snuck back in.
 CANARIES = [
     "q_allocation_largest_remainder",  # int div/mod + remainder rank
@@ -43,20 +55,24 @@ CANARIES = [
 ]
 
 
-def _snap(spark, name):
-    df = queries()[name](spark, SF0001).toPandas()
+def _snap(spark, name, overrides):
+    """Build and run ``name`` through the registry walker with the
+    session conf ``overrides`` in force for both."""
+    with conf_scope(spark, overrides):
+        [w] = walk(spark, SF0001, [name])
+        if isinstance(w.df, Exception):
+            raise w.df
+        df = w.df.toPandas()
     df = df.reindex(sorted(df.columns), axis=1)
     return df.sort_values(by=list(df.columns), ignore_index=True)
 
 
 @pytest.mark.parametrize("name", CANARIES)
 def test_result_is_partitioning_invariant(spark, name):
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
-        a = _snap(spark, name)
-        spark.conf.set("spark.sql.shuffle.partitions", "7")
-        b = _snap(spark, name)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    assert a.equals(b), f"{name} changed under a different partitioning"
+    """The canary's rows are equal under the session default and under
+    each of the ``AXES``."""
+    base = _snap(spark, name, {})
+    for axis, overrides in AXES.items():
+        assert _snap(spark, name, overrides).equals(base), (
+            f"{name} changed under {axis}"
+        )

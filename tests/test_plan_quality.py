@@ -11,51 +11,50 @@ import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "scripts"))
+
+import numeric_portability_audit as npa
+from check_oracle import (
+    cartesian_product,
+    duplicated_join_subtrees,
+    executed_plan,
+    walk,
+    window_over_single_partition,
+)
 
 from lakehouse_ecommerce_etl_pipeline_spark.plans.registry import REGISTRY
 
 SF0001 = "/root/testdata/sf0.001"
 
 
-def _session_state(spark):
-    """The temp views and the ids of the active streams of ``spark``."""
-    views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
-    return views, {str(q.id) for q in spark.streams.active}
-
-
 @pytest.fixture(scope="module")
 def registry_walk(spark):
-    """Build every registered query once for the registry-wide gates
-    of this module: per name, the output schema (or the exception the
-    query function raised), the executed plan text (or the exception
-    planning raised), and what the query function left in the session:
-    the temp views and the active streams it added. Each query function
-    runs its eager work (fixture builds, spills, streaming drains,
-    write demos) once, not once per gate. Only schemas, plan strings
-    and names are kept."""
-    walk = {}
-    for name in sorted(REGISTRY):
-        views, streams = _session_state(spark)
-        try:
-            df = REGISTRY[name].fn(spark, SF0001)
-        except Exception as exc:  # noqa: BLE001 — each gate reports it
-            schema = plan = exc
+    """Build every registered query once (``check_oracle.walk``) for
+    the registry-wide gates of this module: per name, the output schema
+    (or the exception the query function raised), the executed plan
+    text before execution (or the exception planning raised), and what
+    the query function left in the session. Each query function runs
+    its eager work (fixture builds, spills, streaming drains, write
+    demos) once, not once per gate. Only schemas, plan strings and the
+    leak records are kept."""
+    out = {}
+    for w in walk(spark, SF0001):
+        if isinstance(w.df, Exception):
+            schema = plan = w.df
         else:
-            schema = df.schema
+            schema = w.df.schema
             try:
-                plan = df._jdf.queryExecution().executedPlan().toString()
+                plan = executed_plan(w.df)
             except Exception as exc:  # noqa: BLE001 — each gate reports it
                 plan = exc
-        views_after, streams_after = _session_state(spark)
-        left = (views_after - views, streams_after - streams)
-        walk[name] = (schema, plan, left)
-    return walk
+        out[w.name] = (schema, plan, w.left)
+    return out
 
 
 def _plan(spark, name: str) -> str:
-    df = REGISTRY[name].fn(spark, SF0001)
-    return df._jdf.queryExecution().executedPlan().toString()
+    return executed_plan(REGISTRY[name].fn(spark, SF0001))
 
 
 def test_star_join_broadcasts_dimensions(spark):
@@ -182,26 +181,13 @@ def test_registry_has_no_single_partition_window(registry_walk):
     q_decision_stump and q_surrogate_keys escape): no registered
     query may plan a Window whose data-path child chain moves
     unbounded rows through an Exchange SinglePartition.  The detector
-    (scripts/window_audit.py, shared with the standalone audit) walks
+    (scripts/check_oracle.py, shared with the registry sweep) walks
     only the Window's unary child chain, so 1-row scalar-aggregate
     merges inside broadcast branches don't false-positive, and
     rank-filter pushdown (WindowGroupLimit) / TakeOrderedAndProject
     bounded inputs pass structurally.  Domain-bounded exceptions live
     in the justified allowlist above; stale allowlist entries fail
     too."""
-    scripts_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "scripts",
-    )
-    sys.path.insert(0, scripts_dir)
-    try:
-        from window_audit import (
-            cartesian_product,
-            window_over_single_partition,
-        )
-    finally:
-        sys.path.remove(scripts_dir)
-
     offenders = []
     cartesians = []
     errors = []
@@ -239,16 +225,6 @@ def test_single_partition_window_detector():
     shape, the broadcast-branch scalar-merge false positive it must
     NOT flag, and the two bounded rescues (WindowGroupLimit partial,
     TakeOrderedAndProject)."""
-    scripts_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "scripts",
-    )
-    sys.path.insert(0, scripts_dir)
-    try:
-        from window_audit import window_over_single_partition
-    finally:
-        sys.path.remove(scripts_dir)
-
     offender = "\n".join([
         "Window [row_number() ...]",
         "+- Sort [x ASC], false, 0",
@@ -375,16 +351,6 @@ def test_detector_flags_live_spark_offender(spark):
     instead of silently neutering the registry-wide gate (which would
     otherwise only be caught while an allowlisted offender exists to
     go 'stale')."""
-    scripts_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "scripts",
-    )
-    sys.path.insert(0, scripts_dir)
-    try:
-        from window_audit import window_over_single_partition
-    finally:
-        sys.path.remove(scripts_dir)
-
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
@@ -427,38 +393,22 @@ def test_driver_action_sites_are_classified():
     classification update (the r7 judge watch item as a property)."""
     import subprocess
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     proc = subprocess.run(
-        [sys.executable, os.path.join(repo, "scripts", "collect_audit.py")],
+        [sys.executable, os.path.join(REPO, "scripts", "collect_audit.py")],
         capture_output=True,
         text=True,
-        cwd=repo,
+        cwd=REPO,
     )
     assert proc.returncode == 0, proc.stdout + proc.stderr
 
 
-def _import_subplan_audit():
-    scripts_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "scripts",
-    )
-    sys.path.insert(0, scripts_dir)
-    try:
-        from subplan_audit import duplicated_join_subtrees
-    finally:
-        sys.path.remove(scripts_dir)
-    return duplicated_join_subtrees
-
-
 def test_duplicated_join_subtree_detector():
     """Pure-text pins for the round-9 duplicated-subplan detector
-    (scripts/subplan_audit.py): the flagged shape (the same join
+    (scripts/check_oracle.py): the flagged shape (the same join
     subtree printed twice — Spark re-executes it), the ReusedExchange
     non-flag (a childless reuse reference is NOT a second execution),
     the InMemoryRelation mask (persisted generations re-print their
     cached lineage in every reference), and key discrimination."""
-    duplicated_join_subtrees = _import_subplan_audit()
-
     dup = "\n".join([
         "Union",
         ":- Project [a#1]",
@@ -552,8 +502,6 @@ def test_subplan_detector_flags_live_spark_duplicate(spark):
     un-gate the audit."""
     from pyspark.sql import functions as F
 
-    duplicated_join_subtrees = _import_subplan_audit()
-
     a = spark.range(200).select(
         (F.col("id") % 20).alias("k"),
         (F.col("id") * 2).alias("x"),
@@ -569,16 +517,15 @@ def test_subplan_detector_flags_live_spark_duplicate(spark):
         j.select((F.col("y") + F.length("q")).alias("v"))
     )
     u.collect()
-    plan = u._jdf.queryExecution().executedPlan().toString()
-    plan = plan.split("== Initial Plan ==")[0]
+    plan = executed_plan(u)
     found = duplicated_join_subtrees(plan)
     assert found and found[0][1] == 2, plan[:3000]
 
 
 def test_fixed_subplan_offenders_stay_clean(spark):
     """The round-9 fix pins: the four true duplicated-subplan
-    offenders the registry-wide audit found (scripts/subplan_audit.py
-    — every other flag was AQE exchange reuse or cached lineage) and
+    offenders the registry-wide audit found (the duplicated-subplan
+    detector of scripts/check_oracle.py — every other flag was AQE exchange reuse or cached lineage) and
     how each was fixed:
 
     - q_embedding_near_dup: vector-keyed rep join ran 3x across
@@ -592,32 +539,15 @@ def test_fixed_subplan_offenders_stay_clean(spark):
       enumeration scoring all tiers + a collect_set overlap.
 
     Their EXECUTED plans must stay free of duplicated join subtrees."""
-    duplicated_join_subtrees = _import_subplan_audit()
-
-    for name in (
+    for w in walk(spark, SF0001, [
         "q_embedding_near_dup",
         "q_minhash_calibration",
         "q_attribution_first_last",
         "q_truncation_recall",
-    ):
-        df = REGISTRY[name].fn(spark, SF0001)
-        df.collect()
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        plan = plan.split("== Initial Plan ==")[0]
-        assert duplicated_join_subtrees(plan) == [], (name, plan[:3000])
-
-
-def _import_numeric_audit():
-    scripts_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "scripts",
-    )
-    sys.path.insert(0, scripts_dir)
-    try:
-        import numeric_portability_audit as npa
-    finally:
-        sys.path.remove(scripts_dir)
-    return npa
+    ]):
+        w.df.collect()
+        plan = executed_plan(w.df)
+        assert duplicated_join_subtrees(plan) == [], (w.name, plan[:3000])
 
 
 def test_numeric_portability_detector():
@@ -628,8 +558,6 @@ def test_numeric_portability_detector():
     DECIMAL(p>=30, s>0) alias (`128 * rev`), whose result typing is
     version-dependent on BOTH engines.  The fixed BIGINT-cents
     lattice must NOT flag, and narrow decimals must NOT flag."""
-    npa = _import_numeric_audit()
-
     # the literal r9 offender shape (old q_ewma_taps oracle)
     old = """
     WITH d AS (
@@ -691,8 +619,6 @@ def test_numeric_portability_python_detector(tmp_path):
     """The plan-source sweep flags a function pairing a wide s>0
     decimal cast with an integer F.lit product (over-approximate by
     design; the committed allowlist carries per-function triage)."""
-    npa = _import_numeric_audit()
-
     bad = tmp_path / "bad_plan.py"
     bad.write_text(
         "import pyspark.sql.functions as F\n"
@@ -717,18 +643,13 @@ def test_numeric_portability_registry_clean():
     across all 409 oracles and all plan modules (the allowlist has
     been EMPTY since the round-11 integer-lattice sweep; py_offences
     also applies rule 3 to plan modules)."""
-    npa = _import_numeric_audit()
     from lakehouse_ecommerce_etl_pipeline_spark import plans as _p
 
     bad = []
     for name, sql in _p.oracle_sql().items():
         for off in npa.sql_offences(sql):
             bad.append(f"{name}: {off}")
-    pkg = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "lakehouse_ecommerce_etl_pipeline_spark",
-        "plans",
-    )
+    pkg = os.path.join(REPO, "lakehouse_ecommerce_etl_pipeline_spark", "plans")
     for f in sorted(os.listdir(pkg)):
         if f.endswith(".py") and f != "__init__.py":
             for off in npa.py_offences(os.path.join(pkg, f)):
@@ -741,8 +662,6 @@ def test_numeric_portability_rule2_shapes():
     products overflowing precision 38 (engine-specific rescale) and
     divisions involving a wide decimal (the most build-variable
     typing of all) must flag; precision-safe products must not."""
-    npa = _import_numeric_audit()
-
     overflow = """
     WITH a AS (SELECT CAST(SUM(x) AS DECIMAL(30,8)) AS u,
                       CAST(SUM(y) AS DECIMAL(20,4)) AS v FROM t)
@@ -775,8 +694,6 @@ def test_numeric_portability_rule3_shapes():
     column to DECIMAL(p,s) in an oracle must flag; the BIGINT
     integer-cents lattice and the CAST(FLOOR(..) AS DECIMAL(p,0))
     exactness carve-out must NOT flag."""
-    npa = _import_numeric_audit()
-
     # the literal r10 red-row shape (old q_kfold_assign oracle)
     kfold_old = """
     SELECT fold, COUNT(*) AS n_orders,
@@ -823,8 +740,6 @@ def test_numeric_portability_rule3_python_detector(tmp_path):
     references a double source column flags; the sanctioned
     round→bigint lattice does not; a stale allowlist hash is reported
     for re-triage, never silently excused."""
-    npa = _import_numeric_audit()
-
     bad = tmp_path / "bad3.py"
     bad.write_text(
         "import pyspark.sql.functions as F\n"
@@ -868,7 +783,6 @@ def test_numeric_portability_registry_clean_rule3():
     oracles (the plan-module sweep is covered by
     test_numeric_portability_registry_clean, whose py_offences now
     includes rule 3)."""
-    npa = _import_numeric_audit()
     from lakehouse_ecommerce_etl_pipeline_spark import plans as _p
 
     bad = []
@@ -903,23 +817,14 @@ def test_no_decimal_typed_output_columns(registry_walk):
     assert bad == [], bad
 
 
-def test_queries_leave_no_stream_or_streaming_view(registry_walk):
+def test_queries_leave_no_temp_view_stream_or_conf_change(registry_walk):
     """Session hygiene over the shared walk: no registered query leaves
-    a stream running, and no streaming-family query (every drained
-    stream) or ``q_sql_scripting`` leaves a temp view in the session
-    that the next query of a shared session would see."""
-    family = {
-        n
-        for n in registry_walk
-        if n.startswith(("q_stream_", "q_python_datasource_stream"))
-        or n == "q_statestore_read"
+    a temp view, a running stream or a changed conf key in the session,
+    where the next query of a shared session would see it. (The walk
+    also counts the RDDs a query leaves persisted; those are recorded
+    by the sweep, not gated.)"""
+    left = {
+        name: {k: v for k, v in w_left.items() if k != "rdds" and v}
+        for name, (_, _, w_left) in registry_walk.items()
     }
-    assert len(family) == 17, sorted(family)
-    running = {n: ids for n, (_, _, (_, ids)) in registry_walk.items() if ids}
-    assert running == {}
-    views = {
-        n: registry_walk[n][2][0]
-        for n in sorted(family | {"q_sql_scripting"})
-        if registry_walk[n][2][0]
-    }
-    assert views == {}
+    assert {name: v for name, v in left.items() if v} == {}

@@ -67,6 +67,31 @@ def test_transform_with_state_parity_or_fallback(spark):
     assert got == want
 
 
+def test_conf_scope_restores_set_and_unset_keys(spark):
+    """``session.conf_scope`` gives a key that was set its prior value
+    back and unsets a key that was unset, after a clean exit and after
+    the body raised."""
+    import pytest
+
+    from lakehouse_ecommerce_etl_pipeline_spark.session import conf_scope
+
+    set_key, unset_key = "spark.sql.shuffle.partitions", "spark.graft.probe"
+    before = spark.conf.get(set_key)
+    overrides = {set_key: "3", unset_key: "on"}
+    assert spark.conf.get(unset_key, None) is None
+    with conf_scope(spark, overrides):
+        assert spark.conf.get(set_key) == "3"
+        assert spark.conf.get(unset_key) == "on"
+    assert spark.conf.get(set_key) == before
+    assert spark.conf.get(unset_key, None) is None
+
+    with pytest.raises(RuntimeError):
+        with conf_scope(spark, overrides):
+            raise RuntimeError("boom")
+    assert spark.conf.get(set_key) == before
+    assert spark.conf.get(unset_key, None) is None
+
+
 def test_state_sized_shuffle_sizes_and_restores(spark):
     """r13: stateful drains size shuffle partitions to the stream's
     input bytes (state partitioning cannot be AQE-coalesced) and must
