@@ -17,8 +17,8 @@ re-pairing on overlaps ("aaa" under (a,a) → ["aa","a"]).
 100 TB: each round is ONE shuffle (pair counts over the deduped
 word×count table — dedup first: pair counting is per distinct word,
 weighted by occurrence count, so the working set is the vocabulary,
-not the corpus); the symbol table is persisted per generation with the
-previous generation dropped (the q_pagerank loop discipline), and the
+not the corpus); the symbol table is checkpointed per generation with
+the previous generation dropped (the connected-components loop), and the
 merge decision is a top-1 of a tiny aggregated domain. Byte-level BPE
 at corpus scale adds nothing structural — just a bigger alphabet.
 
@@ -172,18 +172,18 @@ def train_bpe(
 
         has = _has_pair("s", l, r)
         # affected words: old + new symbol arrays side by side (the
-        # fold runs ONCE per affected word; persisted because both the
-        # next generation and the delta read it — its own plan is
+        # fold runs ONCE per affected word; checkpointed because both
+        # the next generation and the delta read it — its own plan is
         # shallow, a filter over the checkpointed generation)
         aff = syms.filter(has).select(
             "wc",
             F.col("s").alias("s_old"),
             _merge_pair(F.col("s"), l, r).alias("s_new"),
-        ).persist()
+        ).localCheckpoint(eager=False)
         nxt = (
             syms.filter(~has)
             .unionByName(aff.select("wc", F.col("s_new").alias("s")))
-            .localCheckpoint(eager=True)  # materializes (and caches) aff
+            .localCheckpoint(eager=True)  # materializes aff too
         )
 
         def _signed(col: str, sign: int) -> F.Column:
@@ -206,7 +206,6 @@ def train_bpe(
             .agg(F.sum("e.d").alias("d"))
             .collect()
         )
-        aff.unpersist()
         for row in delta_rows:
             key = (row["l"], row["r"])
             c = counts.get(key, 0) + row["d"]

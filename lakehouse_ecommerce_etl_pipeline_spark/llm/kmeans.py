@@ -90,13 +90,11 @@ def kmeans(
     unchanged, so the trajectory is bit-identical.
 
     Checkpoint lifetime (r12 ADVICE item 2): the returned plan reads
-    the checkpointed blocks, so there is no in-function scope to
-    unpersist in — blocks free when ContextCleaner GCs the RDD after
-    the caller drops the DataFrame.  The same applies to every
-    localCheckpoint whose result IS the returned lazy plan (pq,
-    similarity, dedup, llm8/llm31/llm37/analytics62 call sites);
-    bounded scopes (logreg's try/finally, bpe/rank-centrality's
-    persist/unpersist loops) release explicitly."""
+    the checkpointed blocks, and they free when ContextCleaner GCs
+    the RDD after the caller drops the DataFrame — no release code.
+    localCheckpoint is the package's one way to reuse an intermediate
+    within a query, so the same holds at every site (loops included:
+    a superseded generation frees once it is dropped)."""
     df = df.select(id_col, vec_col).localCheckpoint(eager=True)
     dim = len(df.select(vec_col).first()[0])
     seeds = [

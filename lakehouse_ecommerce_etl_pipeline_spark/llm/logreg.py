@@ -50,21 +50,16 @@ def train_logreg(
     gradient aggregation is one hash aggregate per iteration —
     partial sums combine map-side, the driver sees k+1 doubles.
 
-    The projected feature table is persisted for the duration of the
-    loop: every iteration re-reads the SAME (k+1)-column numeric
-    rows, and without the cache each of the ``iters`` aggregates
-    re-ran the upstream scan + feature extraction (regexp/tokenize
-    string work) from parquet — iters+1 full passes for one pass of
-    useful data (r12 optimization, guide §5).  Caching preserves the
-    scan partitioning, so per-partition partial-sum order — and with
-    it the learned float trajectory — is bit-identical."""
-    df = df.select(label_col, *feature_cols).persist()
-    try:
-        n = df.count()
-        w = _gd_loop(df, feature_cols, label_col, lr, iters, n)
-    finally:
-        df.unpersist()
-    return w
+    The projected feature table is checkpointed before the loop:
+    every iteration re-reads the SAME (k+1)-column numeric rows, and
+    without it each of the ``iters`` aggregates re-ran the upstream
+    scan + feature extraction (regexp/tokenize string work) from
+    parquet — iters+1 full passes for one pass of useful data (r12
+    optimization, guide §5).  The checkpoint keeps the scan
+    partitioning, so per-partition partial-sum order — and with it
+    the learned float trajectory — is bit-identical."""
+    df = df.select(label_col, *feature_cols).localCheckpoint(eager=True)
+    return _gd_loop(df, feature_cols, label_col, lr, iters, df.count())
 
 
 def _gd_loop(

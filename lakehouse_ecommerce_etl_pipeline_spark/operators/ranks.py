@@ -56,16 +56,16 @@ unchanged DuckDB oracles.
 reuses the counts scan's lineage) and one balanced shuffle on bucket;
 the tie-class split adds one bounded probe + recount ONLY when skew
 is detected.  The probe/counts/rank trio executes the upstream
-lineage up to 3×: pass ``materialize=`` (e.g. a ``spill_final``
-closure) when the upstream is expensive, so recompute-vs-spill is a
-caller's explicit choice (Spearman measured recompute 2.8 s vs spill
-3.4 s at sf0.1 for a cheap upstream; Theil-Sen spills its pair
-table).
+lineage up to 3×: a caller whose upstream is expensive passes
+``df.localCheckpoint(eager=True)``, so recompute-vs-materialize is
+the caller's explicit choice (Spearman and the CCNet buckets
+checkpoint their input; the Theil-Sen selection recomputes its
+day-pair expansion, which measured cheaper than storing it).
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window
@@ -688,7 +688,6 @@ def with_global_row_numbers(
     specs: Sequence[RankSpec],
     n_buckets: int = DEFAULT_BUCKETS,
     on_skew: str = "raise",
-    materialize: Callable[[DataFrame], DataFrame] | None = None,
 ) -> tuple[DataFrame, int]:
     """df + one exact ``ROW_NUMBER() OVER (ORDER BY spec.order_by)``
     column PER SPEC, all computed in O(1) shared driver actions (2,
@@ -698,8 +697,6 @@ def with_global_row_numbers(
     one balanced per-bucket window per spec (d hash exchanges, zero
     single-partition windows) and executes once.  Returns (df, total
     row count)."""
-    if materialize is not None:
-        df = materialize(df)
     final_exprs, ids_pd, offs_pd, total = _multi_assign(
         df, specs, n_buckets, on_skew
     )
@@ -722,7 +719,6 @@ def with_global_ntiles(
     specs: Sequence[RankSpec],
     n_buckets: int = DEFAULT_BUCKETS,
     on_skew: str = "raise",
-    materialize: Callable[[DataFrame], DataFrame] | None = None,
 ) -> DataFrame:
     """df + one exact ``NTILE(spec.k) OVER (ORDER BY spec.order_by)``
     per spec (``k`` required), sharing the O(1) action budget of
@@ -734,7 +730,6 @@ def with_global_ntiles(
     ]
     ranked, total = with_global_row_numbers(
         df, tmp, n_buckets=n_buckets, on_skew=on_skew,
-        materialize=materialize,
     )
     for i, sp in enumerate(specs):
         if sp.k is None:
@@ -754,7 +749,6 @@ def with_global_row_number(
     n_buckets: int = DEFAULT_BUCKETS,
     secondary: str | None = None,
     on_skew: str = "raise",
-    materialize: Callable[[DataFrame], DataFrame] | None = None,
 ) -> DataFrame:
     """df + exact ``ROW_NUMBER() OVER (ORDER BY order_by)`` as ``rn``.
 
@@ -762,14 +756,11 @@ def with_global_row_number(
     non-null column ``primary`` (direction given by ``descending``);
     ``order_by`` carries the full Column list including direction.
     ``secondary`` names the numeric second order key (always ASC) to
-    enable tie-class auto-splitting under skew; ``materialize`` (e.g.
-    a ``spill_final`` closure) cuts an expensive upstream lineage so
-    the probe/counts/rank passes read a materialized table instead of
-    recomputing it up to 3×.
+    enable tie-class auto-splitting under skew.
     """
     out, _ = _global_row_number_with_total(
         df, order_by, primary, descending, rn, n_buckets,
-        secondary=secondary, on_skew=on_skew, materialize=materialize,
+        secondary=secondary, on_skew=on_skew,
     )
     return out
 
@@ -783,13 +774,12 @@ def _global_row_number_with_total(
     n_buckets: int,
     secondary: str | None = None,
     on_skew: str = "raise",
-    materialize: Callable[[DataFrame], DataFrame] | None = None,
 ) -> tuple[DataFrame, int]:
     return with_global_row_numbers(
         df,
         [RankSpec(order_by, primary, descending=descending, rn=rn,
                   secondary=secondary)],
-        n_buckets=n_buckets, on_skew=on_skew, materialize=materialize,
+        n_buckets=n_buckets, on_skew=on_skew,
     )
 
 
@@ -803,7 +793,6 @@ def with_global_running_sums(
     n_buckets: int = DEFAULT_BUCKETS,
     secondary: str | None = None,
     on_skew: str = "raise",
-    materialize: Callable[[DataFrame], DataFrame] | None = None,
 ) -> DataFrame:
     """df + exact ``SUM(value_col) OVER (ORDER BY order_by ROWS
     UNBOUNDED PRECEDING..CURRENT ROW)`` for EACH value col (one probe
@@ -840,8 +829,6 @@ def with_global_running_sums(
                 "are only bit-equal to the window form for integral/"
                 "decimal values (quantize floats first)"
             )
-    if materialize is not None:
-        df = materialize(df)
     b_df, rows, _total = _assign_buckets(
         df, primary, descending, n_buckets, secondary, on_skew, sum_aggs,
         agg_aliases=[f"__s_{vc}" for vc in value_cols],
@@ -881,14 +868,13 @@ def with_global_running_sum(
     n_buckets: int = DEFAULT_BUCKETS,
     secondary: str | None = None,
     on_skew: str = "raise",
-    materialize: Callable[[DataFrame], DataFrame] | None = None,
 ) -> DataFrame:
     """Single-column convenience wrapper over
     :func:`with_global_running_sums` (same exact-dtype contract)."""
     return with_global_running_sums(
         df, order_by, primary, [value_col], [alias],
         descending=descending, n_buckets=n_buckets,
-        secondary=secondary, on_skew=on_skew, materialize=materialize,
+        secondary=secondary, on_skew=on_skew,
     )
 
 
@@ -901,7 +887,6 @@ def global_kth_with_total(
     n_buckets: int = DEFAULT_BUCKETS,
     secondary: str | None = None,
     on_skew: str = "raise",
-    materialize: Callable[[DataFrame], DataFrame] | None = None,
 ) -> tuple[DataFrame, int]:
     """(rows whose exact global ROW_NUMBER == k, total) — distributed
     SELECTION without ranking everything (the quickselect shape): the
@@ -919,8 +904,6 @@ def global_kth_with_total(
     single-partition window anywhere, so the selection survives the
     committed plan check and a 100× scale-up alike; ``secondary``
     passes through for tie-class auto-splitting inside the slice."""
-    if materialize is not None:
-        df = materialize(df)
     cuts = _probe_cuts(df, primary, descending, n_buckets)
     pcol = F.col(primary)
     bkt0 = _cut_count_expr(pcol, cuts, descending)
@@ -993,7 +976,6 @@ def with_global_ntile(
     n_buckets: int = DEFAULT_BUCKETS,
     secondary: str | None = None,
     on_skew: str = "raise",
-    materialize: Callable[[DataFrame], DataFrame] | None = None,
 ) -> DataFrame:
     """df + exact ``NTILE(k) OVER (ORDER BY order_by)`` as ``alias``,
     via the boundary-cut global row number (no single-partition
@@ -1001,7 +983,7 @@ def with_global_ntile(
     counts collect)."""
     ranked, total = _global_row_number_with_total(
         df, order_by, primary, descending, "__grn", n_buckets,
-        secondary=secondary, on_skew=on_skew, materialize=materialize,
+        secondary=secondary, on_skew=on_skew,
     )
     return ranked.withColumn(
         alias, ntile_expr(F.col("__grn"), total, k)

@@ -88,7 +88,7 @@ def write_audit_publish(
 
     staged = spark.read.parquet(staging)
     good, bad = apply_rules(staged, rules)
-    bad = bad.persist()  # counted AND sampled for reasons — one scan
+    bad = bad.localCheckpoint(eager=True)  # counted AND sampled for reasons
     rejected = bad.count()
     report = {
         "staged_rows": staged.count(),
@@ -102,7 +102,6 @@ def write_audit_publish(
         "staging_dir": staging,
         "published_version": None,
     }
-    bad.unpersist()
     if rejected:
         raise AuditFailed(report)
 

@@ -223,23 +223,6 @@ def _order_part_pairs_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("l_orderkey", "p.src", "p.dst")
 
 
-def spill_final(df: DataFrame, sf_dir: str, name: str) -> DataFrame:
-    """Materialize the FINAL generation of an iterative computation to
-    scratch parquet and return the re-read scan.
-
-    Returning the last persisted generation directly leaks one cached
-    table per invocation (leaked caches previously inflated bench 3×);
-    unpersisting it instead would force the returned plan to replay
-    the whole iterative lineage on collection. The spill truncates the
-    lineage AND releases the cache: callers unpersist the final
-    generation right after this returns. Bounded at the result's own
-    row count — exactly what a production run would publish anyway."""
-    spark = df.sparkSession
-    path = os.path.join(session_dir(spark, sf_dir, "iterative"), name)
-    df.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
-
-
 _built: set[tuple[str, str, str]] = set()
 _build_lock = threading.RLock()
 _app_roots: set[str] = set()

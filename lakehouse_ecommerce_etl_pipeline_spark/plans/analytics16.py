@@ -33,7 +33,6 @@ from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import (
     load,
     order_part_edges,
     session_artifact,
-    spill_final,
 )
 from lakehouse_ecommerce_etl_pipeline_spark.plans.registry import register
 
@@ -692,17 +691,19 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     against an independent pure-Python peeler (tests/test_kcore.py).
 
     100 TB: each round is one degree aggregation + two semi-joins on
-    the shrinking edge set (monotone — nothing ever returns), with
-    the same persist/count/unpersist generation discipline as
-    pagerank; round count is bounded by the degeneracy ordering
-    depth, small in practice. The deleted-node set, not the graph,
-    is the per-round churn."""
+    the shrinking edge set (monotone — nothing ever returns); each
+    generation is localCheckpointed, so a round reads the previous
+    round's blocks and its lineage stays one round deep, and the
+    blocks free when the superseded generation is dropped. Round
+    count is bounded by the degeneracy ordering depth, small in
+    practice. The deleted-node set, not the graph, is the per-round
+    churn."""
     k = kcore_k(spark, sf_dir)
     e = order_part_edges(spark, sf_dir)
     sym = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    cur = sym.persist()
+    cur = sym.localCheckpoint(eager=True)
     n_edges = cur.count()
     for _ in range(_KCORE_MAX_ROUNDS):
         keep = (
@@ -717,20 +718,15 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.broadcast(keep.select(F.col("src").alias("dst"))), "dst"
             )
             .select("src", "dst")
-            .persist()
+            .localCheckpoint(eager=True)
         )
         n_next = nxt.count()
-        cur.unpersist()
         cur = nxt
         if n_next == n_edges:
             break
         n_edges = n_next
-    out = (
+    return (
         cur.groupBy("src")
         .agg(F.count(F.lit(1)).cast("bigint").alias("core_deg"))
         .select(F.col("src").alias("node"), "core_deg")
     )
-    result = out.persist()
-    result.count()
-    cur.unpersist()
-    return result

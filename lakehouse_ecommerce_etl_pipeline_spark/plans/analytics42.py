@@ -100,10 +100,13 @@ def q_csv_corrupt_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .csv(path)
-        .cache()
+        # materialized once: Spark refuses a raw-file query that only
+        # references the corrupt-record column, and both splits below
+        # read these blocks instead of re-parsing the file
+        .localCheckpoint(eager=True)
     )
     good = permissive.filter(F.col("_corrupt_record").isNull())
-    corrupt = permissive.filter(F.col("_corrupt_record").isNotNull())
+    n_corrupt = permissive.filter(F.col("_corrupt_record").isNotNull()).count()
     dropped = (
         spark.read.schema(
             "o_orderkey BIGINT, o_custkey BIGINT, o_totalprice DOUBLE"
@@ -114,12 +117,10 @@ def q_csv_corrupt_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count over a PARSED column — a bare count() would prune every
     # column, parse nothing, and count the garbage lines too
     n_dropped = dropped.agg(F.count("o_orderkey")).first()[0]
-    out = good.agg(
-        (F.count(F.lit(1)) + F.lit(corrupt.count()))
-        .cast("bigint")
-        .alias("n_lines"),
+    return good.agg(
+        (F.count(F.lit(1)) + F.lit(n_corrupt)).cast("bigint").alias("n_lines"),
         F.count(F.lit(1)).cast("bigint").alias("n_good"),
-        F.lit(corrupt.count()).cast("bigint").alias("n_corrupt"),
+        F.lit(n_corrupt).cast("bigint").alias("n_corrupt"),
         F.lit(n_dropped).cast("bigint").alias("n_dropmalformed"),
         (
             F.sum(
@@ -128,9 +129,6 @@ def q_csv_corrupt_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.lit(100.0)
         ).alias("sum_good_price"),
     )
-    out = out.localCheckpoint(eager=True)
-    permissive.unpersist()
-    return out
 
 
 _N_BAD_J = 5
@@ -213,11 +211,11 @@ def q_json_corrupt_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .json(path)
-        .cache()
+        .localCheckpoint(eager=True)  # see q_csv_corrupt_recovery
     )
     good = parsed.filter(F.col("_corrupt_record").isNull())
     n_corrupt = parsed.filter(F.col("_corrupt_record").isNotNull()).count()
-    out = good.agg(
+    return good.agg(
         (F.count(F.lit(1)) + F.lit(n_corrupt)).cast("bigint").alias("n_lines"),
         F.count(F.lit(1)).cast("bigint").alias("n_good"),
         F.lit(n_corrupt).cast("bigint").alias("n_corrupt"),
@@ -228,6 +226,3 @@ def q_json_corrupt_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.lit(100.0)
         ).alias("sum_good_price"),
     )
-    out = out.localCheckpoint(eager=True)
-    parsed.unpersist()
-    return out

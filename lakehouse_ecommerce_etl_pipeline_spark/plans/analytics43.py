@@ -101,32 +101,25 @@ def q_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     sym = half.unionByName(
         half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
+    # seeds: a filtered scan, cheap to read twice in the first hop;
+    # each hop's table is checkpointed, so a hop's plan is one join
+    # deep whatever the hop count
     dist = (
         load(spark, sf_dir, "part")
         .filter(F.col("p_partkey") % _SEED_MOD == 0)
-        .select(
-            F.col("p_partkey").alias("node"), F.lit(0).alias("dist")
-        )
-        .persist()
+        .select(F.col("p_partkey").alias("node"), F.lit(0).alias("dist"))
     )
-    dist.count()
     for _ in range(_HOPS):
         msgs = sym.join(F.broadcast(dist), sym["src"] == dist["node"]).select(
             F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist")
         )
-        nxt = (
+        dist = (
             msgs.unionByName(dist)
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
-            .persist()
+            .localCheckpoint(eager=True)
         )
-        nxt.count()
-        dist.unpersist()
-        dist = nxt
-    out = dist.select("node", F.col("dist").cast("int").alias("dist"))
-    rows = out.localCheckpoint(eager=True)
-    dist.unpersist()
-    return rows
+    return dist.select("node", F.col("dist").cast("int").alias("dist"))
 
 
 @register(

@@ -233,21 +233,15 @@ def q_tvd_drift_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB: counts collapse at the (week, type) grain map-side; the
     grid, totals, and adjacent-week self-join all run on that tiny
-    aggregate, which is MATERIALIZED once (spill_final) — the four
-    plan branches that reference it would otherwise each re-scan the
-    raw stream (Spark does no cross-branch CSE on DataFrame reuse).
-    Drift never touches the raw stream twice."""
-    from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import (
-        spill_final,
-    )
-
+    aggregate, which is MATERIALIZED once (localCheckpoint) — the
+    four plan branches that reference it would otherwise each re-scan
+    the raw stream (Spark does no cross-branch CSE on DataFrame
+    reuse).  Drift never touches the raw stream twice."""
     ev = load(spark, sf_dir, "events")
-    c = spill_final(
-        ev.groupBy(
-            F.date_trunc("week", "ts").alias("wk"), "event_type"
-        ).agg(F.count(F.lit(1)).cast("bigint").alias("cnt")),
-        sf_dir,
-        "tvd_weekly_counts",
+    c = (
+        ev.groupBy(F.date_trunc("week", "ts").alias("wk"), "event_type")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
+        .localCheckpoint(eager=False)
     )
     weeks = c.select("wk").distinct()
     types = c.select("event_type").distinct()

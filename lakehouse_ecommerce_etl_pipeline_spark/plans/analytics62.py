@@ -41,10 +41,7 @@ from lakehouse_ecommerce_etl_pipeline_spark.operators.ranks import (
     global_kth_with_total,
     with_global_row_numbers,
 )
-from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import (
-    load,
-    spill_final,
-)
+from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import load
 from lakehouse_ecommerce_etl_pipeline_spark.plans.registry import register
 
 _US_PER_DAY = 86_400_000_000
@@ -169,15 +166,14 @@ def q_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # instead of re-running the lineitem aggregate + orders join up to
     # 3×.  Interleaved A/B at sf0.1: 3.09 → 2.50 s min-of-3 (0.81×);
     # at 100 TB this turns three full lineitem scans into one.
-    # (Parquet spill_final measured SLOWER than recompute here — the
+    # (A parquet spill measured SLOWER than recompute here — the
     # write dominates; the checkpoint keeps blocks executor-local.)
     both, total = with_global_row_numbers(
-        j,
+        j.localCheckpoint(eager=True),
         [
             RankSpec(["x", "k"], primary="x", rn="rx", secondary="k"),
             RankSpec(["y", "k"], primary="y", rn="ry", secondary="k"),
         ],
-        materialize=lambda d: d.localCheckpoint(eager=True),
     )
     return _spearman_release(both, total)
 
@@ -397,7 +393,7 @@ def q_theil_sen_trend_rank_form(spark: SparkSession, sf_dir: str) -> DataFrame:
         "slope",
         F.try_divide(F.col("num").cast("double"), F.col("den").cast("double")),
     )
-    q = spill_final(q, sf_dir, "theil_sen_pairs_twin")
+    q = q.localCheckpoint(eager=True)
     ranked, total = _global_row_number_with_total(
         q, ["slope", "num", "den"], primary="slope", descending=False,
         rn="rn", n_buckets=64, secondary="num",

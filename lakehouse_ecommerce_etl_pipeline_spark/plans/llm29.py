@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import load, spill_final
+from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import load
 from lakehouse_ecommerce_etl_pipeline_spark.plans.llm import (
     _BANDS_UNION,
     _NUM_HASHES,
@@ -205,16 +205,15 @@ def q_ccnet_quality_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("lm_score_q div n_bigrams").cast("long").alias("per_bigram_q"),
     )
     tiled = with_global_ntile(
-        per_doc,
+        # the upstream is the full bigram-LM scoring chain — far too
+        # expensive to re-execute under the probe/counts actions
+        per_doc.localCheckpoint(eager=True),
         [F.col("per_bigram_q").desc(), "doc_id"],
         primary="per_bigram_q",
         k=3,
         descending=True,
         alias="__tile",
         secondary="doc_id",
-        # the upstream is the full bigram-LM scoring chain — far too
-        # expensive to re-execute under the probe/counts actions
-        materialize=lambda d: spill_final(d, sf_dir, "ccnet_scores"),
     )
     tile = F.col("__tile")
     return tiled.select(

@@ -351,12 +351,11 @@ def q_rank_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     pself = poff.groupBy("i").agg(
         (F.lit(_P_SCALE) - F.sum("p")).cast("bigint").alias("p")
     ).select("i", F.col("i").alias("j"), "p")
-    # k×k rows, consumed by every iteration — persist so the win-table
-    # chain upstream runs ONCE, not once per iteration (measured 2.7 s
-    # → sub-second at sf0.1); coalesce(1): scheduling 32 tasks per
-    # tiny join costs more than the join
-    pall = poff.unionByName(pself).coalesce(1).persist()
-    pall.count()
+    # k×k rows, consumed by every iteration — checkpointed so the
+    # win-table chain upstream runs ONCE, not once per iteration
+    # (measured 2.7 s → sub-second at sf0.1); coalesce(1): scheduling
+    # 32 tasks per tiny join costs more than the join
+    pall = poff.unionByName(pself).coalesce(1).localCheckpoint(eager=True)
     v = n.crossJoin(F.broadcast(k)).select(
         F.col("source").alias("i"),
         F.expr(f"CAST({_V_SCALE} DIV k AS BIGINT)").alias("v"),
@@ -370,14 +369,14 @@ def q_rank_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select(F.col("j").alias("i"), "v")
         )
+    # k rows, one per source: the unpartitioned rank runs on them here
+    # (eager), so the returned plan holds no single-partition window
     w = Window.orderBy(F.col("v").desc(), F.col("i"))
-    out = v.select(
+    return v.select(
         F.col("i").alias("source"),
         F.col("v").alias("score_scaled"),
         F.row_number().over(w).cast("int").alias("rk"),
-    ).localCheckpoint(eager=True)  # k rows — lets pall free per call
-    pall.unpersist()
-    return out
+    ).localCheckpoint(eager=True)
 
 
 _TOK_GATE = 60  # rater B: token count >= 60

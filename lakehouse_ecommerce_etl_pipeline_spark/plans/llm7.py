@@ -108,20 +108,14 @@ def q_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = ids.crossJoin(F.broadcast(cand)).filter(
         F.col("doc_id") != F.col("neg_id")
     )
-    # spill the survivor set (~C rows per doc) so the quadratic pair
-    # stream generates exactly ONCE — the top/good/deficit branches
-    # all re-read the bounded spill instead of re-running the
-    # generation per consumer
-    from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import (
-        spill_final,
-    )
-
-    surv = spill_final(
-        pairs.select("doc_id", "neg_id", h.alias("h")).filter(
-            F.col("h") < t
-        ),
-        sf_dir,
-        "neg_sampling_surv",
+    # checkpoint the survivor set (~C rows per doc) so the quadratic
+    # pair stream generates exactly ONCE — the top/good/deficit
+    # branches all re-read the bounded blocks instead of re-running
+    # the generation per consumer
+    surv = (
+        pairs.select("doc_id", "neg_id", h.alias("h"))
+        .filter(F.col("h") < t)
+        .localCheckpoint(eager=False)
     )
     w = Window.partitionBy("doc_id").orderBy("h", "neg_id")
     ranked = surv.withColumn("rk", F.row_number().over(w).cast("bigint"))

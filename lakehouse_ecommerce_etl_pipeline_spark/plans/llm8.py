@@ -29,7 +29,6 @@ from lakehouse_ecommerce_etl_pipeline_spark.llm.dedup import (
 from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import (
     load,
     load_parallel,
-    spill_final,
 )
 from lakehouse_ecommerce_etl_pipeline_spark.plans.llm import (
     _BANDS_UNION,
@@ -115,8 +114,10 @@ def q_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # REPRESENTATIVES (one per distinct token set), expand labels
     # through rep_id afterwards — bit-equivalent (identical-set docs
     # are cliques with identical neighborhoods; rep = group min) and
-    # linear in distinct texts instead of quadratic in duplicates
-    m = token_set_reps(docs, "doc_id", "text").persist()
+    # linear in distinct texts instead of quadratic in duplicates.
+    # The rep map feeds the rep join below and the label expansion at
+    # the end: checkpointed so the token-set grouping runs once
+    m = token_set_reps(docs, "doc_id", "text").localCheckpoint(eager=False)
     rep_docs = (
         docs.join(m, "doc_id")
         .filter(F.col("doc_id") == F.col("rep_id"))
@@ -145,7 +146,7 @@ def q_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     comp = connected_components(
         dup.select("id_a", "id_b"), max_iterations=_MAX_ROUNDS
     )
-    expanded = (
+    return (
         m.join(comp, m["rep_id"] == comp["node"], "left")
         .select(
             "doc_id",
@@ -155,6 +156,3 @@ def q_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             "is_representative", F.col("doc_id") == F.col("cluster")
         )
     )
-    out = spill_final(expanded, sf_dir, "near_dup_clusters")
-    m.unpersist()
-    return out

@@ -35,7 +35,10 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lakehouse_ecommerce_etl_pipeline_spark.session import delta_available
+from lakehouse_ecommerce_etl_pipeline_spark.session import (
+    conf_scope,
+    delta_available,
+)
 from lakehouse_ecommerce_etl_pipeline_spark.sources import table as managed
 
 
@@ -77,17 +80,17 @@ def merge_upsert(
     if delta_available():
         from delta.tables import DeltaTable  # type: ignore
 
-        if evolve_schema:
-            spark.conf.set("spark.databricks.delta.schema.autoMerge.enabled", "true")
+        auto_merge = "spark.databricks.delta.schema.autoMerge.enabled"
         cond = " AND ".join(f"t.{k} = s.{k}" for k in keys)
-        (
-            DeltaTable.forPath(spark, path)
-            .alias("t")
-            .merge(source.alias("s"), cond)
-            .whenMatchedUpdateAll()
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
+        with conf_scope(spark, {auto_merge: "true"} if evolve_schema else {}):
+            (
+                DeltaTable.forPath(spark, path)
+                .alias("t")
+                .merge(source.alias("s"), cond)
+                .whenMatchedUpdateAll()
+                .whenNotMatchedInsertAll()
+                .execute()
+            )
         return
     target = managed.read(spark, path)
     merged = merge_frames(target, source, keys, evolve_schema=evolve_schema)

@@ -38,10 +38,12 @@ _THRESH = 0.5
 
 
 def _read_or_none(spark: SparkSession, path: str) -> DataFrame | None:
-    try:
-        return spark.read.parquet(path)
-    except Exception:  # noqa: BLE001 — first batch: state not created yet
+    """The state table at ``path``, or None before the first batch has
+    written it. Any other read error raises: an unreadable index must
+    not pass for an empty one."""
+    if not os.path.exists(path):
         return None
+    return spark.read.parquet(path)
 
 
 def dedup_batch_against_index(
@@ -128,7 +130,8 @@ def run_incremental_dedup(
         s = batch.sparkSession
         survivors = _read_or_none(s, surv_path)
         bands = _read_or_none(s, bands_path)
-        keep = dedup_batch_against_index(batch, survivors, bands).persist()
+        keep = dedup_batch_against_index(batch, survivors, bands)
+        keep = keep.localCheckpoint(eager=True)
         if keep.count() > 0:
             keep.select("doc_id", "text").write.mode("append").parquet(
                 surv_path
@@ -137,7 +140,6 @@ def run_incremental_dedup(
             lsh_band(sig, "doc_id", _NUM_HASHES, _ROWS_PER_BAND).write.mode(
                 "append"
             ).parquet(bands_path)
-        keep.unpersist()
 
     # r13: the per-batch dedup pipeline runs ~6 tiny batch jobs per
     # staged file; the drain's input-sized shuffle width (same rationale

@@ -296,12 +296,14 @@ def executed_plan(df) -> str:
 
 
 def _session_state(spark):
-    """Temp views, active stream ids, conf and persisted RDD ids."""
+    """Temp views, active stream ids, conf and the number of cached
+    Datasets. (Persisted RDDs are not counted: localCheckpoint blocks
+    stay listed until a GC lets the ContextCleaner free them.)"""
     return (
         {t.name for t in spark.catalog.listTables() if t.isTemporary},
         {str(q.id) for q in spark.streams.active},
         spark.conf.getAll,
-        set(spark.sparkContext._jsc.getPersistentRDDs().keys()),
+        spark._jsparkSession.sharedState().cacheManager().numCachedEntries(),
     )
 
 
@@ -309,7 +311,7 @@ class Walked(NamedTuple):
     name: str
     df: object  # the built DataFrame, or the exception the query raised
     build_s: float
-    left: dict  # new temp views, streams, changed conf keys, RDD count
+    left: dict  # new temp views, streams, changed conf keys, new cached Datasets
 
 
 def walk(spark, sf_dir: str, names=None):
@@ -319,21 +321,21 @@ def walk(spark, sf_dir: str, names=None):
 
     qs = queries()
     for name in names or sorted(qs):
-        views, streams, conf, rdds = _session_state(spark)
+        views, streams, conf, cached = _session_state(spark)
         t0 = time.time()
         try:
             df = qs[name](spark, sf_dir)
         except Exception as exc:  # noqa: BLE001 — each consumer reports it
             df = exc
         build_s = time.time() - t0
-        views2, streams2, conf2, rdds2 = _session_state(spark)
+        views2, streams2, conf2, cached2 = _session_state(spark)
         yield Walked(name, df, build_s, {
             "views": sorted(views2 - views),
             "streams": sorted(streams2 - streams),
             "conf": sorted(
                 k for k in conf.keys() | conf2.keys() if conf.get(k) != conf2.get(k)
             ),
-            "rdds": len(rdds2 - rdds),
+            "cached": cached2 - cached,
         })
 
 
@@ -428,7 +430,7 @@ def main() -> int:
         "window_offenders": having("window"),
         "cartesians": having("cartesian"),
         "dup_subplans": having("dup_subplans"),
-        "left": {k: left(k) for k in ("views", "streams", "conf", "rdds")},
+        "left": {k: left(k) for k in ("views", "streams", "conf", "cached")},
     }
     print(
         f"\n{summary['n_pass']} oracle-pass, {summary['n_rows_only']} rows-only, "

@@ -13,8 +13,8 @@ Classes:
              or size gates
 - buckets    O(n_buckets)/O(k)/O(cells): the audited boundary-cut /
              cell-probe driver-decision pattern
-- loop       per-iteration convergence probes + persist/unpersist
-             discipline in bounded iterative fixpoints
+- loop       per-iteration convergence probes in bounded iterative
+             fixpoints
 - sample     limit(k) collects bounded by construction (codebook
              seeds, query vectors, example rows)
 - sink-stats the action that EXECUTES a distributed write, returning
@@ -52,20 +52,19 @@ EXPECTED = {
     "operators/wap.py": (3, "scalar|sample", "reject count + 10-row reason sample + staged-row scalar (audit verdict)"),
     "plans/analytics11.py": (1, "scalar", "recursive-CTE bound literal"),
     "plans/analytics13.py": (1, "sample", "foreachBatch sink collects the per-batch demo rows (bounded fixture)"),
-    "plans/analytics16.py": (5, "loop|scalar", "PageRank/k-core: n_nodes gate + k-core min scalar + k-core peel probes (pagerank's per-iteration persist/count barriers removed by the r12 lazy unroll)"),
+    "plans/analytics16.py": (4, "loop|scalar", "PageRank/k-core: n_nodes gate + k-core min scalar + k-core peel probes (pagerank's per-iteration persist/count barriers removed by the r12 lazy unroll)"),
     "plans/analytics20.py": (2, "scalar", "chi2 dof: two distinct-counts over tiny domains"),
     "plans/analytics23.py": (1, "scalar", "basket total N for lift (one value)"),
     "plans/analytics29.py": (1, "scalar", "customer total for cumulative share"),
     "plans/analytics33.py": (1, "scalar", "gap total sizing the survival denominator"),
     "plans/analytics37.py": (2, "scalar", "doc total N for PMI + late-dim max key scalar"),
-    "plans/analytics42.py": (7, "scalar|doc", "corrupt/dropped row counts for the reconciliation row (one is docstring text)"),
-    "plans/analytics43.py": (2, "loop", "BFS frontier convergence + persist discipline"),
+    "plans/analytics42.py": (6, "scalar|doc", "corrupt/dropped row counts for the reconciliation row (one is docstring text)"),
     "plans/analytics62.py": (1, "scalar", "day-domain count gating the Spearman widening (bounded by calendar)"),
     "plans/lakehouse.py": (1, "sample", "toPandas of the bounded Excel-sheet fixture (ingest demo)"),
     "plans/llm21.py": (1, "sink-stats", "the action that writes tar shards (shard-count rows)"),
     "plans/llm24.py": (1, "sink-stats", "the action that writes WARC archives"),
     "plans/llm30.py": (1, "sink-stats", "the action that writes the Avro containers"),
-    "plans/llm37.py": (2, "scalar|loop", "O(k) widening-gate counts + per-iteration persist discipline"),
+    "plans/llm37.py": (1, "scalar", "O(k) widening-gate count"),
     "plans/llm38.py": (3, "sink-stats", "protobuf export/ingest: per-file write actions (file-count rows)"),
     "plans/llm6.py": (2, "sample", "1-row query-vector collects"),
     "plans/llm7.py": (1, "scalar", "candidate count sizing the negative-sampling threshold"),

@@ -5,6 +5,8 @@ import os
 import re
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
@@ -125,3 +127,28 @@ def test_streaming_incremental_dedup_matches_sequential_reference(
         for r in spark.read.parquet(str(state / "survivors")).collect()
     }
     assert again == got
+
+
+def test_unreadable_survivor_index_raises(spark, tmp_path):
+    """Only an absent state dir means "first batch": a survivors dir
+    that exists but cannot be read as parquet fails the drain instead
+    of passing for an empty index (which would keep every duplicate)."""
+    from pyspark.errors import StreamingQueryException
+
+    schema = load(spark, SF0001, "documents").select("doc_id", "text").schema
+    raw = tmp_path / "raw"
+    stage = tmp_path / "stage"
+    raw.mkdir()
+    spark.createDataFrame([(1, "a b c"), (2, "a b c")], schema).coalesce(
+        1
+    ).write.parquet(str(stage))
+    part = next(p for p in os.listdir(stage) if p.endswith(".parquet"))
+    os.rename(str(stage / part), str(raw / "batch_0.parquet"))
+    survivors = tmp_path / "state" / "survivors"
+    survivors.mkdir(parents=True)
+    (survivors / "index.txt").write_text("not a parquet file\n")
+    with pytest.raises(StreamingQueryException):
+        run_incremental_dedup(
+            spark, str(raw), str(tmp_path / "state"), str(tmp_path / "ckpt"),
+            schema,
+        )

@@ -124,3 +124,37 @@ def test_max_records_per_file_splits_output(spark, tmp_path):
     ]
     assert len(files) >= 10  # 1000 rows / 100-row cap
     assert spark.read.parquet(path).count() == 1000
+
+
+def test_delta_merge_restores_auto_merge_conf(spark, tmp_path, monkeypatch):
+    """The Delta MERGE sets schema auto-merge only for its own
+    duration: the session conf is unchanged after
+    ``merge_upsert(..., evolve_schema=True)``. Runs the Delta branch
+    against a stub ``delta.tables`` module."""
+    import sys
+    import types
+
+    from lakehouse_ecommerce_etl_pipeline_spark.sinks import merge as merge_mod
+
+    key = "spark.databricks.delta.schema.autoMerge.enabled"
+    seen = []
+
+    class _Chain:
+        def __getattr__(self, _name):
+            return lambda *a, **k: self
+
+        def execute(self):
+            seen.append(spark.conf.get(key, None))
+
+    tables = types.ModuleType("delta.tables")
+    tables.DeltaTable = types.SimpleNamespace(forPath=lambda *a: _Chain())
+    monkeypatch.setitem(sys.modules, "delta", types.ModuleType("delta"))
+    monkeypatch.setitem(sys.modules, "delta.tables", tables)
+    monkeypatch.setattr(merge_mod, "delta_available", lambda: True)
+    monkeypatch.setattr(managed, "exists", lambda _path: True)
+
+    source = spark.createDataFrame([("k1", 1)], "k string, v int")
+    before = spark.conf.getAll
+    merge_upsert(spark, str(tmp_path / "t"), source, ["k"], evolve_schema=True)
+    assert seen == ["true"]
+    assert spark.conf.getAll == before

@@ -819,12 +819,59 @@ def test_no_decimal_typed_output_columns(registry_walk):
 
 def test_queries_leave_no_temp_view_stream_or_conf_change(registry_walk):
     """Session hygiene over the shared walk: no registered query leaves
-    a temp view, a running stream or a changed conf key in the session,
-    where the next query of a shared session would see it. (The walk
-    also counts the RDDs a query leaves persisted; those are recorded
-    by the sweep, not gated.)"""
+    a temp view, a running stream, a changed conf key or a cached
+    Dataset in the session, where the next query of a shared session
+    would see it."""
     left = {
-        name: {k: v for k, v in w_left.items() if k != "rdds" and v}
+        name: {k: v for k, v in w_left.items() if v}
         for name, (_, _, w_left) in registry_walk.items()
     }
     assert {name: v for name, v in left.items() if v} == {}
+
+
+def test_walk_counts_cached_datasets_a_query_leaves(spark, monkeypatch):
+    """``walk`` reports a Dataset the query function leaves cached, and
+    nothing for a localCheckpoint, whose blocks need no release."""
+    from lakehouse_ecommerce_etl_pipeline_spark import plans
+
+    def persists(spark, sf_dir):
+        df = spark.range(10).persist()
+        df.count()
+        return df
+
+    def checkpoints(spark, sf_dir):
+        return spark.range(10).localCheckpoint(eager=True)
+
+    toy = {"q_persists": persists, "q_checkpoints": checkpoints}
+    monkeypatch.setattr(plans, "queries", lambda: toy)
+    try:
+        left = {w.name: w.left["cached"] for w in walk(spark, SF0001)}
+    finally:
+        spark.catalog.clearCache()
+    assert left == {"q_checkpoints": 0, "q_persists": 1}
+
+
+def test_in_query_reuse_is_localcheckpoint_only():
+    """localCheckpoint is the one way package code reuses an
+    intermediate within a query: ``.persist(`` and ``.cache()`` appear
+    only in ``pipeline/jobs.py`` (the per-file tagged frame, released
+    by ``run_dataset``'s scope), and the parquet spill helper and the
+    ranks ``materialize=`` hook are gone."""
+    import re
+
+    pkg = os.path.join(REPO, "lakehouse_ecommerce_etl_pipeline_spark")
+    hits: dict[str, set[str]] = {}
+    for d, _, files in os.walk(pkg):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(d, f)
+            with open(path) as fh:
+                src = fh.read()
+            for pat in (r"\.persist\(", r"\.cache\(\)", "spill_final",
+                        "materialize="):
+                if re.search(pat, src):
+                    hits.setdefault(pat, set()).add(os.path.relpath(path, pkg))
+    assert hits == {
+        r"\.persist\(": {os.path.join("pipeline", "jobs.py")}
+    }, hits
