@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from lakehouse_ecommerce_etl_pipeline_spark.functions.vectors import cosine, dot, norm
+from lakehouse_ecommerce_etl_pipeline_spark.session import spread_to_cores
 
 
 def brute_force_topk(
@@ -113,43 +114,6 @@ def distinct_vector_reps(
             .select(id_col, vec_col)
         )
     return member_map, rep_vectors
-
-
-def _spread_to_cores(df: DataFrame) -> DataFrame:
-    """Round-robin repartition up to the session's core count when
-    the input has FEWER partitions: the per-row vector math below
-    (cosine folds, cell-pair verification) is CPU-bound, and a tiny
-    parquet footprint otherwise scans as 1-2 partitions that pin the
-    whole computation to 1-2 cores — the measured load_parallel
-    rationale (plans/_helpers.py).  The old crossJoin+groupBy
-    assignment spread the work incidentally through its exchanges;
-    with those removed (guide §2.4) the spread must be explicit.  A
-    no-op at scale: inputs already at/above core count pass through
-    untouched, so production tables pay no extra exchange.  Callers
-    must be partition-order-independent (per-row projections,
-    max/count aggregates, threshold filters — NOT float partial-sum
-    trainers).
-
-    r13 (ADVICE r12): the gate reads ``df.inputFiles()`` — a
-    driver-side FileIndex listing — instead of the former
-    ``df.rdd.getNumPartitions()`` probe, which under AQE finalized a
-    throwaway plan instance and could materialize upstream shuffle
-    stages the returned DataFrame then re-executed.  File count is the
-    right proxy for the hazard this guard exists for (a tiny parquet
-    footprint scanning as 1-2 tasks): fewer files than cores → spread;
-    a file-less plan (in-memory/checkpointed input, 0 files) or a
-    many-file scan passes through untouched.  A derived input whose
-    lineage already shuffles sits at ≈ shuffle.partitions anyway — the
-    worst case here is one redundant round-robin exchange, never a
-    hidden execution."""
-    sp = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        n_files = len(df.inputFiles())
-    except Exception:  # non-file plan: nothing to spread
-        return df
-    if 0 < n_files < sp:
-        return df.repartition(sp)
-    return df
 
 
 def _nearest_cell(
@@ -250,7 +214,7 @@ def cosine_near_dup_pairs_blocked(
             F.lit(0.0).alias("cosine_sim"),
         ).limit(0)
     assigned = (
-        _spread_to_cores(vectors.select(id_col, vec_col))
+        spread_to_cores(vectors.select(id_col, vec_col))
         .select(
             F.col(id_col),
             F.col(vec_col),
@@ -348,7 +312,7 @@ def ivf_assign(
         return vectors.select(
             F.col(id_col), F.col(vec_col), F.lit(0).alias("centroid_id")
         ).limit(0)
-    return _spread_to_cores(vectors.select(id_col, vec_col)).select(
+    return spread_to_cores(vectors.select(id_col, vec_col)).select(
         F.col(id_col),
         F.col(vec_col),
         (-_nearest_cell(cent_rows, vec_col)["neg_cid"]).alias("centroid_id"),

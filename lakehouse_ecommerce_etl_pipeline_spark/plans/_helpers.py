@@ -30,12 +30,13 @@ def ensure_session_defaults(spark: SparkSession) -> None:
         # compare equal under a pinned-UTC session either way.
         spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         # an untouched default (200) means nobody sized the shuffle for
-        # this workload — right-size to the core count; AQE coalescing
-        # then adapts downward per stage. An explicitly-set value is
-        # respected.
+        # this workload — right-size to the session's core count; AQE
+        # coalescing then adapts downward per stage. An explicitly-set
+        # value is respected.
         if spark.conf.get("spark.sql.shuffle.partitions", "200") == "200":
             spark.conf.set(
-                "spark.sql.shuffle.partitions", str(os.cpu_count() or 8)
+                "spark.sql.shuffle.partitions",
+                str(spark.sparkContext.defaultParallelism),
             )
             spark.conf.set("spark.sql.adaptive.enabled", "true")
             spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -96,22 +97,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # session that can't read nanos even as long → micros copy
             return spark.read.parquet(_events_micros_copy(spark, sf_dir))
     return spark.read.parquet(path)
-
-
-def load_parallel(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """``load`` + an explicit round-robin repartition to the session's
-    default parallelism — for COMPUTE-BOUND per-row plans (shingle
-    md5s, codec decodes, tokenization) over tables whose parquet
-    footprint is tiny. Parquet splits at row-group granularity, so a
-    small single-row-group file scans as ONE task no matter what
-    maxPartitionBytes says, serializing minutes of per-row CPU onto
-    one core (measured: 5.3 s → 0.56 s for the sf0.1 shingle-hash
-    pass). The exchange moves only the (small) raw bytes once; at
-    production scale the same pattern applies whenever bytes-per-split
-    misestimates CPU-per-row — decode/UDF stages repartition by cost,
-    not size."""
-    df = load(spark, sf_dir, name)
-    return df.repartition(spark.sparkContext.defaultParallelism)
 
 
 def order_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

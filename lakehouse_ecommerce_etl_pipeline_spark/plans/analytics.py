@@ -24,8 +24,9 @@ from lakehouse_ecommerce_etl_pipeline_spark.operators.windows import (
     with_lag,
 )
 from lakehouse_ecommerce_etl_pipeline_spark.functions.json import json_get
-from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import load, load_parallel
+from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import load
 from lakehouse_ecommerce_etl_pipeline_spark.plans.registry import register
+from lakehouse_ecommerce_etl_pipeline_spark.session import spread_to_cores
 
 
 # --------------------------------------------------------- group-by agg
@@ -376,11 +377,11 @@ def q_json_extract(spark, sf_dir):
     """JSON field extraction from `events.props` — JVM-side
     get_json_object (SURVEY.md §2.9 extension).
 
-    load_parallel: the events parquet is 1-3 row groups at test SFs,
+    spread_to_cores: the events parquet is 1-3 row groups at test SFs,
     so the CPU-bound JSON parse would serialize on as many cores —
-    repartition by CPU cost, not bytes (see _helpers.load_parallel).
+    repartition by CPU cost, not bytes (see session.spread_to_cores).
     Measured 2.0 -> 1.1 s at sf1."""
-    return load_parallel(spark, sf_dir, "events").select(
+    return spread_to_cores(load(spark, sf_dir, "events")).select(
         "event_id", json_get("props", "k").cast("int").alias("k")
     )
 

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import load
 from lakehouse_ecommerce_etl_pipeline_spark.plans.registry import register
+from lakehouse_ecommerce_etl_pipeline_spark.session import spread_to_cores
 
 
 @register(
@@ -48,14 +49,10 @@ def q_xml_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     form ran one xpath_string per field, and each xpath_string call
     instantiates a DOM parse, so three fields cost three parses per
     row (44 s at sf0.1). With from_xml + a cost-respread scan
-    (load_parallel — the orders parquet is 1-2 row groups at test
+    (spread_to_cores — the orders parquet is 1-2 row groups at test
     SFs, serializing the parse): 0.5 s, ~90×. Same discipline as
     q_variant_extract for JSON (parse to VARIANT once, then typed
     gets)."""
-    from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import (
-        load_parallel,
-    )
-
     xml = F.concat(
         F.lit('<order id="'),
         F.col("o_orderkey").cast("string"),
@@ -66,7 +63,7 @@ def q_xml_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("</price></order>"),
     )
     parsed = (
-        load_parallel(spark, sf_dir, "orders")
+        spread_to_cores(load(spark, sf_dir, "orders"))
         .select("o_orderkey", xml.alias("xml"))
         .select(
             "o_orderkey",

@@ -46,10 +46,10 @@ from lakehouse_ecommerce_etl_pipeline_spark.llm.similarity import (
 )
 from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import (
     load,
-    load_parallel,
     session_artifact,
 )
 from lakehouse_ecommerce_etl_pipeline_spark.plans.registry import register
+from lakehouse_ecommerce_etl_pipeline_spark.session import spread_to_cores
 
 # SQL fragments mirroring functions/text.py exactly ------------------
 
@@ -154,7 +154,7 @@ def q_text_stats(spark, sf_dir):
     """Text quality metrics: char/token counts, mean token length,
     punctuation ratio — all codegen'd length/replace arithmetic
     (functions/text.py), no UDFs."""
-    d = load_parallel(spark, sf_dir, "documents")
+    d = spread_to_cores(load(spark, sf_dir, "documents"))
     return d.select(
         "doc_id",
         txt.n_chars("text").alias("n_chars"),
@@ -183,7 +183,7 @@ def q_text_stats(spark, sf_dir):
 )
 def q_quality_score(spark, sf_dir):
     """Composite quality score (pre-training corpus filter signal)."""
-    return load_parallel(spark, sf_dir, "documents").select(
+    return spread_to_cores(load(spark, sf_dir, "documents")).select(
         "doc_id", txt.quality_score("text").alias("quality")
     )
 
@@ -193,7 +193,7 @@ def q_lang_id(spark, sf_dir):
     """Marker-lexicon language ID with deterministic argmax — the
     oracle SQL is generated from the same lexicon so formulas cannot
     drift."""
-    return load_parallel(spark, sf_dir, "documents").select(
+    return spread_to_cores(load(spark, sf_dir, "documents")).select(
         "doc_id", "lang", txt.lang_id("text").alias("lang_pred")
     )
 
@@ -227,7 +227,7 @@ def q_dedup_exact(spark, sf_dir):
     """Exact dedup: 16-byte content hash shuffles, never the text.
 
     r13 (VERDICT r12 item 3 — this row anti-scaled 0.46 at 32 vs 8
-    cores): plain ``load``, not ``load_parallel`` — ONE md5+normalize
+    cores): plain ``load``, not ``spread_to_cores`` — ONE md5+normalize
     per row is far too light for a forced round-robin spread, whose
     32-way exchange of the full text column was pure overhead (guide
     §2.2 oversharding).  Interleaved A/B at sf0.1: spread 0.70/0.76
@@ -252,7 +252,7 @@ def q_minhash_signatures(spark, sf_dir):
     (token array → narrow projection). The layout that survives the
     64-128 permutations production dedup runs at 100 TB."""
     return minhash_signatures_universal(
-        load_parallel(spark, sf_dir, "documents"), "doc_id", "text", _NUM_HASHES
+        spread_to_cores(load(spark, sf_dir, "documents")), "doc_id", "text", _NUM_HASHES
     )
 
 
@@ -284,7 +284,7 @@ def q_lsh_candidates(spark, sf_dir):
         token_set_reps,
     )
 
-    docs = load_parallel(spark, sf_dir, "documents")
+    docs = spread_to_cores(load(spark, sf_dir, "documents"))
     m = token_set_reps(docs, "doc_id", "text")
     rep_docs = (
         docs.join(m, "doc_id")
@@ -358,7 +358,7 @@ def q_lsh_candidates_capped(spark, sf_dir):
     is sized to bite at oracle scale, making the driver row witness
     the pruning itself."""
     sigs = minhash_signatures_universal(
-        load_parallel(spark, sf_dir, "documents"), "doc_id", "text", _NUM_HASHES
+        spread_to_cores(load(spark, sf_dir, "documents")), "doc_id", "text", _NUM_HASHES
     )
     return lsh_candidate_pairs(
         sigs, "doc_id", _NUM_HASHES, _ROWS_PER_BAND, max_bucket=_MAX_BUCKET
@@ -386,7 +386,9 @@ def q_lsh_candidates_capped(spark, sf_dir):
 def q_jaccard_pairs(spark, sf_dir):
     """Exact token-set Jaccard (bounded subset — the verification
     kernel LSH candidates feed into at scale)."""
-    docs = load_parallel(spark, sf_dir, "documents").filter(F.col("doc_id") < 20)
+    docs = spread_to_cores(load(spark, sf_dir, "documents")).filter(
+        F.col("doc_id") < 20
+    )
     return jaccard_pairs(docs, "doc_id", "text")
 
 
@@ -434,7 +436,7 @@ def q_near_dup_pairs(spark, sf_dir):
         token_set_reps,
     )
 
-    docs = load_parallel(spark, sf_dir, "documents")
+    docs = spread_to_cores(load(spark, sf_dir, "documents"))
     m = token_set_reps(docs, "doc_id", "text")
     rep_docs = (
         docs.join(m, "doc_id")
@@ -546,7 +548,7 @@ def q_dedup_clusters(spark, sf_dir):
         token_set_reps,
     )
 
-    docs = load_parallel(spark, sf_dir, "documents")
+    docs = spread_to_cores(load(spark, sf_dir, "documents"))
     m = token_set_reps(docs, "doc_id", "text")
     rep_docs = (
         docs.join(m, "doc_id")
@@ -572,7 +574,9 @@ def q_dedup_clusters(spark, sf_dir):
 @register("q_simhash")  # rows-only: xxhash64 has no DuckDB twin
 def q_simhash(spark, sf_dir):
     """32-bit SimHash fingerprints (JVM xxhash64 bit votes)."""
-    return simhash(load_parallel(spark, sf_dir, "documents"), "doc_id", "text", bits=32)
+    return simhash(
+        spread_to_cores(load(spark, sf_dir, "documents")), "doc_id", "text", bits=32
+    )
 
 
 # ------------------------------------------------------ similarity
@@ -728,7 +732,7 @@ def document_reps_artifact(spark, sf_dir):
     )
 
     def build(out: str) -> None:
-        docs = load_parallel(spark, sf_dir, "documents")
+        docs = spread_to_cores(load(spark, sf_dir, "documents"))
         # keep_text carries the text through the tkey join itself —
         # re-attaching it with an id equi-join would assume doc_id
         # uniqueness and silently fan out a duplicate-id source
@@ -778,5 +782,5 @@ def q_multimodal_meta(spark, sf_dir):
     id→(dims, color) construction makes the decoded stats
     SQL-derivable, so this is a VALUE oracle over a genuine decode
     kernel — no stub, no fake."""
-    imgs = synthetic_images(load_parallel(spark, sf_dir, "documents"))
+    imgs = synthetic_images(spread_to_cores(load(spark, sf_dir, "documents")))
     return extract_image_stats(imgs)

@@ -28,6 +28,7 @@ from lakehouse_ecommerce_etl_pipeline_spark.plans.llm import (
     _tok_cte,
 )
 from lakehouse_ecommerce_etl_pipeline_spark.plans.registry import register
+from lakehouse_ecommerce_etl_pipeline_spark.session import spread_to_cores
 
 _QUANT = "v -> CAST(FLOOR(CAST(v AS DOUBLE) * 1000) AS BIGINT)"
 _SAMPLE_MOD = 16  # keep ~1/16 of all pairs, hash-selected
@@ -214,11 +215,7 @@ def q_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakehouse_ecommerce_etl_pipeline_spark.llm.components import (
         token_set_reps,
     )
-    from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import (
-        load_parallel,
-    )
-
-    docs = load_parallel(spark, sf_dir, "documents")
+    docs = spread_to_cores(load(spark, sf_dir, "documents"))
     m = token_set_reps(docs, "doc_id", "text")
     gs = m.groupBy("rep_id").agg(F.count(F.lit(1)).alias("gsz"))
     rep_docs = (

@@ -30,7 +30,6 @@ from lakehouse_ecommerce_etl_pipeline_spark.llm.dedup import (
 )
 from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import (
     load,
-    load_parallel,
     session_dir,
 )
 from lakehouse_ecommerce_etl_pipeline_spark.plans.llm import (
@@ -41,6 +40,7 @@ from lakehouse_ecommerce_etl_pipeline_spark.plans.llm import (
     _tok_cte,
 )
 from lakehouse_ecommerce_etl_pipeline_spark.plans.registry import register
+from lakehouse_ecommerce_etl_pipeline_spark.session import spread_to_cores
 
 _THRESH = 0.5
 _NEW_MOD = 5  # doc_id % 5 == 0 → the arriving batch
@@ -127,7 +127,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         token_set_reps,
     )
 
-    docs = load_parallel(spark, sf_dir, "documents")
+    docs = spread_to_cores(load(spark, sf_dir, "documents"))
     new = docs.filter(F.col("doc_id") % _NEW_MOD == 0)
     old = docs.filter(F.col("doc_id") % _NEW_MOD != 0)
     new_m = token_set_reps(new, "doc_id", "text")

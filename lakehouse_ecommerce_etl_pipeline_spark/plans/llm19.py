@@ -30,8 +30,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import load_parallel
+from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import load
 from lakehouse_ecommerce_etl_pipeline_spark.plans.registry import register
+from lakehouse_ecommerce_etl_pipeline_spark.session import spread_to_cores
 
 _JPEG_STATS_SCHEMA = T.StructType(
     [
@@ -189,7 +190,7 @@ def q_multimodal_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         extract_image_stats,
     )
 
-    imgs = _seeded_image_corpus(load_parallel(spark, sf_dir, "documents"))
+    imgs = _seeded_image_corpus(spread_to_cores(load(spark, sf_dir, "documents")))
     stats = extract_image_stats(imgs)
     npx = F.col("width").cast("long") * F.col("height")
     content = stats.select(
@@ -302,7 +303,7 @@ def q_multimodal_jpeg420(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     return (
-        load_parallel(spark, sf_dir, "documents")
+        spread_to_cores(load(spark, sf_dir, "documents"))
         .select("doc_id")
         .mapInPandas(gen, schema=_JPEG_STATS_SCHEMA)
     )
@@ -376,7 +377,7 @@ def q_multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return frame_sample_stats(
-        mjpeg_corpus(load_parallel(spark, sf_dir, "documents")), every_n=2
+        mjpeg_corpus(spread_to_cores(load(spark, sf_dir, "documents"))), every_n=2
     )
 
 
@@ -405,4 +406,4 @@ def q_multimodal_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     them through the real huffman+IDCT path, and emit per-image stats
     DuckDB recomputes in closed form. See module docstring for why
     the construction is exact."""
-    return jpeg_tile_corpus_stats(load_parallel(spark, sf_dir, "documents"))
+    return jpeg_tile_corpus_stats(spread_to_cores(load(spark, sf_dir, "documents")))

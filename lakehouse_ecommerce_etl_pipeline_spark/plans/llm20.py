@@ -27,8 +27,9 @@ from pyspark.sql import functions as F
 from lakehouse_ecommerce_etl_pipeline_spark.llm.dedup import (
     minhash_signatures,
 )
-from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import load, load_parallel
+from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import load
 from lakehouse_ecommerce_etl_pipeline_spark.plans.registry import register
+from lakehouse_ecommerce_etl_pipeline_spark.session import spread_to_cores
 
 # identical normalization to plans/llm.py's _tok_cte (functions/text.
 # normalize_text): lowercase, collapse whitespace, trim
@@ -105,7 +106,7 @@ def q_near_dup_pairs_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # r4 rep-collapse + expansion (see q_near_dup_pairs): the md5
     # signatures are pure functions of the token set too
-    docs = load_parallel(spark, sf_dir, "documents")
+    docs = spread_to_cores(load(spark, sf_dir, "documents"))
     m = token_set_reps(docs, "doc_id", "text")
     rep_docs = (
         docs.join(m, "doc_id")
@@ -213,7 +214,7 @@ def q_dedup_clusters_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
         lsh_candidate_pairs,
     )
 
-    docs = load_parallel(spark, sf_dir, "documents")
+    docs = spread_to_cores(load(spark, sf_dir, "documents"))
     # exact-dedup collapse (token_set_reps) — the md5 family's
     # signatures are also pure functions of the token set, so the
     # rep-level chain + expansion is bit-equivalent here too

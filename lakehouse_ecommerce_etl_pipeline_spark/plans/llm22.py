@@ -45,6 +45,7 @@ from lakehouse_ecommerce_etl_pipeline_spark.llm.pii import (
 )
 from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import load
 from lakehouse_ecommerce_etl_pipeline_spark.plans.registry import register
+from lakehouse_ecommerce_etl_pipeline_spark.session import spread_to_cores
 
 # ---------------------------------------------------------------- PII
 
@@ -242,11 +243,7 @@ def q_near_dup_pairs_16band(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakehouse_ecommerce_etl_pipeline_spark.llm.components import (
         token_set_reps,
     )
-    from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import (
-        load_parallel,
-    )
-
-    docs = load_parallel(spark, sf_dir, "documents")
+    docs = spread_to_cores(load(spark, sf_dir, "documents"))
     m = token_set_reps(docs, "doc_id", "text")
     rep_docs = (
         docs.join(m, "doc_id")

@@ -24,8 +24,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lakehouse_ecommerce_etl_pipeline_spark.functions.text import normalize_text
-from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import load_parallel
+from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import load
 from lakehouse_ecommerce_etl_pipeline_spark.plans.registry import register
+from lakehouse_ecommerce_etl_pipeline_spark.session import spread_to_cores
 
 _K = 8  # shingle width (tokens)
 
@@ -90,7 +91,7 @@ def q_dup_span_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange ever exists — the explode feeds the per-shingle count
     directly and only 16-byte hashes cross the two remaining
     partial-aggregable exchanges."""
-    docs = load_parallel(spark, sf_dir, "documents")
+    docs = spread_to_cores(load(spark, sf_dir, "documents"))
     sh = docs.select(
         F.explode(F.array_distinct(shingle_hashes("text"))).alias("sh")
     )
@@ -153,7 +154,7 @@ def q_dup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc-grain. Position expansion (start → start..start+k-1) happens
     IN-ROW after the aggregation (flatten/transform), not as an
     8×-wider exchange."""
-    docs = load_parallel(spark, sf_dir, "documents")
+    docs = spread_to_cores(load(spark, sf_dir, "documents"))
     toks = F.filter(F.split(normalize_text("text"), " "), lambda t: t != "")
 
     # r13 (guide §5): the positional branch and the duplicate-set

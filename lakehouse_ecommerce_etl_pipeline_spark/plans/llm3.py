@@ -14,8 +14,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import load, load_parallel
+from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import load
 from lakehouse_ecommerce_etl_pipeline_spark.plans.registry import register
+from lakehouse_ecommerce_etl_pipeline_spark.session import spread_to_cores
 
 _CHUNK = 32
 _STRIDE = 16
@@ -49,7 +50,9 @@ def q_chunk_documents(spark, sf_dir):
     start = F.explode(
         F.sequence(F.lit(1), F.size(F.col("l")), F.lit(_STRIDE))
     ).alias("i")
-    d = load_parallel(spark, sf_dir, "documents").select("doc_id", toks.alias("l"))
+    d = spread_to_cores(load(spark, sf_dir, "documents")).select(
+        "doc_id", toks.alias("l")
+    )
     piece = F.slice(F.col("l"), F.col("i"), _CHUNK)
     return d.select("doc_id", "l", start).select(
         "doc_id",
@@ -127,7 +130,7 @@ def q_array_setops(spark, sf_dir):
     shifted key. For real pairwise workloads the pair list comes from
     blocking (LSH/prefix/grid) — this query covers the set-op
     expressions themselves."""
-    t = load_parallel(spark, sf_dir, "documents").select(
+    t = spread_to_cores(load(spark, sf_dir, "documents")).select(
         "doc_id", F.split("text", " ").alias("toks")
     )
     a = t.select(F.col("doc_id").alias("id_a"), F.col("toks").alias("ta"))

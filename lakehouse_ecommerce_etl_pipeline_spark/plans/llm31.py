@@ -27,8 +27,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import load, load_parallel
+from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import load
 from lakehouse_ecommerce_etl_pipeline_spark.plans.registry import register
+from lakehouse_ecommerce_etl_pipeline_spark.session import spread_to_cores
 
 _NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
 _SCALE = 1_000_000
@@ -85,7 +86,7 @@ def bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     matching ≥1 query term (see module docstring for the algebra)."""
     from lakehouse_ecommerce_etl_pipeline_spark.llm.dedup import tokens
 
-    docs = load_parallel(spark, sf_dir, "documents")
+    docs = spread_to_cores(load(spark, sf_dir, "documents"))
     tk = tokens(docs, "doc_id", "text", distinct=False)
     tf = tk.groupBy("doc_id", "tok").agg(
         F.count(F.lit(1)).cast("bigint").alias("tf")
@@ -325,7 +326,7 @@ def q_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
         normalize_text,
     )
 
-    docs = load_parallel(spark, sf_dir, "documents")
+    docs = spread_to_cores(load(spark, sf_dir, "documents"))
     toks = F.filter(F.split(normalize_text("text"), " "), lambda t: t != "")
     nt = normalize_text("text")
     n_words = F.size(toks).cast("bigint")

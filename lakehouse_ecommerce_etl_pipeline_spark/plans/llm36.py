@@ -38,7 +38,7 @@ from lakehouse_ecommerce_etl_pipeline_spark.llm.dedup import (
     simhash,
     token_array,
 )
-from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import load_parallel
+from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import load
 from lakehouse_ecommerce_etl_pipeline_spark.plans.llm import (
     _NUM_HASHES,
     _ROWS_PER_BAND,
@@ -46,6 +46,7 @@ from lakehouse_ecommerce_etl_pipeline_spark.plans.llm import (
     _tok_cte,
 )
 from lakehouse_ecommerce_etl_pipeline_spark.plans.registry import register
+from lakehouse_ecommerce_etl_pipeline_spark.session import spread_to_cores
 
 _HAMMING_MAX = 3
 _N_BYTES = 4  # pigeonhole blocks: distance ≤ 3 ⇒ ≥ 1 byte agrees
@@ -91,7 +92,7 @@ def q_simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ALL pairs — a banding bug that loses a candidate fails by row
     set, not just by value. Spark side never materializes the
     quadratic pair space."""
-    docs = load_parallel(spark, sf_dir, "documents")
+    docs = spread_to_cores(load(spark, sf_dir, "documents"))
     fp = simhash(docs, "doc_id", "text", bits=32, portable=True).select(
         "doc_id", F.col("simhash").alias("fp")
     )

@@ -26,8 +26,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import load, load_parallel
+from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import load
 from lakehouse_ecommerce_etl_pipeline_spark.plans.registry import register
+from lakehouse_ecommerce_etl_pipeline_spark.session import spread_to_cores
 
 _NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
 _TOKS_SQL = f"list_filter(string_split({_NORM}, ' '), t -> t <> '')"
@@ -77,7 +78,7 @@ def q_contamination_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus never shuffles — decontamination costs one scan. Shingle
     md5s (16 bytes) stand in for the raw 8-grams, keeping the
     exploded stream narrow."""
-    toks = load_parallel(spark, sf_dir, "documents").select(
+    toks = spread_to_cores(load(spark, sf_dir, "documents")).select(
         "doc_id", F.expr(_TOKS_SPARK).alias("tk")
     )
     sh = (
@@ -138,7 +139,7 @@ def q_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow columns; composes with q_quality_score/q_lang_id into the
     single-pass quality gate. Ratios are integer-over-integer IEEE
     divisions, bit-stable."""
-    toks = load_parallel(spark, sf_dir, "documents").select(
+    toks = spread_to_cores(load(spark, sf_dir, "documents")).select(
         "doc_id", F.expr(_TOKS_SPARK).alias("tk")
     )
     tri = toks.select(

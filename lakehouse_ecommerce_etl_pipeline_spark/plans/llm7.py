@@ -19,9 +19,9 @@ from pyspark.sql import functions as F
 from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import (
     events_parquet_path,
     load,
-    load_parallel,
 )
 from lakehouse_ecommerce_etl_pipeline_spark.plans.registry import register
+from lakehouse_ecommerce_etl_pipeline_spark.session import spread_to_cores
 
 _NEG_K = 3
 _NEG_PREFILTER = 200  # expected survivors per doc under the threshold
@@ -90,7 +90,7 @@ def q_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     unconditional: docs with fewer than k survivors below t (never
     observed; probability ~e^-77 at C=200) fall back to a full
     window restricted to just those docs."""
-    ids = load_parallel(spark, sf_dir, "documents").select("doc_id")
+    ids = spread_to_cores(load(spark, sf_dir, "documents")).select("doc_id")
     cand = ids.select(F.col("doc_id").alias("neg_id"))
     p_mod = 2147483647
     x1 = (

@@ -28,7 +28,6 @@ from lakehouse_ecommerce_etl_pipeline_spark.llm.dedup import (
 )
 from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import (
     load,
-    load_parallel,
 )
 from lakehouse_ecommerce_etl_pipeline_spark.plans.llm import (
     _BANDS_UNION,
@@ -38,6 +37,7 @@ from lakehouse_ecommerce_etl_pipeline_spark.plans.llm import (
     _tok_cte,
 )
 from lakehouse_ecommerce_etl_pipeline_spark.plans.registry import register
+from lakehouse_ecommerce_etl_pipeline_spark.session import spread_to_cores
 
 _MAX_ROUNDS = 100  # safety cap; the loop exits on convergence
 _THRESH = 0.5
@@ -109,7 +109,7 @@ def q_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         token_set_reps,
     )
 
-    docs = load_parallel(spark, sf_dir, "documents")
+    docs = spread_to_cores(load(spark, sf_dir, "documents"))
     # r4: mine pairs and run the fixpoint on exact-dedup
     # REPRESENTATIVES (one per distinct token set), expand labels
     # through rep_id afterwards — bit-equivalent (identical-set docs

@@ -46,7 +46,7 @@ EXPECTED = {
     "llm/kmeans.py": (3, "loop|sample", "k seed rows + dim probe + per-iteration k-row centroid collect"),
     "llm/logreg.py": (3, "scalar|loop", "n and loss scalars per training iteration (d+1-sized gradient)"),
     "llm/pq.py": (4, "sample", "k codebook seeds and dim probes per subspace (k,dim bounded)"),
-    "llm/similarity.py": (6, "buckets|doc", "O(n_cells) centroid collects — the IVF probe/assignment decisions (blocked-pairs seed + radii, ivf_assign literal argmin, ivf_topk/_multi shared seed collect); one docstring mention of the removed .rdd probe"),
+    "llm/similarity.py": (5, "buckets", "O(n_cells) centroid collects — the IVF probe/assignment decisions (blocked-pairs seed + radii, ivf_assign literal argmin, ivf_topk/_multi shared seed collect)"),
     "operators/ranks.py": (9, "buckets", "probe cuts / bucket counts / fat-bucket stats — the O(n_buckets) boundary-cut actions (r13: + the joint ≤n_buckets²-cell counts collect for 1-2 dims)"),
     "operators/skew.py": (1, "doc", "docstring text"),
     "operators/wap.py": (3, "scalar|sample", "reject count + 10-row reason sample + staged-row scalar (audit verdict)"),

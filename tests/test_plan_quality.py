@@ -875,3 +875,49 @@ def test_in_query_reuse_is_localcheckpoint_only():
     assert hits == {
         r"\.persist\(": {os.path.join("pipeline", "jobs.py")}
     }, hits
+
+
+def test_spread_to_cores_gates_on_file_count(spark, tmp_path):
+    """``spread_to_cores`` adds one round-robin exchange to the core
+    count over a scan of fewer files than cores, and returns a frame
+    with no file scan, or with at least as many files as cores,
+    unchanged."""
+    from lakehouse_ecommerce_etl_pipeline_spark.session import spread_to_cores
+
+    sp = spark.sparkContext.defaultParallelism
+    one_file = spark.read.parquet(f"{SF0001}/documents.parquet")
+    assert "RoundRobinPartitioning(" not in executed_plan(one_file)
+    plan = executed_plan(spread_to_cores(one_file))
+    assert plan.count("RoundRobinPartitioning(") == 1
+    assert f"RoundRobinPartitioning({sp})" in plan
+
+    in_memory = spark.createDataFrame([(1,)], "a int")
+    assert spread_to_cores(in_memory) is in_memory
+
+    spark.range(0, 4 * sp, 1, numPartitions=sp).write.parquet(str(tmp_path / "t"))
+    many_files = spark.read.parquet(str(tmp_path / "t"))
+    assert len(many_files.inputFiles()) >= sp
+    assert spread_to_cores(many_files) is many_files
+
+
+def test_untouched_shuffle_partitions_sized_to_session_cores(spark, monkeypatch):
+    """An untouched (``200``) shuffle width is sized to the session's
+    core count, not the host's: a session built elsewhere may run on
+    fewer cores than the host has."""
+    from lakehouse_ecommerce_etl_pipeline_spark.plans._helpers import (
+        ensure_session_defaults,
+    )
+    from lakehouse_ecommerce_etl_pipeline_spark.session import conf_scope
+
+    sp = spark.sparkContext.defaultParallelism
+    monkeypatch.setattr(os, "cpu_count", lambda: sp + 3)
+    with conf_scope(
+        spark,
+        {
+            "spark.sql.shuffle.partitions": "200",
+            "spark.sql.adaptive.enabled": "true",
+            "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        },
+    ):
+        ensure_session_defaults(spark)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == str(sp)
