@@ -34,10 +34,8 @@ def ensure_session_defaults(spark: SparkSession) -> None:
         # coalescing then adapts downward per stage. An explicitly-set
         # value is respected.
         if spark.conf.get("spark.sql.shuffle.partitions", "200") == "200":
-            spark.conf.set(
-                "spark.sql.shuffle.partitions",
-                str(spark.sparkContext.defaultParallelism),
-            )
+            cores = str(spark.sparkContext.defaultParallelism)
+            spark.conf.set("spark.sql.shuffle.partitions", cores)
             spark.conf.set("spark.sql.adaptive.enabled", "true")
             spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     except Exception:  # pragma: no cover - settable in all known versions

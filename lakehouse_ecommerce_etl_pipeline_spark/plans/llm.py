@@ -386,10 +386,8 @@ def q_lsh_candidates_capped(spark, sf_dir):
 def q_jaccard_pairs(spark, sf_dir):
     """Exact token-set Jaccard (bounded subset — the verification
     kernel LSH candidates feed into at scale)."""
-    docs = spread_to_cores(load(spark, sf_dir, "documents")).filter(
-        F.col("doc_id") < 20
-    )
-    return jaccard_pairs(docs, "doc_id", "text")
+    docs = spread_to_cores(load(spark, sf_dir, "documents"))
+    return jaccard_pairs(docs.filter(F.col("doc_id") < 20), "doc_id", "text")
 
 
 @register(
@@ -574,9 +572,8 @@ def q_dedup_clusters(spark, sf_dir):
 @register("q_simhash")  # rows-only: xxhash64 has no DuckDB twin
 def q_simhash(spark, sf_dir):
     """32-bit SimHash fingerprints (JVM xxhash64 bit votes)."""
-    return simhash(
-        spread_to_cores(load(spark, sf_dir, "documents")), "doc_id", "text", bits=32
-    )
+    docs = spread_to_cores(load(spark, sf_dir, "documents"))
+    return simhash(docs, "doc_id", "text", bits=32)
 
 
 # ------------------------------------------------------ similarity

@@ -50,9 +50,8 @@ def q_chunk_documents(spark, sf_dir):
     start = F.explode(
         F.sequence(F.lit(1), F.size(F.col("l")), F.lit(_STRIDE))
     ).alias("i")
-    d = spread_to_cores(load(spark, sf_dir, "documents")).select(
-        "doc_id", toks.alias("l")
-    )
+    d = spread_to_cores(load(spark, sf_dir, "documents"))
+    d = d.select("doc_id", toks.alias("l"))
     piece = F.slice(F.col("l"), F.col("i"), _CHUNK)
     return d.select("doc_id", "l", start).select(
         "doc_id",
